@@ -447,17 +447,186 @@ def bootstrap_ci(
     )
 
 
-def _cva_cells_fit(cva: DataFrame) -> bool:
-    """1-row size fold over a pinned two-arm (__g, __v, __c, __ca)
-    count table (the jonckheere dispatch): True when the single-task
-    cell fold applies; materializes the pin either way, in this
-    fold's own job."""
-    sz = cva.agg(
-        F.count(F.lit(1)).alias("__cells"), F.sum("__c").alias("__rows")
-    ).collect()[0]
-    n_cells, n_rows = sz["__cells"], int(sz["__rows"] or 0)
-    return 0 < n_cells <= _CELL_FOLD_MAX_CELLS and (
-        n_rows <= _CELL_FOLD_MAX_ROWS
+# Caps of the rank tests' single-task cell folds.  They bound ONE
+# task's memory (the cell table; Anderson–Darling's zero-filled k×V
+# grid) and the int64 exactness of the integer folds ((Σ rows)²/2 for
+# the rank sums, Σ c·r2x·r2y ≤ 4n³ for Spearman's moments), so they
+# are not tuning knobs.  Inputs past any cap take the distributed
+# path, which folds the same exact integers.
+_CELL_FOLD_MAX_CELLS = 2_000_000
+_CELL_FOLD_MAX_ROWS = 100_000_000
+_CELL_FOLD_MAX_GRID = 4_000_000
+_SPEARMAN_FOLD_MAX_ROWS = 1_000_000
+
+
+def _cells_fit(
+    cells: DataFrame,
+    count_col: str,
+    *,
+    max_rows: int | None = None,
+    max_grid: int | None = None,
+) -> bool:
+    """The rank tests' one size decision: True when the pinned count
+    table ``cells`` fits the single-task fold — at most
+    ``_CELL_FOLD_MAX_CELLS`` cells and ``max_rows`` input rows (the
+    sum of ``count_col``; default ``_CELL_FOLD_MAX_ROWS``), and with
+    ``max_grid`` set, a (distinct ``__grp``) × (distinct ``__v``)
+    grid of at most that size.  An empty table takes the distributed
+    path.
+
+    This 1-row aggregate is the one eager job per rank-test call: it
+    picks the path and materializes the lazy pin in the same job, so
+    either branch then reads the pinned cells."""
+    if max_rows is None:
+        max_rows = _CELL_FOLD_MAX_ROWS
+    aggs = [F.count(F.lit(1)).alias("__cells"), F.sum(count_col).alias("__rows")]
+    if max_grid is not None:
+        aggs += [
+            F.countDistinct("__grp").alias("__k"),
+            F.countDistinct("__v").alias("__nv"),
+        ]
+    sz = cells.agg(*aggs).collect()[0]
+    if not (
+        0 < sz["__cells"] <= _CELL_FOLD_MAX_CELLS
+        and int(sz["__rows"] or 0) <= max_rows
+    ):
+        return False
+    return max_grid is None or int(sz["__k"]) * int(sz["__nv"]) <= max_grid
+
+
+def _one_task_fold(cells: DataFrame, schema, fold) -> DataFrame:
+    """Run ``fold`` once over the whole pinned cell table in one Arrow
+    task: the batches are concatenated into one pandas frame and
+    ``fold(pdf)`` returns the result frame (``schema``).  No rows in,
+    no rows out."""
+
+    def _stats(it):
+        import pandas as pd
+
+        pdfs = [p for p in it if len(p)]
+        if pdfs:
+            yield fold(
+                pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+            )
+
+    return cells.coalesce(1).mapInPandas(_stats, schema=schema)
+
+
+def _q_halfup(x):
+    """Spark's ``round(double, 0)`` replayed in numpy, elementwise:
+    HALF_UP over the shortest-decimal rendering, which for
+    non-negative doubles equals round-half-even EXCEPT at exact binary
+    .5 fractions (a ".5" rendering round-trips only for an exact .5
+    double), where HALF_UP adds one."""
+    import numpy as np
+
+    r = np.round(x)
+    half = (x - np.floor(x)) == 0.5
+    if np.any(half):
+        r = np.where(half, np.floor(x) + 1.0, r)
+    return r
+
+
+def _exact_int_sum(r) -> int:
+    """Exact sum of an array of integral doubles (the decimal(38,0)
+    folds): one int64 vector sum when provably in range, unbounded
+    Python ints otherwise — the conversions are exact either way."""
+    import numpy as np
+
+    if r.size and float(np.abs(r).max()) * r.size < 2**62:
+        return int(r.astype(np.int64).sum())
+    return sum(int(x) for x in r)
+
+
+def _group_value_cells(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """The lazily pinned per-(group, value) count table (__grp, __v,
+    __cg) of the non-NULL pairs: ONE corpus aggregate that the size
+    probe, the fold and every distributed consumer read (the pooled
+    counts derive from it by exact integer sums)."""
+    base = df.filter(
+        F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
+    ).select(F.col(group_col).alias("__grp"), F.col(value_col).alias("__v"))
+    return (
+        base.groupBy("__grp", "__v")
+        .agg(F.count(F.lit(1)).alias("__cg"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def _two_arm_cells(
+    df: DataFrame, group_col: str, value_col: str, group_a, group_b
+) -> DataFrame:
+    """The lazily pinned two-arm value-count table (__g = 0, __v, __c
+    pooled count, __ca arm-a count) of the non-NULL values of the two
+    named arms: ONE corpus aggregate, and the cumulative machinery
+    runs on the reduced table — counts are identical, so every
+    downstream operand is bit-exact."""
+    both = df.filter(
+        F.col(group_col).isin([group_a, group_b])
+        & F.col(value_col).isNotNull()
+    ).select(
+        (F.col(group_col) == F.lit(group_a)).cast("int").alias("__isa"),
+        F.col(value_col).alias("__v"),
+        F.lit(0).alias("__g"),
+    )
+    return (
+        both.groupBy("__g", "__v")
+        .agg(
+            F.count(F.lit(1)).alias("__c"),
+            F.sum("__isa").alias("__ca"),
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
+def _group_rank_sums(cgv: DataFrame):
+    """Distributed doubled rank sums over ``_group_value_cells``: the
+    pooled per-value cumulative (__v, __c, __cum) and the per-group
+    table (__grp, __2rg = Σ c_g·(2·cum − c + 1), __ng)."""
+    from bubbles_spark.ops.drift import _cum_counts_prebuilt
+
+    pooled = (
+        cgv.groupBy("__v")
+        .agg(F.sum("__cg").cast("bigint").alias("__c"))
+        .withColumn("__g", F.lit(0))
+    )
+    cum = _cum_counts_prebuilt(pooled, "__g", "__v").select(
+        "__v", "__c", "__cum"
+    )
+    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    per_group = (
+        cgv.join(cum, "__v")
+        .groupBy("__grp")
+        .agg(
+            F.sum(
+                d(F.col("__cg"))
+                * d(F.lit(2) * F.col("__cum") - F.col("__c") + F.lit(1))
+            ).alias("__2rg"),
+            F.sum("__cg").cast("bigint").alias("__ng"),
+        )
+    )
+    return cum, per_group
+
+
+def _two_arm_rank_sums(cva: DataFrame) -> DataFrame:
+    """Distributed doubled arm-a rank sum over ``_two_arm_cells``: one
+    row with ``__2r1 = Σ c_a·(2·cum − c + 1)``, n_a, __n and the cubic
+    tie sum __tie3 (pruned by Catalyst where unused)."""
+    from bubbles_spark.ops.drift import _cum_counts_prebuilt
+
+    cum = _cum_counts_prebuilt(cva.select("__g", "__v", "__c"), "__g", "__v")
+    j = cum.join(cva.select("__v", "__ca"), "__v")
+    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    return j.agg(
+        F.sum(
+            d(F.col("__ca"))
+            * d(F.lit(2) * F.col("__cum") - F.col("__c") + F.lit(1))
+        ).alias("__2r1"),
+        F.sum("__ca").cast("bigint").alias("n_a"),
+        F.sum("__c").cast("bigint").alias("__n"),
+        F.sum(
+            d(F.col("__c")) * F.col("__c") * F.col("__c") - F.col("__c")
+        ).alias("__tie3"),
     )
 
 
@@ -465,11 +634,11 @@ def _cva_local_stats(cva: DataFrame) -> DataFrame:
     """Single-task rank-sum sufficient statistics over the pooled
     two-arm value-count table (columns __v, __c, __ca): one row with
     the doubled arm-a rank sum ``2R₁ = Σ c_a·(2·cum − c + 1)``, arm-a
-    and total counts, and the cubic tie sum — the shared final
-    aggregate of ``mann_whitney_u`` and ``cliffs_delta``.  Pure exact
-    integer folds on dense value ranks (unbounded Python ints for the
-    sums); no IEEE arithmetic at all, so bit-identity with the
-    distributed cum machinery is by construction."""
+    and total counts, and the cubic tie sum — ``_two_arm_rank_sums``'s
+    aggregate.  Pure exact integer folds on dense value ranks
+    (unbounded Python ints for the sums); no IEEE arithmetic at all,
+    so bit-identity with the distributed cum machinery is by
+    construction."""
     from pyspark.sql.types import (
         DecimalType,
         LongType,
@@ -486,16 +655,12 @@ def _cva_local_stats(cva: DataFrame) -> DataFrame:
         ]
     )
 
-    def _stats(it):
+    def fold(pdf):
         from decimal import Decimal
 
         import numpy as np
         import pandas as pd
 
-        pdfs = [p for p in it if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
         cv = _dense_codes(pdf["__v"].to_numpy())
         c = pdf["__c"].to_numpy().astype(np.int64)
         ca = pdf["__ca"].to_numpy().astype(np.int64)
@@ -508,7 +673,7 @@ def _cva_local_stats(cva: DataFrame) -> DataFrame:
             if a
         )
         tie3 = sum(int(t) ** 3 - int(t) for t in c[c > 1])
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "__2r1": [Decimal(two_r1)],
                 "n_a": pd.Series([int(ca.sum())], dtype="int64"),
@@ -517,7 +682,7 @@ def _cva_local_stats(cva: DataFrame) -> DataFrame:
             }
         )
 
-    return cva.coalesce(1).mapInPandas(_stats, schema=schema)
+    return _one_task_fold(cva, schema, fold)
 
 
 def _ab_local_stats(cva: DataFrame) -> DataFrame:
@@ -526,8 +691,7 @@ def _ab_local_stats(cva: DataFrame) -> DataFrame:
     the exact block-score sum Σa, and the HALF_UP micro-quantized
     ``c_a·S/c`` and ``S²/c`` block-term sums (see ``ansari_bradley``
     for the closed forms; the per-block IEEE sequences and the
-    quantization are replayed exactly — the ``_ad_local_stats``
-    discipline)."""
+    quantization are replayed exactly by ``_q_halfup``)."""
     from pyspark.sql.types import (
         DecimalType,
         LongType,
@@ -545,16 +709,12 @@ def _ab_local_stats(cva: DataFrame) -> DataFrame:
         ]
     )
 
-    def _stats(it):
+    def fold(pdf):
         from decimal import Decimal
 
         import numpy as np
         import pandas as pd
 
-        pdfs = [p for p in it if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
         cv = _dense_codes(pdf["__v"].to_numpy())
         c = pdf["__c"].to_numpy().astype(np.int64)
         ca = pdf["__ca"].to_numpy().astype(np.int64)
@@ -582,30 +742,17 @@ def _ab_local_stats(cva: DataFrame) -> DataFrame:
         bd = blk.astype(np.float64)
         w_term = ca.astype(np.float64) * bd / cd
         sq_term = bd * bd / cd
-
-        def q_sum(vals):
-            # HALF_UP shortest-decimal micro-quantization, summed as
-            # exact ints (the _ad_local_stats discipline)
-            t = vals * 1e6
-            r = np.round(t)
-            half = (t - np.floor(t)) == 0.5
-            if half.any():
-                r = np.where(half, np.floor(t) + 1.0, r)
-            if r.size and float(np.abs(r).max()) * r.size < 2**62:
-                return int(r.astype(np.int64).sum())
-            return sum(int(Decimal(float(x))) for x in r)
-
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "n_a": pd.Series([int(ca.sum())], dtype="int64"),
                 "__nt": pd.Series([n], dtype="int64"),
                 "__sa": [Decimal(sa)],
-                "__wq": [Decimal(q_sum(w_term))],
-                "__sq": [Decimal(q_sum(sq_term))],
+                "__wq": [Decimal(_exact_int_sum(_q_halfup(w_term * 1e6)))],
+                "__sq": [Decimal(_exact_int_sum(_q_halfup(sq_term * 1e6)))],
             }
         )
 
-    return cva.coalesce(1).mapInPandas(_stats, schema=schema)
+    return _one_task_fold(cva, schema, fold)
 
 
 def mann_whitney_u(
@@ -636,48 +783,11 @@ def mann_whitney_u(
     P-values deliberately not emitted (module docstring).
 
     Output (one row): n_a, n_b, u_a, u_b, rank_sum_a, mean_u, z."""
-    from bubbles_spark.ops.drift import _cum_counts_prebuilt
-
-    both = df.filter(
-        F.col(group_col).isin([group_a, group_b])
-        & F.col(value_col).isNotNull()
-    ).select(
-        (F.col(group_col) == F.lit(group_a)).cast("int").alias("__isa"),
-        F.col(value_col).alias("__v"),
-        F.lit(0).alias("__g"),
-    )
-    # ONE corpus pass (the kruskal_wallis discipline): pooled count
-    # and arm-a count per value in the same keyed aggregate, pinned;
-    # the cumulative machinery runs on the reduced table — counts are
-    # identical, so every downstream operand is bit-exact
-    cva = (
-        both.groupBy("__g", "__v")
-        .agg(
-            F.count(F.lit(1)).alias("__c"),
-            F.sum("__isa").alias("__ca"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    if _cva_cells_fit(cva):
+    cva = _two_arm_cells(df, group_col, value_col, group_a, group_b)
+    if _cells_fit(cva, "__c"):
         agg = _cva_local_stats(cva)
     else:
-        cum = _cum_counts_prebuilt(
-            cva.select("__g", "__v", "__c"), "__g", "__v"
-        )
-        ca = cva.select("__v", "__ca")
-        j = cum.join(ca, "__v")
-        d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-        agg = j.agg(
-            F.sum(
-                d(F.col("__ca"))
-                * d(F.lit(2) * F.col("__cum") - F.col("__c") + F.lit(1))
-            ).alias("__2r1"),
-            F.sum("__ca").cast("bigint").alias("n_a"),
-            F.sum("__c").cast("bigint").alias("__n"),
-            F.sum(
-                d(F.col("__c")) * F.col("__c") * F.col("__c") - F.col("__c")
-            ).alias("__tie3"),
-        )
+        agg = _two_arm_rank_sums(cva)
     n1 = F.col("n_a").cast("double")
     n2 = F.col("n_b").cast("double")
     nd = F.col("__n").cast("double")
@@ -722,8 +832,7 @@ def _kw_local_stats(cgv: DataFrame) -> DataFrame:
     dense value ranks; each group's term repeats the same IEEE
     sequence ``(2R_g)²/(4·n_g)·1e6`` on the same correctly-rounded
     double operands with the HALF_UP shortest-decimal quantization
-    (see ``_ad_local_stats``); the cubic tie sum uses unbounded
-    Python ints."""
+    (``_q_halfup``); the cubic tie sum uses unbounded Python ints."""
     from pyspark.sql.types import (
         DecimalType,
         LongType,
@@ -740,16 +849,12 @@ def _kw_local_stats(cgv: DataFrame) -> DataFrame:
         ]
     )
 
-    def _stats(it):
+    def fold(pdf):
         from decimal import Decimal
 
         import numpy as np
         import pandas as pd
 
-        pdfs = [p for p in it if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
         cg = _dense_codes(pdf["__grp"].to_numpy())
         cv = _dense_codes(pdf["__v"].to_numpy())
         w = pdf["__cg"].to_numpy().astype(np.int64)
@@ -770,31 +875,25 @@ def _kw_local_stats(cgv: DataFrame) -> DataFrame:
         bounds = np.flatnonzero(
             np.r_[True, cg[order][1:] != cg[order][:-1], True]
         )
-        s = 0
-        for i in range(len(bounds) - 1):
-            seg = order[bounds[i] : bounds[i + 1]]
-            g = int(cg[seg[0]])
-            two_rg = sum(int(x) for x in contrib[seg])
-            term = (
-                (float(two_rg) * float(two_rg))
-                / (4.0 * float(ng[g]))
-                * 1e6
-            )
-            r = np.round(term)
-            if (term - np.floor(term)) == 0.5:
-                r = np.floor(term) + 1.0
-            s += int(Decimal(float(r)))
+        # segments come in group-code order 0..k-1, aligned with ng
+        two_rg = np.array(
+            [
+                float(sum(int(x) for x in contrib[order[lo:hi]]))
+                for lo, hi in zip(bounds[:-1], bounds[1:])
+            ]
+        )
+        term = (two_rg * two_rg) / (4.0 * ng.astype(np.float64)) * 1e6
         tie3 = sum(int(t) ** 3 - int(t) for t in c[c > 1])
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "k": pd.Series([k], dtype="int64"),
                 "n": pd.Series([n], dtype="int64"),
-                "__s": [Decimal(s)],
+                "__s": [Decimal(_exact_int_sum(_q_halfup(term)))],
                 "__tie3": [Decimal(tie3)],
             }
         )
 
-    return cgv.coalesce(1).mapInPandas(_stats, schema=schema)
+    return _one_task_fold(cgv, schema, fold)
 
 
 def kruskal_wallis(
@@ -819,49 +918,11 @@ def kruskal_wallis(
     yield NULL.
 
     Output (one row): k, n, df, h_stat, tie_divisor, h_tied."""
-    from bubbles_spark.ops.drift import _cum_counts_prebuilt
-
-    base = df.filter(
-        F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
-    ).select(F.col(group_col).alias("__grp"), F.col(value_col).alias("__v"))
-    # ONE corpus pass: the per-(group, value) count table is pinned,
-    # and the pooled ranking counts derive from it by summing over
-    # groups (exact integers — identical to counting the raw rows)
-    # instead of a second corpus aggregation
-    cgv = (
-        base.groupBy("__grp", "__v")
-        .agg(F.count(F.lit(1)).alias("__cg"))
-        .localCheckpoint(eager=False)
-    )
-    # 1-row size fold (the jonckheere dispatch): picks the code path
-    # and materializes the pin in the same job
-    sz = cgv.agg(
-        F.count(F.lit(1)).alias("__cells"), F.sum("__cg").alias("__rows")
-    ).collect()[0]
-    n_cells, n_rows = sz["__cells"], int(sz["__rows"] or 0)
-    if 0 < n_cells <= _CELL_FOLD_MAX_CELLS and n_rows <= _CELL_FOLD_MAX_ROWS:
+    cgv = _group_value_cells(df, group_col, value_col)
+    if _cells_fit(cgv, "__cg"):
         agg = _kw_local_stats(cgv)
     else:
-        pooled = (
-            cgv.groupBy("__v")
-            .agg(F.sum("__cg").cast("bigint").alias("__c"))
-            .withColumn("__g", F.lit(0))
-        )
-        cum = _cum_counts_prebuilt(pooled, "__g", "__v").select(
-            "__v", "__c", "__cum"
-        )
-        d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-        per_group = (
-            cgv.join(cum, "__v")
-            .groupBy("__grp")
-            .agg(
-                F.sum(
-                    d(F.col("__cg"))
-                    * d(F.lit(2) * F.col("__cum") - F.col("__c") + F.lit(1))
-                ).alias("__2rg"),
-                F.sum("__cg").cast("bigint").alias("__ng"),
-            )
-        )
+        cum, per_group = _group_rank_sums(cgv)
         two_rg = F.col("__2rg").cast("double")
         # micro-quantized INTEGER decimal, not CAST(... AS
         # DECIMAL(38,6)): the term needs ~17 significant digits and
@@ -876,6 +937,7 @@ def kruskal_wallis(
             * F.lit(1e6),
             0,
         ).cast("decimal(38,0)")
+        d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
         ties = cum.agg(
             F.sum(
                 d(F.col("__c")) * F.col("__c") * F.col("__c") - F.col("__c")
@@ -1062,12 +1124,6 @@ def paired_t_test(
     )
 
 
-# spearman fold cap: Σ c·r2x·r2y ≤ 4n³ must fit int64, so the
-# single-task moment fold only dispatches under 1M input rows;
-# bigger inputs take the distributed cells machinery unchanged
-_SPEARMAN_FOLD_MAX_ROWS = 1_000_000
-
-
 def _spearman_cells(base: DataFrame) -> DataFrame:
     """The shared reduction both spearman paths start from: one
     map-side-combined count per (group, x, y) triple, lazily pinned
@@ -1111,16 +1167,12 @@ def _spearman_local_moments(cells: DataFrame) -> DataFrame:
         ]
     )
 
-    def _stats(it):
+    def fold(pdf):
         from decimal import Decimal
 
         import numpy as np
         import pandas as pd
 
-        pdfs = [p for p in it if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
         gix, guniq = pd.factorize(pdf["__g"], use_na_sentinel=False)
         gix = np.asarray(gix, dtype=np.int64)
         k = int(gix.max()) + 1
@@ -1160,7 +1212,7 @@ def _spearman_local_moments(cells: DataFrame) -> DataFrame:
         sxy = gsum(cc * r2x * r2y)
         sxx = gsum(cc * r2x * r2x)
         syy = gsum(cc * r2y * r2y)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "__g": pd.Series(guniq),
                 "n": pd.Series(n_g, dtype="int64"),
@@ -1172,7 +1224,7 @@ def _spearman_local_moments(cells: DataFrame) -> DataFrame:
             }
         )
 
-    return cells.coalesce(1).mapInPandas(_stats, schema=schema)
+    return _one_task_fold(cells, schema, fold)
 
 
 def _spearman_moments(base: DataFrame) -> DataFrame:
@@ -1182,13 +1234,7 @@ def _spearman_moments(base: DataFrame) -> DataFrame:
     run the distributed rank machinery over the same pinned cells."""
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     cells = _spearman_cells(base)
-    sz = cells.agg(
-        F.count(F.lit(1)).alias("__cells"), F.sum("__cc").alias("__rows")
-    ).collect()[0]
-    n_cells, n_rows = sz["__cells"], int(sz["__rows"] or 0)
-    if 0 < n_cells <= _CELL_FOLD_MAX_CELLS and (
-        n_rows <= _SPEARMAN_FOLD_MAX_ROWS
-    ):
+    if _cells_fit(cells, "__cc", max_rows=_SPEARMAN_FOLD_MAX_ROWS):
         return _spearman_local_moments(cells)
     t = _spearman_suffstats(cells)
     return t.groupBy("__g").agg(
@@ -2193,38 +2239,10 @@ def dunn_test(
 
     Output: group_a, group_b, n_a, n_b, mean_rank_a, mean_rank_b, z
     (one row per unordered pair, group_a < group_b)."""
-    from bubbles_spark.ops.drift import _cum_counts_prebuilt
-
-    base = df.filter(
-        F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
-    ).select(F.col(group_col).alias("__grp"), F.col(value_col).alias("__v"))
-    # ONE corpus pass (see kruskal_wallis): pin the per-(group, value)
-    # counts, derive the pooled ranking counts from them exactly
-    cgv = (
-        base.groupBy("__grp", "__v")
-        .agg(F.count(F.lit(1)).alias("__cg"))
-        .localCheckpoint(eager=False)
-    )
-    pooled = (
-        cgv.groupBy("__v")
-        .agg(F.sum("__cg").cast("bigint").alias("__c"))
-        .withColumn("__g", F.lit(0))
-    )
-    cum = _cum_counts_prebuilt(pooled, "__g", "__v").select(
-        "__v", "__c", "__cum"
+    cum, per_group = _group_rank_sums(
+        _group_value_cells(df, group_col, value_col)
     )
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    per_group = (
-        cgv.join(cum, "__v")
-        .groupBy("__grp")
-        .agg(
-            F.sum(
-                d(F.col("__cg"))
-                * d(F.lit(2) * F.col("__cum") - F.col("__c") + F.lit(1))
-            ).alias("__2rg"),
-            F.sum("__cg").cast("bigint").alias("__ng"),
-        )
-    )
     glob = cum.agg(
         F.sum("__c").cast("bigint").alias("__N"),
         F.sum(d(F.col("__c")) * F.col("__c") * F.col("__c") - F.col("__c"))
@@ -2457,7 +2475,7 @@ def _mood_local_stats(cgv: DataFrame) -> DataFrame:
     the above-median counts are pure integer facts on dense value
     ranks; each term repeats ``(a·N − n_g·A)² / n_g · 1e6`` as the
     same IEEE sequence with HALF_UP shortest-decimal quantization
-    (see ``_ad_local_stats``)."""
+    (``_q_halfup``)."""
     from pyspark.sql.types import (
         DecimalType,
         LongType,
@@ -2476,16 +2494,12 @@ def _mood_local_stats(cgv: DataFrame) -> DataFrame:
         ]
     )
 
-    def _stats(it):
+    def fold(pdf):
         from decimal import Decimal
 
         import numpy as np
         import pandas as pd
 
-        pdfs = [p for p in it if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
         cg = _dense_codes(pdf["__grp"].to_numpy())
         cv = _dense_codes(pdf["__v"].to_numpy())
         w = pdf["__cg"].to_numpy().astype(np.int64)
@@ -2505,25 +2519,21 @@ def _mood_local_stats(cgv: DataFrame) -> DataFrame:
         ng = np.zeros(k, dtype=np.int64)
         np.add.at(ng, cg, w)
         ta = int(a.sum())
-        s = 0
-        for g in range(k):
-            diff = float(int(a[g]) * n - int(ng[g]) * ta)
-            term = diff * diff / float(ng[g]) * 1e6
-            r = np.round(term)
-            if (term - np.floor(term)) == 0.5:
-                r = np.floor(term) + 1.0
-            s += int(Decimal(float(r)))
-        yield pd.DataFrame(
+        diff = np.array(
+            [float(int(a[g]) * n - int(ng[g]) * ta) for g in range(k)]
+        )
+        term = diff * diff / ng.astype(np.float64) * 1e6
+        return pd.DataFrame(
             {
                 "k": pd.Series([k], dtype="int64"),
                 "n": pd.Series([n], dtype="int64"),
                 "n_above": pd.Series([ta], dtype="int64"),
                 "__med": pd.Series([med_val]),
-                "__s": [Decimal(s)],
+                "__s": [Decimal(_exact_int_sum(_q_halfup(term)))],
             }
         )
 
-    return cgv.coalesce(1).mapInPandas(_stats, schema=schema)
+    return _one_task_fold(cgv, schema, fold)
 
 
 def mood_median_test(
@@ -2556,25 +2566,11 @@ def mood_median_test(
     (bigint), chi2 (double)."""
     from bubbles_spark.ops.drift import _cum_counts_prebuilt
 
-    base = df.filter(
-        F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
-    ).select(F.col(group_col).alias("__grp"), F.col(value_col).alias("__v"))
-    # ONE corpus pass (the kruskal_wallis discipline): pin the
-    # per-(group, value) counts; the pooled median selection AND the
-    # per-group above-median classification both derive from it by
-    # exact integer sums
-    cgv = (
-        base.groupBy("__grp", "__v")
-        .agg(F.count(F.lit(1)).alias("__cg"))
-        .localCheckpoint(eager=False)
-    )
-    # 1-row size fold (the jonckheere dispatch): picks the code path
-    # and materializes the pin in the same job
-    sz = cgv.agg(
-        F.count(F.lit(1)).alias("__cells"), F.sum("__cg").alias("__rows")
-    ).collect()[0]
-    n_cells, n_rows = sz["__cells"], int(sz["__rows"] or 0)
-    if 0 < n_cells <= _CELL_FOLD_MAX_CELLS and n_rows <= _CELL_FOLD_MAX_ROWS:
+    # the pooled median selection AND the per-group above-median
+    # classification both derive from the pinned cells by exact
+    # integer sums
+    cgv = _group_value_cells(df, group_col, value_col)
+    if _cells_fit(cgv, "__cg"):
         agg = _mood_local_stats(cgv)
     else:
         pooled = (
@@ -2639,16 +2635,6 @@ def mood_median_test(
     )
 
 
-# cell-fold fast-path caps, shared by the rank-family single-task
-# folds (jonckheere, anderson_darling_k): they bound ONE task's
-# memory (cells / the zero-filled k×V grid) and int64 exactness of
-# the integer folds ((Σ rows)²/2 must fit int64), not a tuning knob;
-# inputs past any cap take the distributed grid path unchanged
-_CELL_FOLD_MAX_CELLS = 2_000_000
-_CELL_FOLD_MAX_ROWS = 100_000_000
-_CELL_FOLD_MAX_GRID = 4_000_000
-
-
 def _jt_local_stats(cgv: DataFrame) -> DataFrame:
     """Single-task Jonckheere sufficient statistics over the
     per-(arm, value) cell table (columns __grp, __v, __cg): one row
@@ -2680,16 +2666,12 @@ def _jt_local_stats(cgv: DataFrame) -> DataFrame:
         ]
     )
 
-    def _stats(it):
+    def fold(pdf):
         from decimal import Decimal
 
         import numpy as np
         import pandas as pd
 
-        pdfs = [p for p in it if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
         cg = _dense_codes(pdf["__grp"].to_numpy())
         cv = _dense_codes(pdf["__v"].to_numpy())
         w = pdf["__cg"].to_numpy().astype(np.int64)
@@ -2719,7 +2701,7 @@ def _jt_local_stats(cgv: DataFrame) -> DataFrame:
 
         g25, g3, g2 = t25_t3_t2(ngs)
         t25, t3, t2 = t25_t3_t2(tvs[tvs > 1])
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "k": pd.Series([len(ngs)], dtype="int64"),
                 "n": pd.Series([n], dtype="int64"),
@@ -2734,7 +2716,7 @@ def _jt_local_stats(cgv: DataFrame) -> DataFrame:
             }
         )
 
-    return cgv.coalesce(1).mapInPandas(_stats, schema=schema)
+    return _one_task_fold(cgv, schema, fold)
 
 
 def jonckheere_terpstra(
@@ -2788,28 +2770,13 @@ def jonckheere_terpstra(
 
     from bubbles_spark.ops.drift import _cum_counts_table
 
-    base = df.filter(
-        F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
-    ).select(F.col(group_col).alias("__grp"), F.col(value_col).alias("__v"))
-    # LAZY pin (r13): the count table feeds every downstream consumer
-    # (size fold + the fast path, or grid probe / grid join / ng /
-    # tstats on the distributed path) — unpinned, each re-ran the
-    # full corpus aggregation (~8 scans per run measured).
-    # eager=False: the RDD cut materializes inside the size fold's
-    # own job, no separate blocking pin.
-    cgv = (
-        base.groupBy("__grp", "__v")
-        .agg(F.count(F.lit(1)).alias("__cg"))
-        .localCheckpoint(eager=False)
-    )
+    # the pinned count table feeds every downstream consumer (grid
+    # probe / grid join / ng / tstats on the distributed path) —
+    # unpinned, each re-ran the full corpus aggregation (~8 scans per
+    # run measured)
+    cgv = _group_value_cells(df, group_col, value_col)
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    # 1-row size/shape fold (the cronbach contract-fold discipline):
-    # picks the code path and materializes the pin in the same job
-    sz = cgv.agg(
-        F.count(F.lit(1)).alias("__cells"), F.sum("__cg").alias("__rows")
-    ).collect()[0]
-    n_cells, n_rows = sz["__cells"], int(sz["__rows"] or 0)
-    if 0 < n_cells <= _CELL_FOLD_MAX_CELLS and n_rows <= _CELL_FOLD_MAX_ROWS:
+    if _cells_fit(cgv, "__cg"):
         agg = _jt_local_stats(cgv)
     else:
         groups = cgv.select("__grp").distinct()
@@ -3185,13 +3152,9 @@ def _ad_local_stats(cgv: DataFrame) -> DataFrame:
     Bit-exactness is replayed operation for operation on the dense
     k×V grid: integer cums/l/d2/N in int64 (caller-capped), each term
     the same IEEE sequence ``l/N · (num·num) / den`` on the same
-    correctly-rounded double operands, and the 1e-6 micro-quantization
-    reproduced as Spark computes it — ``round(double, 0)`` goes
-    through the shortest-decimal rendering with HALF_UP, which for
-    non-negative doubles equals round-half-even EXCEPT at exact
-    binary .5 fractions (a ".5" rendering round-trips only for an
-    exact .5 double), where HALF_UP adds one — the r13 graph-replay
-    quantization discipline."""
+    correctly-rounded double operands, and both 1e-6
+    micro-quantizations reproduced as Spark computes them
+    (``_q_halfup``) — the r13 graph-replay quantization discipline."""
     from pyspark.sql.types import (
         DecimalType,
         IntegerType,
@@ -3211,27 +3174,12 @@ def _ad_local_stats(cgv: DataFrame) -> DataFrame:
         ]
     )
 
-    def _q_halfup(x):
-        # Spark round(double, 0): HALF_UP over the shortest-decimal
-        # rendering; == np.round except exact .5 fractions (x >= 0)
-        import numpy as np
-
-        r = np.round(x)
-        half = (x - np.floor(x)) == 0.5
-        if half.any():
-            r = np.where(half, np.floor(x) + 1.0, r)
-        return r
-
-    def _stats(it):
+    def fold(pdf):
         from decimal import Decimal
 
         import numpy as np
         import pandas as pd
 
-        pdfs = [p for p in it if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
         cg = _dense_codes(pdf["__grp"].to_numpy())
         cv = _dense_codes(pdf["__v"].to_numpy())
         w = pdf["__cg"].to_numpy().astype(np.int64)
@@ -3261,26 +3209,13 @@ def _ad_local_stats(cgv: DataFrame) -> DataFrame:
                     * (num * num)
                     / den.astype(np.float64)[None, :]
                 )
-                qt = _q_halfup(term * 1e6)
-            qt = qt[:, ok]
-            # per-group quantized term sums as exact ints (the
-            # decimal(38,0) folds): int64 vector sum when provably
-            # in-range, unbounded Python ints otherwise — the rounded
-            # doubles are integral, so the conversions are exact
-            sq = 0
-            for g in range(k):
-                row = qt[g]
-                if row.size and float(np.abs(row).max()) * row.size < 2**62:
-                    tq = int(row.astype(np.int64).sum())
-                else:
-                    tq = sum(int(Decimal(float(x))) for x in row)
-                inner = (float(tq) / 1e6) / float(ng[g])
-                v = inner * 1e6
-                r = np.round(v)
-                if (v - np.floor(v)) == 0.5:
-                    r = np.floor(v) + 1.0
-                sq += int(Decimal(float(r)))
-        yield pd.DataFrame(
+                qt = _q_halfup(term * 1e6)[:, ok]
+            # per-group quantized term sums, then the per-group inner
+            # term re-quantized and summed across groups
+            tq = np.array([float(_exact_int_sum(row)) for row in qt])
+            inner = tq / 1e6 / ng.astype(np.float64)
+            sq = _exact_int_sum(_q_halfup(inner * 1e6))
+        return pd.DataFrame(
             {
                 "k": pd.Series([k], dtype="int64"),
                 "n": pd.Series([n], dtype="int64"),
@@ -3289,7 +3224,7 @@ def _ad_local_stats(cgv: DataFrame) -> DataFrame:
             }
         )
 
-    return cgv.coalesce(1).mapInPandas(_stats, schema=schema)
+    return _one_task_fold(cgv, schema, fold)
 
 
 def anderson_darling_k(
@@ -3324,32 +3259,10 @@ def anderson_darling_k(
 
     from bubbles_spark.ops.drift import _cum_counts_table
 
-    base = df.filter(
-        F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
-    ).select(F.col(group_col).alias("__grp"), F.col(value_col).alias("__v"))
-    # same multi-consumer shape as jonckheere_terpstra: pin the
-    # reduced per-(arm, value) count table once
-    cgv = (
-        base.groupBy("__grp", "__v")
-        .agg(F.count(F.lit(1)).alias("__cg"))
-        .localCheckpoint(eager=False)
-    )
-    # 1-row size/shape fold (the jonckheere dispatch): picks the code
-    # path and materializes the pin in the same job; the grid cap
+    # same multi-consumer shape as jonckheere_terpstra; the grid cap
     # bounds the fast path's dense k×V matrix
-    sz = cgv.agg(
-        F.count(F.lit(1)).alias("__cells"),
-        F.sum("__cg").alias("__rows"),
-        F.countDistinct("__grp").alias("__k"),
-        F.countDistinct("__v").alias("__nv"),
-    ).collect()[0]
-    n_cells, n_rows = sz["__cells"], int(sz["__rows"] or 0)
-    grid_sz = int(sz["__k"] or 0) * int(sz["__nv"] or 0)
-    if (
-        0 < n_cells <= _CELL_FOLD_MAX_CELLS
-        and n_rows <= _CELL_FOLD_MAX_ROWS
-        and grid_sz <= _CELL_FOLD_MAX_GRID
-    ):
+    cgv = _group_value_cells(df, group_col, value_col)
+    if _cells_fit(cgv, "__cg", max_grid=_CELL_FOLD_MAX_GRID):
         agg = _ad_local_stats(cgv)
     else:
         groups = cgv.select("__grp").distinct()
@@ -3538,45 +3451,16 @@ def cliffs_delta(
 
     Output (one row): n_a, n_b, u2_a (2·U_a, bigint), delta
     (double)."""
-    from bubbles_spark.ops.drift import _cum_counts_prebuilt
-
-    both = df.filter(
-        F.col(group_col).isin([group_a, group_b])
-        & F.col(value_col).isNotNull()
-    ).select(
-        (F.col(group_col) == F.lit(group_a)).cast("int").alias("__isa"),
-        F.col(value_col).alias("__v"),
-        F.lit(0).alias("__g"),
-    )
-    # ONE corpus pass (the kruskal_wallis discipline): pooled count
-    # and arm-a count per value in the same keyed aggregate, pinned;
-    # the cumulative machinery runs on the reduced table — counts are
-    # identical, so every downstream operand is bit-exact
-    cva = (
-        both.groupBy("__g", "__v")
-        .agg(
-            F.count(F.lit(1)).alias("__c"),
-            F.sum("__isa").alias("__ca"),
-        )
-        .localCheckpoint(eager=False)
-    )
     # NOT dispatched to the _cva_local_stats fold (r13): cliffs' tail
     # is a single aggregate with no tie term — the interleaved A/B
     # read flat-to-slightly-negative (0.53-0.61 -> 0.60-0.71 s), the
     # extra size-fold job buying nothing here, unlike
     # mann_whitney/ansari whose probe+window+join it replaces
-    cum = _cum_counts_prebuilt(cva.select("__g", "__v", "__c"), "__g", "__v")
-    ca = cva.select("__v", "__ca")
-    j = cum.join(ca, "__v")
+    cva = _two_arm_cells(df, group_col, value_col, group_a, group_b)
+    agg = _two_arm_rank_sums(cva).withColumn(
+        "n_b", (F.col("__n") - F.col("n_a")).cast("bigint")
+    )
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    agg = j.agg(
-        F.sum(
-            d(F.col("__ca"))
-            * d(F.lit(2) * F.col("__cum") - F.col("__c") + F.lit(1))
-        ).alias("__2r1"),
-        F.sum("__ca").cast("bigint").alias("n_a"),
-        F.sum("__c").cast("bigint").alias("__n"),
-    ).withColumn("n_b", (F.col("__n") - F.col("n_a")).cast("bigint"))
     u2a = F.col("__2r1") - d(F.col("n_a")) * (F.col("n_a") + 1)
     nm = d(F.col("n_a")) * F.col("n_b")
     ok = (F.col("n_a") > 0) & (F.col("n_b") > 0)
@@ -3620,27 +3504,8 @@ def ansari_bradley(
     Output (one row): n_a, n_b, w_stat, mean_w, z (double)."""
     from bubbles_spark.ops.drift import _cum_counts_prebuilt
 
-    both = df.filter(
-        F.col(group_col).isin([group_a, group_b])
-        & F.col(value_col).isNotNull()
-    ).select(
-        (F.col(group_col) == F.lit(group_a)).cast("int").alias("__isa"),
-        F.col(value_col).alias("__v"),
-        F.lit(0).alias("__g"),
-    )
-    # ONE corpus pass (the kruskal_wallis discipline): pooled count
-    # and arm-a count per value in the same keyed aggregate, pinned;
-    # the cumulative machinery runs on the reduced table — counts are
-    # identical, so every downstream operand is bit-exact
-    cva = (
-        both.groupBy("__g", "__v")
-        .agg(
-            F.count(F.lit(1)).alias("__c"),
-            F.sum("__isa").alias("__ca"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    if _cva_cells_fit(cva):
+    cva = _two_arm_cells(df, group_col, value_col, group_a, group_b)
+    if _cells_fit(cva, "__c"):
         agg = _ab_local_stats(cva)
     else:
         cum = _cum_counts_prebuilt(

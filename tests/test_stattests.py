@@ -1442,6 +1442,31 @@ def test_kendall_inversion_path_matches_bruteforce_pairs(spark):
             assert got_kt[g]["tau_b"] == s_exp / math.sqrt(denx * deny), g
 
 
+def _fast_and_forced(build, cap="_CELL_FOLD_MAX_CELLS", limit=0, plan=True):
+    """Run the rank-test DataFrame ``build()`` twice: as dispatched
+    (the single-task cell fold on these small inputs), then with the
+    stattests cap ``cap`` patched to ``limit`` so the distributed path
+    runs.  Returns ``(fast, forced)`` as lists of row dicts, sorted so
+    grouped outputs line up.  With ``plan``, also asserts that the
+    fast run's executed plan holds the fold (``MapInPandas``) and the
+    forced run's does not — equal results alone would pass even if
+    the dispatcher never folded."""
+
+    def run():
+        df = build()
+        rows = sorted((r.asDict() for r in df.collect()), key=repr)
+        return rows, df._jdf.queryExecution().executedPlan().toString()
+
+    fast, fast_plan = run()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(stattests, cap, limit)
+        forced, forced_plan = run()
+    if plan:
+        assert "MapInPandas" in fast_plan
+        assert "MapInPandas" not in forced_plan
+    return fast, forced
+
+
 def test_jonckheere_local_and_grid_paths_agree(spark):
     # r13 pin: the single-task weighted-inversion fast path must be
     # bit-identical to the distributed grid/cum path — same exact
@@ -1459,16 +1484,10 @@ def test_jonckheere_local_and_grid_paths_agree(spark):
             rows.append((g, float(rng.randint(0, 15) - gi)))
     df = spark.createDataFrame(rows, "g string, v double")
 
-    fast = st.jonckheere_terpstra(df, "g", "v").collect()[0]
-    old_cells = st._CELL_FOLD_MAX_CELLS
-    st._CELL_FOLD_MAX_CELLS = 0  # force the distributed grid path
-    try:
-        grid = st.jonckheere_terpstra(df, "g", "v").collect()[0]
-    finally:
-        st._CELL_FOLD_MAX_CELLS = old_cells
-    assert fast.asDict() == grid.asDict()
+    fast, grid = _fast_and_forced(lambda: st.jonckheere_terpstra(df, "g", "v"))
+    assert fast == grid
     # sanity: trend is downward -> z decidedly negative
-    assert fast["z"] < -3.0
+    assert fast[0]["z"] < -3.0
 
     # degenerate inputs agree too: all values tied, and a single arm
     flat = spark.createDataFrame(
@@ -1477,13 +1496,8 @@ def test_jonckheere_local_and_grid_paths_agree(spark):
     one = spark.createDataFrame([("a", float(i)) for i in range(5)],
                                 "g string, v double")
     for d in (flat, one):
-        f = st.jonckheere_terpstra(d, "g", "v").collect()[0]
-        st._CELL_FOLD_MAX_CELLS = 0
-        try:
-            g = st.jonckheere_terpstra(d, "g", "v").collect()[0]
-        finally:
-            st._CELL_FOLD_MAX_CELLS = old_cells
-        assert f.asDict() == g.asDict()
+        f, g = _fast_and_forced(lambda: st.jonckheere_terpstra(d, "g", "v"))
+        assert f == g
 
 
 def test_anderson_darling_local_and_grid_paths_agree(spark):
@@ -1504,27 +1518,24 @@ def test_anderson_darling_local_and_grid_paths_agree(spark):
             rows.append((g, rng.gauss(0.0, 1.0)))         # near-unique
     df = spark.createDataFrame(rows, "g string, v double")
 
-    fast = st.anderson_darling_k(df, "g", "v").collect()[0]
-    old = st._CELL_FOLD_MAX_CELLS
-    st._CELL_FOLD_MAX_CELLS = 0  # force the distributed grid path
-    try:
-        grid = st.anderson_darling_k(df, "g", "v").collect()[0]
-    finally:
-        st._CELL_FOLD_MAX_CELLS = old
-    assert fast.asDict() == grid.asDict()
-    assert fast["a2_akn"] is not None
+    def build():
+        return st.anderson_darling_k(df, "g", "v")
+
+    fast, grid = _fast_and_forced(build)
+    assert fast == grid
+    assert fast[0]["a2_akn"] is not None
+    # the k×V grid cap, one below this input's grid, also forces the
+    # distributed path
+    n_grid = 3 * len({v for _, v in rows})
+    fast, grid = _fast_and_forced(build, "_CELL_FOLD_MAX_GRID", n_grid - 1)
+    assert fast == grid
 
     # degenerate: all tied -> NULL statistic on both paths
     flat = spark.createDataFrame(
         [("a", 1.0)] * 4 + [("b", 1.0)] * 4, "g string, v double"
     )
-    f = st.anderson_darling_k(flat, "g", "v").collect()[0]
-    st._CELL_FOLD_MAX_CELLS = 0
-    try:
-        g = st.anderson_darling_k(flat, "g", "v").collect()[0]
-    finally:
-        st._CELL_FOLD_MAX_CELLS = old
-    assert f.asDict() == g.asDict() and f["a2_akn"] is None
+    f, g = _fast_and_forced(lambda: st.anderson_darling_k(flat, "g", "v"))
+    assert f == g and f[0]["a2_akn"] is None
 
 
 def test_kruskal_local_and_distributed_paths_agree(spark):
@@ -1543,15 +1554,15 @@ def test_kruskal_local_and_distributed_paths_agree(spark):
             rows.append((g, rng.gauss(5.0, 3.0)))
     df = spark.createDataFrame(rows, "g string, v double")
 
-    fast = st.kruskal_wallis(df, "g", "v").collect()[0]
-    old = st._CELL_FOLD_MAX_CELLS
-    st._CELL_FOLD_MAX_CELLS = 0
-    try:
-        dist = st.kruskal_wallis(df, "g", "v").collect()[0]
-    finally:
-        st._CELL_FOLD_MAX_CELLS = old
-    assert fast.asDict() == dist.asDict()
-    assert fast["h_tied"] is not None
+    def build():
+        return st.kruskal_wallis(df, "g", "v")
+
+    fast, dist = _fast_and_forced(build)
+    assert fast == dist
+    assert fast[0]["h_tied"] is not None
+    # the input-row cap, one below this input's row count
+    fast, dist = _fast_and_forced(build, "_CELL_FOLD_MAX_ROWS", len(rows) - 1)
+    assert fast == dist
 
 
 def test_mood_local_and_distributed_paths_agree(spark):
@@ -1565,33 +1576,24 @@ def test_mood_local_and_distributed_paths_agree(spark):
             for g in ("p", "q", "r") for _ in range(500)]
     df = spark.createDataFrame(rows, "g string, v double")
 
-    fast = st.mood_median_test(df, "g", "v").collect()[0]
-    old = st._CELL_FOLD_MAX_CELLS
-    st._CELL_FOLD_MAX_CELLS = 0
-    try:
-        dist = st.mood_median_test(df, "g", "v").collect()[0]
-    finally:
-        st._CELL_FOLD_MAX_CELLS = old
-    assert fast.asDict() == dist.asDict()
-    assert fast["chi2"] is not None
+    fast, dist = _fast_and_forced(lambda: st.mood_median_test(df, "g", "v"))
+    assert fast == dist
+    assert fast[0]["chi2"] is not None
 
     # degenerate: all values equal -> B = 0 -> NULL chi2, both paths
     flat = spark.createDataFrame(
         [("a", 2.0)] * 4 + [("b", 2.0)] * 4, "g string, v double"
     )
-    f = st.mood_median_test(flat, "g", "v").collect()[0]
-    st._CELL_FOLD_MAX_CELLS = 0
-    try:
-        g2 = st.mood_median_test(flat, "g", "v").collect()[0]
-    finally:
-        st._CELL_FOLD_MAX_CELLS = old
-    assert f.asDict() == g2.asDict() and f["chi2"] is None
+    f, g2 = _fast_and_forced(lambda: st.mood_median_test(flat, "g", "v"))
+    assert f == g2 and f[0]["chi2"] is None
 
 
 def test_two_arm_local_and_distributed_paths_agree(spark):
-    # r13 pin: the shared cva single-task folds (mann_whitney/cliffs
-    # rank sums, ansari block scores incl. micro-quantization) vs the
-    # distributed cum machinery
+    # r13 pin: the shared two-arm single-task folds (mann_whitney rank
+    # sums, ansari block scores incl. micro-quantization) vs the
+    # distributed cum machinery; cliffs_delta is never dispatched (it
+    # always runs the distributed rank sum), so only its result is
+    # compared, not its plan
     import random
 
     from bubbles_spark.ops import stattests as st
@@ -1605,26 +1607,18 @@ def test_two_arm_local_and_distributed_paths_agree(spark):
     )
     df = spark.createDataFrame(rows, "g string, v double")
 
-    old = st._CELL_FOLD_MAX_CELLS
     for op in (st.mann_whitney_u, st.cliffs_delta, st.ansari_bradley,
                st.lepage_test):
-        fast = op(df, "g", "v", "a", "b").collect()[0]
-        st._CELL_FOLD_MAX_CELLS = 0
-        try:
-            dist = op(df, "g", "v", "a", "b").collect()[0]
-        finally:
-            st._CELL_FOLD_MAX_CELLS = old
-        assert fast.asDict() == dist.asDict(), op.__name__
+        fast, dist = _fast_and_forced(
+            lambda: op(df, "g", "v", "a", "b"),
+            plan=op is not st.cliffs_delta,
+        )
+        assert fast == dist, op.__name__
 
     # empty arm: documented NULL-z single row on both paths
     one = spark.createDataFrame([("a", 1.0), ("a", 2.0)], "g string, v double")
-    f = st.mann_whitney_u(one, "g", "v", "a", "b").collect()[0]
-    st._CELL_FOLD_MAX_CELLS = 0
-    try:
-        d2 = st.mann_whitney_u(one, "g", "v", "a", "b").collect()[0]
-    finally:
-        st._CELL_FOLD_MAX_CELLS = old
-    assert f.asDict() == d2.asDict() and f["z"] is None
+    f, d2 = _fast_and_forced(lambda: st.mann_whitney_u(one, "g", "v", "a", "b"))
+    assert f == d2 and f[0]["z"] is None
 
 
 def test_spearman_local_and_distributed_paths_agree(spark):
@@ -1645,26 +1639,23 @@ def test_spearman_local_and_distributed_paths_agree(spark):
             rows.append((g, rng.random() * 60, float(rng.randint(0, 9))))
     df = spark.createDataFrame(rows, "g string, x double, y double")
 
-    old = st._CELL_FOLD_MAX_CELLS
-    fast_by = {r["g"]: r for r in st.spearman_by(df, "g", "x", "y").collect()}
-    fast_c = st.spearman_corr(df, "x", "y").collect()[0]
-    st._CELL_FOLD_MAX_CELLS = 0
-    try:
-        dist_by = {r["g"]: r
-                   for r in st.spearman_by(df, "g", "x", "y").collect()}
-        dist_c = st.spearman_corr(df, "x", "y").collect()[0]
-    finally:
-        st._CELL_FOLD_MAX_CELLS = old
-    assert fast_c.asDict() == dist_c.asDict() and fast_c["rho"] is not None
-    for g in fast_by:
-        assert fast_by[g].asDict() == dist_by[g].asDict(), g
+    # the shared cell cap, then spearman's own row cap one below this
+    # input's row count
+    for cap, limit in (("_CELL_FOLD_MAX_CELLS", 0),
+                       ("_SPEARMAN_FOLD_MAX_ROWS", len(rows) - 1)):
+        fast_c, dist_c = _fast_and_forced(
+            lambda: st.spearman_corr(df, "x", "y"), cap, limit
+        )
+        assert fast_c == dist_c and fast_c[0]["rho"] is not None
+        fast_by, dist_by = _fast_and_forced(
+            lambda: st.spearman_by(df, "g", "x", "y"), cap, limit
+        )
+        assert len(fast_by) == 2 and fast_by == dist_by
 
     # empty input: spearman_corr's one-row n=0 contract on both paths
+    # (an empty cell table never folds, so there is no plan to check)
     empty = spark.createDataFrame([], "g string, x double, y double")
-    e1 = st.spearman_corr(empty, "x", "y").collect()[0]
-    st._CELL_FOLD_MAX_CELLS = 0
-    try:
-        e2 = st.spearman_corr(empty, "x", "y").collect()[0]
-    finally:
-        st._CELL_FOLD_MAX_CELLS = old
-    assert e1.asDict() == e2.asDict() == {"n": 0, "rho": None}
+    e1, e2 = _fast_and_forced(
+        lambda: st.spearman_corr(empty, "x", "y"), plan=False
+    )
+    assert e1 == e2 == [{"n": 0, "rho": None}]
