@@ -9,7 +9,10 @@ factory below plus Spark's own DataSource registry for anything else.
 Scale posture: readers take explicit schemas (no inferSchema on the
 100 TB path), writers partition by user-chosen columns, and the
 parquet store relies on Catalyst pushdown (PushedFilters/ReadSchema)
-rather than any engine-side filtering.
+rather than any engine-side filtering.  ``load_table`` infers a
+table's schema once per file identity (``table_schema``: the absolute
+path plus inode, size and mtime of every data file) and reads with
+that explicit schema from then on, so a warm load runs no Spark job.
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ import os
 from typing import Any, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from bubbles_spark.schema import FieldList
 
@@ -35,15 +39,43 @@ TPCH_TABLES = (
 )
 
 
+# abspath -> (file identity, StructType); see table_schema
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def table_schema(spark: SparkSession, path: str) -> StructType:
+    """The parquet table's ``StructType``, inferred by Spark (one
+    footer-reading job) only when the table's file identity changed
+    since the last call.  The identity is ``(path, st_ino, st_size,
+    st_mtime_ns)`` of the file, or of every data file under a directory
+    table (skipping names that start with ``_`` or ``.``, as Spark
+    does), so any rewrite, append or schema change infers again.  The
+    returned object is shared: do not mutate it."""
+    path = os.path.abspath(path)
+    files = [path] if os.path.isfile(path) else []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if d[0] not in "_.")
+        files += [os.path.join(root, n) for n in sorted(names) if n[0] not in "_."]
+    stats = [(f, os.stat(f)) for f in files]
+    ident = tuple((f, st.st_ino, st.st_size, st.st_mtime_ns) for f, st in stats)
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[0] != ident:
+        hit = _SCHEMAS[path] = (ident, spark.read.parquet(path).schema)
+    return hit[1]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver-generated parquet table (TESTDATA.md).
+    """Read one driver-generated parquet table (TESTDATA.md) with the
+    schema ``table_schema`` keeps for it.
 
     Handles parquet TIMESTAMP(NANOS) (events.ts), which Spark has no
-    native type for: read as long (legacy conf) and truncate to a µs
-    timestamp — matching DuckDB, which also truncates ns → µs.
+    native type for: read as long and truncate to a µs timestamp —
+    matching DuckDB, which also truncates ns → µs.  Reading ns as long
+    needs ``spark.sql.legacy.parquet.nanosAsLong`` (set by
+    ``session.get_spark``) at inference and again at execution time.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(table_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
 

@@ -411,7 +411,7 @@ def connected_components(
         seq[0] += 1
         p = f"{workdir}/s{seq[0]}"
         df.write.mode("overwrite").parquet(p)
-        return spark.read.parquet(p)
+        return spark.read.schema(df.schema).parquet(p)
 
     def cut_counting(df: DataFrame, flag: str) -> tuple[DataFrame, int]:
         """cut() + "how many rows have boolean ``flag`` set".  The flag

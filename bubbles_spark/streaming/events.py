@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bubbles_spark.io import table_schema
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -60,9 +62,10 @@ def read_testdata_event_stream(
     ``sf_dir/events.parquet`` single file).
 
     The testdata's physical ts type has varied across driver versions
-    (TIMESTAMP(NANOS) → µs).  Probe with a metadata-only batch read
-    (same path io.load_table takes) and only apply the legacy
-    nanos-as-long → µs truncation when the file actually carries ns.
+    (TIMESTAMP(NANOS) → µs).  Take the file's schema from
+    ``io.table_schema`` (the cache io.load_table reads through) and
+    only apply the legacy nanos-as-long → µs truncation when the file
+    actually carries ns.
     µs files read as TIMESTAMP_NTZ, which Spark's watermark machinery
     rejects (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE) — cast to TIMESTAMP,
     a value-preserving move under the session's pinned UTC timezone.
@@ -70,14 +73,13 @@ def read_testdata_event_stream(
     streaming results stay oracle-comparable."""
     import os
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = os.path.join(sf_dir, "events.parquet")
     try:
         _set_state_shard_hint(os.path.getsize(src))
     except OSError:
         pass
-    probe = spark.read.parquet(src)
-    ts_dt = dict(probe.dtypes).get("ts", "timestamp")
+    probe = table_schema(spark, src)
+    ts_dt = probe["ts"].dataType.simpleString() if "ts" in probe.names else "timestamp"
 
     if ts_dt == "bigint":  # legacy TIMESTAMP(NANOS) read as long
         ts_field = T.StructField("ts", T.LongType())
@@ -1135,9 +1137,9 @@ def read_testdata_table_stream(
 ) -> DataFrame:
     """File-source stream over any driver-generated testdata table
     (single-file layout ``sf_dir/{name}.parquet``).  Schema comes
-    from a metadata-only batch probe — file-source streams require an
-    explicit schema, and probing keeps it in lockstep with whatever
-    the driver wrote."""
+    from ``io.table_schema`` — file-source streams require an explicit
+    schema, and its file-identity cache keeps it in lockstep with
+    whatever the driver wrote."""
     import os
 
     src = os.path.join(sf_dir, f"{name}.parquet")
@@ -1145,11 +1147,10 @@ def read_testdata_table_stream(
         _set_state_shard_hint(os.path.getsize(src))
     except OSError:
         pass
-    probe = spark.read.parquet(src)
     return read_event_stream(
         spark,
         sf_dir,
-        schema=probe.schema,
+        schema=table_schema(spark, src),
         max_files_per_trigger=max_files_per_trigger,
         glob_filter=f"{name}.parquet",
     )
@@ -1345,7 +1346,8 @@ def stream_to_parquet(
 ) -> DataFrame:
     """Streaming sink to a parquet directory (availableNow — drain
     everything currently available, then stop) and return a batch
-    reader over the written files.
+    reader over the written files, with the schema the stream wrote
+    (no inference job).
 
     The checkpoint directory gives exactly-once file-sink semantics:
     a restart resumes from the last committed offsets and never
@@ -1381,7 +1383,10 @@ def stream_to_parquet(
             f"stream_to_parquet: stream did not drain within {timeout_s}s; "
             f"committed files under {path!r} are safe to resume from"
         )
-    return spark.read.parquet(path)
+    # partition columns come last in a parquet directory's schema
+    parts = [stream_df.schema[c] for c in partition_by or ()]
+    cols = [f for f in stream_df.schema if f not in parts] + parts
+    return spark.read.schema(T.StructType(cols)).parquet(path)
 
 
 def run_batchlike(
