@@ -335,7 +335,18 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from bubbles_spark.session import get_spark
 
-    spark = get_spark("bubbles_spark_bench")
+    # stderr keeps only real warnings: no progress bars, and the
+    # benchmark's log4j2 config drops the benign late-heartbeat
+    # accumulator traces
+    here = os.path.dirname(os.path.abspath(__file__))
+    log4j = os.path.join(here, "perfbench", "log4j2.properties")
+    spark = get_spark(
+        "bubbles_spark_bench",
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.extraJavaOptions": f"-Dlog4j2.configurationFile=file:{log4j}",
+        },
+    )
     qs = entrymod.queries()
 
     def run(name: str) -> float:

@@ -781,6 +781,42 @@ def _small_enough(df: DataFrame) -> bool:
     return df.limit(_SMALL_RANK_ROWS + 1).count() <= _SMALL_RANK_ROWS
 
 
+def _one_task_fold(df: DataFrame, schema, fold) -> DataFrame:
+    """Run ``fold`` once over the whole (small, pinned) input in one
+    Arrow task: the batches are concatenated into one pandas frame
+    and ``fold(pdf)`` returns the result frame (``schema``).  No rows
+    in, no rows out.  The one harness behind every small-input fast
+    path (the rank tests' cell folds, the graph solves,
+    connected_components' union-find); callers go through the module
+    attribute so one patch sees every fold."""
+
+    def _stats(it):
+        import pandas as pd
+
+        pdfs = [p for p in it if len(p)]
+        if pdfs:
+            yield fold(
+                pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+            )
+
+    return df.coalesce(1).mapInPandas(_stats, schema=schema)
+
+
+def _q_halfup(x):
+    """Spark's ``round(double, 0)`` replayed in numpy, elementwise:
+    HALF_UP over the shortest-decimal rendering, which for
+    non-negative doubles equals round-half-even EXCEPT at exact binary
+    .5 fractions (a ".5" rendering round-trips only for an exact .5
+    double), where HALF_UP adds one."""
+    import numpy as np
+
+    r = np.round(x)
+    half = (x - np.floor(x)) == 0.5
+    if np.any(half):
+        r = np.where(half, np.floor(x) + 1.0, r)
+    return r
+
+
 def _bucket_search(proxy: Column, bounds: list[float], lo: int = 0) -> Column:
     """Number of ``bounds`` (sorted ascending) strictly below ``proxy``
     as a BALANCED binary-search when-tree: O(log p) comparisons per

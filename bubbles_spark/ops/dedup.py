@@ -34,6 +34,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bubbles_spark.ops import core, graph
 from bubbles_spark.ops.textan import _tokens
 
 # At most ONE MinHash signature cache is live at a time: each
@@ -363,11 +364,6 @@ def minhash_dedup(
     return df.join(losers, id_col, "left_anti")
 
 
-# Edge-count ceiling for the connected_components single-task
-# union-find fast path.  Module-level so tests can pin either path.
-_CC_FAST_PATH_MAX_EDGES = 2_000_000
-
-
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -446,11 +442,12 @@ def connected_components(
         # EXACTLY the big path's output (component = min node id —
         # partitioning- and order-independent), so results are
         # bit-identical; the iterative path stays the contract for
-        # graphs that outgrow one task.
+        # graphs that outgrow one task.  The edge cap is the graph
+        # module's linear-work cap, read at call time.
         n_edges = edges.count()
-        if n_edges <= _CC_FAST_PATH_MAX_EDGES:
+        if n_edges <= graph._SMALL_GRAPH_MAX_EDGES:
 
-            def _union_find(batches):
+            def _union_find(pdf):
                 import pandas as pd
 
                 parent: dict = {}
@@ -463,22 +460,21 @@ def connected_components(
                         parent[x], x = r, parent[x]
                     return r
 
-                for pdf in batches:
-                    for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
-                        if u not in parent:
-                            parent[u] = u
-                        if v not in parent:
-                            parent[v] = v
-                        ru, rv = find(u), find(v)
-                        if ru != rv:
-                            parent[ru] = rv
+                for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
+                    if u not in parent:
+                        parent[u] = u
+                    if v not in parent:
+                        parent[v] = v
+                    ru, rv = find(u), find(v)
+                    if ru != rv:
+                        parent[ru] = rv
                 comp_min: dict = {}
                 for x in parent:
                     r = find(x)
                     m = comp_min.get(r)
                     if m is None or x < m:
                         comp_min[r] = x
-                yield pd.DataFrame(
+                return pd.DataFrame(
                     {
                         "node_id": list(parent),
                         "component": [comp_min[find(x)] for x in parent],
@@ -488,8 +484,8 @@ def connected_components(
             # node dtype follows the input (string keys order the same
             # under Python < and Spark's UTF8 binary compare)
             t = edges.schema["u"].dataType.simpleString()
-            out = edges.coalesce(1).mapInPandas(
-                _union_find, schema=f"node_id {t}, component {t}"
+            out = core._one_task_fold(
+                edges, f"node_id {t}, component {t}", _union_find
             )
             # materialize OFF the temp dir before the finally-cleanup
             return out.localCheckpoint()

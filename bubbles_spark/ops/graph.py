@@ -22,14 +22,16 @@ lower-(degree, id) endpoint to the higher, so each wedge is
 enumerated exactly once at the low-degree corner; the wedge fanout
 per node is then O(sqrt(m)) on any graph (Schank/Wagner), and the
 close step is an equi-join against the oriented edge set.  PageRank
-is one shuffle per iteration (contributions keyed by dst), with
-``localCheckpoint`` truncating lineage per round.
+is one shuffle per iteration (contributions keyed by dst), with one
+final ``localCheckpoint`` materializing the result.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bubbles_spark.ops import core
 
 __all__ = [
     "degrees",
@@ -46,14 +48,15 @@ __all__ = [
 # 5-30x more than solving the whole graph in ONE mapInPandas task,
 # while every score these ops emit is either an exact integer or a
 # replayable fixed IEEE sequence — so the local solve is bit-identical
-# and pinned against the distributed path in tests.  The thresholds
+# and pinned against the distributed path in tests.  Every local solve
+# is a ``fold(pdf)`` run by ``core._one_task_fold``.  The thresholds
 # bound one task's MEMORY/WORK (module constants, not tuning knobs):
-# linear-work ops (pagerank / hits) share connected_components' edge
-# cap; wedge-enumerating ops (triangles / link scores) do O(m^1.5)
-# local work, so their cap keeps that under ~1e8 set operations.
+# the linear-work ops (pagerank, hits and dedup.connected_components'
+# union-find) share one edge cap; wedge-enumerating ops (triangles /
+# link scores) do O(m^1.5) local work, so their cap keeps that under
+# ~1e8 set operations.
 _SMALL_GRAPH_MAX_EDGES = 2_000_000
 _WEDGE_FAST_PATH_MAX_EDGES = 100_000
-_WEIGHTED_PAGERANK_LOCAL = False  # measured-negative; see pagerank()
 
 
 _Q18 = None  # built lazily so decimal import stays off the hot path
@@ -68,8 +71,8 @@ def _q18_half_up(d: float) -> int:
     rounds HALF_UP.  Measured, not assumed: quantizing the EXACT
     binary expansion instead diverges from the distributed plan at
     1e-18 (e.g. 0.01875 -> ...749999999999999999 exact-binary vs
-    ...750000000000000000 via toString), caught by
-    test_graph_fast_and_distributed_paths_agree[pagerank_w]."""
+    ...750000000000000000 via toString); the unweighted replay is
+    pinned by test_graph_fast_and_distributed_paths_agree[pagerank]."""
     global _Q18
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -151,14 +154,11 @@ def triangle_count(
     # (paths pinned against each other in test_affinity_graph)
     if und.count() <= _WEDGE_FAST_PATH_MAX_EDGES:
 
-        def _tri_local(batches):
+        def _tri_local(pdf):
             import pandas as pd
 
-            lo_all: list = []
-            hi_all: list = []
-            for pdf in batches:
-                lo_all.extend(pdf["lo"].tolist())
-                hi_all.extend(pdf["hi"].tolist())
+            lo_all = pdf["lo"].tolist()
+            hi_all = pdf["hi"].tolist()
             deg: dict = {}
             for a, b in zip(lo_all, hi_all):
                 deg[a] = deg.get(a, 0) + 1
@@ -180,15 +180,13 @@ def triangle_count(
                         tri[u] = tri.get(u, 0) + 1
                         tri[v] = tri.get(v, 0) + 1
                         tri[w] = tri.get(w, 0) + 1
-            if not tri:
-                return
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {"node": list(tri), "triangles": list(tri.values())}
             )
 
         t = und.schema["lo"].dataType.simpleString()
-        out = und.coalesce(1).mapInPandas(
-            _tri_local, schema=f"node {t}, triangles bigint"
+        out = core._one_task_fold(
+            und, f"node {t}, triangles bigint", _tri_local
         ).localCheckpoint()
         und.unpersist()
         return out
@@ -277,8 +275,7 @@ def pagerank(
 
     Scale shape: one shuffle per iteration (contributions keyed by
     dst, map-side partial decimal sums), vocabulary-sized rank and
-    degree tables, ``localCheckpoint`` per round so iteration N never
-    replays 1..N−1.
+    degree tables, one final ``localCheckpoint``.
 
     Output: node, rank (double)."""
     if weight_col is not None:
@@ -294,78 +291,48 @@ def pagerank(
         )
     else:
         e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct().persist()
-    # small-graph fast path: replay the SAME fixed IEEE sequence in
-    # one task — per-edge share is one IEEE division (x one multiply
-    # when weighted), contributions quantize HALF_UP to 1e-18 units
-    # over the exact binary double (integer-unit twin of the
-    # DECIMAL(38,18) cast), per-dst sums are exact integer adds, and
-    # the update is base + d * correctly-rounded-double(sum) — every
+    # small-graph fast path (unweighted only): replay the SAME fixed
+    # IEEE sequence in one task — the per-source share is one IEEE
+    # division, contributions quantize HALF_UP to 1e-18 units over the
+    # shortest-decimal rendering (_q18_half_up, the integer-unit twin
+    # of the DECIMAL(38,18) cast), per-dst sums are exact integer adds,
+    # and the update is base + d * correctly-rounded-double(sum) — every
     # step matches the distributed plan operation-for-operation, so
-    # ranks are bit-identical (pinned in test_affinity_graph)
-    # WEIGHTED pagerank stays on the distributed path at every size
-    # (flag exists so tests can still pin the local replay): its
-    # per-edge share is distinct per edge, so the local replay pays
-    # one shortest-repr Decimal quantization PER EDGE PER ITERATION
-    # (~1.5us each; the unweighted path quantizes per SOURCE NODE
-    # only).  Measured r13 on the 591k-edge bench graph: 3.7s
-    # distributed -> 6.1s local — a regression.
-    if (
-        (weight_col is None or _WEIGHTED_PAGERANK_LOCAL)
-        and 0 < e.count() <= _SMALL_GRAPH_MAX_EDGES
-    ):
+    # ranks are bit-identical (pinned in test_affinity_graph).  A
+    # weighted replay would quantize once per EDGE per iteration, not
+    # once per source, and measured slower than the distributed plan.
+    if weight_col is None and 0 < e.count() <= _SMALL_GRAPH_MAX_EDGES:
         _iters, _damp = int(iters), float(damping)
-        _weighted = weight_col is not None
 
-        def _pr_local(batches):
+        def _pr_local(pdf):
+            from decimal import Decimal
+
             import pandas as pd
 
-            us: list = []
-            vs: list = []
-            ws: list = []
-            for pdf in batches:
-                us.extend(pdf["u"].tolist())
-                vs.extend(pdf["v"].tolist())
-                if _weighted:
-                    ws.extend(pdf["__w"].tolist())
+            us = pdf["u"].tolist()
+            vs = pdf["v"].tolist()
             nodes_l = set(us) | set(vs)
             n_l = len(nodes_l)
             base_l = (1.0 - _damp) / float(n_l)
             od: dict = {}
-            if _weighted:
-                # exact decimal weight sums per source (Arrow hands
-                # the decimal(2x,6) column over as decimal.Decimal)
-                for u, w in zip(us, ws):
-                    od[u] = od.get(u, 0) + w
-                share = [
-                    float(w) / float(od[u]) for u, w in zip(us, ws)
-                ]
-            else:
-                for u in us:
-                    od[u] = od.get(u, 0) + 1
+            for u in us:
+                od[u] = od.get(u, 0) + 1
             ranks = {x: 1.0 / float(n_l) for x in nodes_l}
-            from decimal import Decimal
-
             for _ in range(_iters):
+                q = {
+                    u: _q18_half_up(ranks[u] / float(c))
+                    for u, c in od.items()
+                }
                 s: dict = {}
-                if _weighted:
-                    for u, v, sh in zip(us, vs, share):
-                        s[v] = s.get(v, 0) + _q18_half_up(
-                            ranks[u] * sh
-                        )
-                else:
-                    q = {
-                        u: _q18_half_up(ranks[u] / float(c))
-                        for u, c in od.items()
-                    }
-                    for u, v in zip(us, vs):
-                        s[v] = s.get(v, 0) + q[u]
+                for u, v in zip(us, vs):
+                    s[v] = s.get(v, 0) + q[u]
                 ranks = {
                     x: base_l
                     + _damp
                     * float(Decimal(s.get(x, 0)).scaleb(-18))
                     for x in nodes_l
                 }
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {"node": list(ranks), "rank": list(ranks.values())}
             )
 
@@ -375,8 +342,8 @@ def pagerank(
             .schema["node"]
             .dataType.simpleString()
         )
-        out = e.coalesce(1).mapInPandas(
-            _pr_local, schema=f"node {t}, rank double"
+        out = core._one_task_fold(
+            e, f"node {t}, rank double", _pr_local
         ).localCheckpoint()
         e.unpersist()
         return out
@@ -486,16 +453,13 @@ def hits_scores(
     if e.count() <= _SMALL_GRAPH_MAX_EDGES:
         _iters = int(iters)
 
-        def _hits_local(batches):
+        def _hits_local(pdf):
             from decimal import Decimal
 
             import pandas as pd
 
-            us: list = []
-            vs: list = []
-            for pdf in batches:
-                us.extend(pdf["u"].tolist())
-                vs.extend(pdf["v"].tolist())
+            us = pdf["u"].tolist()
+            vs = pdf["v"].tolist()
             nodes_l = set(us) | set(vs)
             hub = {x: 1 for x in nodes_l}
             auth: dict = {}
@@ -514,9 +478,7 @@ def hits_scores(
                 (x, Decimal(hub.get(x, 0)), Decimal(auth.get(x, 0)))
                 for x in nodes_l
             ]
-            yield pd.DataFrame(
-                rows, columns=["node", "hub", "auth"]
-            )
+            return pd.DataFrame(rows, columns=["node", "hub", "auth"])
 
         t = (
             e.select(F.col("u").alias("node"))
@@ -524,9 +486,8 @@ def hits_scores(
             .schema["node"]
             .dataType.simpleString()
         )
-        out = e.coalesce(1).mapInPandas(
-            _hits_local,
-            schema=f"node {t}, hub decimal(38,0), auth decimal(38,0)",
+        out = core._one_task_fold(
+            e, f"node {t}, hub decimal(38,0), auth decimal(38,0)", _hits_local
         ).localCheckpoint()
         e.unpersist()
         return out
@@ -615,19 +576,14 @@ def link_scores(
         _minc = int(min_common)
         _maxhub = None if max_hub_degree is None else int(max_hub_degree)
 
-        def _ls_local(batches):
+        def _ls_local(pdf):
             import math
             from decimal import ROUND_HALF_UP, Decimal
 
             import pandas as pd
 
-            lo_all: list = []
-            hi_all: list = []
-            for pdf in batches:
-                lo_all.extend(pdf["lo"].tolist())
-                hi_all.extend(pdf["hi"].tolist())
             adj_l: dict = {}
-            for a, b in zip(lo_all, hi_all):
+            for a, b in zip(pdf["lo"].tolist(), pdf["hi"].tolist()):
                 adj_l.setdefault(a, set()).add(b)
                 adj_l.setdefault(b, set()).add(a)
             pairs: dict = {}
@@ -638,7 +594,10 @@ def link_scores(
                     continue
                 # F.round(double, 0) rounds the shortest-decimal
                 # rendering HALF_UP (BigDecimal.valueOf semantics,
-                # same as the DECIMAL casts — see _q18_half_up)
+                # same as the DECIMAL casts — see _q18_half_up).
+                # Replayed inline, not by core._q_halfup: the fold
+                # references no bubbles_spark global, so its Python
+                # worker never imports the package
                 wz = int(
                     Decimal(repr(1e9 / math.log(float(dz)))).quantize(
                         one, rounding=ROUND_HALF_UP
@@ -668,9 +627,7 @@ def link_scores(
                 for (a, b), (c, wsum) in pairs.items()
                 if c >= _minc
             ]
-            if not rows:
-                return
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 rows,
                 columns=[
                     "node_a",
@@ -683,12 +640,11 @@ def link_scores(
             )
 
         t = und_c.schema["lo"].dataType.simpleString()
-        out = und_c.coalesce(1).mapInPandas(
+        out = core._one_task_fold(
+            und_c,
+            f"node_a {t}, node_b {t}, common_neighbors bigint, "
+            "union_size bigint, jaccard double, adamic_adar double",
             _ls_local,
-            schema=(
-                f"node_a {t}, node_b {t}, common_neighbors bigint, "
-                "union_size bigint, jaccard double, adamic_adar double"
-            ),
         ).localCheckpoint()
         und_c.unpersist()
         return out

@@ -29,6 +29,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bubbles_spark.ops import core
+
 __all__ = [
     "welch_t_test",
     "anova_oneway",
@@ -494,39 +496,6 @@ def _cells_fit(
     return max_grid is None or int(sz["__k"]) * int(sz["__nv"]) <= max_grid
 
 
-def _one_task_fold(cells: DataFrame, schema, fold) -> DataFrame:
-    """Run ``fold`` once over the whole pinned cell table in one Arrow
-    task: the batches are concatenated into one pandas frame and
-    ``fold(pdf)`` returns the result frame (``schema``).  No rows in,
-    no rows out."""
-
-    def _stats(it):
-        import pandas as pd
-
-        pdfs = [p for p in it if len(p)]
-        if pdfs:
-            yield fold(
-                pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-            )
-
-    return cells.coalesce(1).mapInPandas(_stats, schema=schema)
-
-
-def _q_halfup(x):
-    """Spark's ``round(double, 0)`` replayed in numpy, elementwise:
-    HALF_UP over the shortest-decimal rendering, which for
-    non-negative doubles equals round-half-even EXCEPT at exact binary
-    .5 fractions (a ".5" rendering round-trips only for an exact .5
-    double), where HALF_UP adds one."""
-    import numpy as np
-
-    r = np.round(x)
-    half = (x - np.floor(x)) == 0.5
-    if np.any(half):
-        r = np.where(half, np.floor(x) + 1.0, r)
-    return r
-
-
 def _exact_int_sum(r) -> int:
     """Exact sum of an array of integral doubles (the decimal(38,0)
     folds): one int64 vector sum when provably in range, unbounded
@@ -682,7 +651,7 @@ def _cva_local_stats(cva: DataFrame) -> DataFrame:
             }
         )
 
-    return _one_task_fold(cva, schema, fold)
+    return core._one_task_fold(cva, schema, fold)
 
 
 def _ab_local_stats(cva: DataFrame) -> DataFrame:
@@ -691,7 +660,7 @@ def _ab_local_stats(cva: DataFrame) -> DataFrame:
     the exact block-score sum Σa, and the HALF_UP micro-quantized
     ``c_a·S/c`` and ``S²/c`` block-term sums (see ``ansari_bradley``
     for the closed forms; the per-block IEEE sequences and the
-    quantization are replayed exactly by ``_q_halfup``)."""
+    quantization are replayed exactly by ``core._q_halfup``)."""
     from pyspark.sql.types import (
         DecimalType,
         LongType,
@@ -747,12 +716,12 @@ def _ab_local_stats(cva: DataFrame) -> DataFrame:
                 "n_a": pd.Series([int(ca.sum())], dtype="int64"),
                 "__nt": pd.Series([n], dtype="int64"),
                 "__sa": [Decimal(sa)],
-                "__wq": [Decimal(_exact_int_sum(_q_halfup(w_term * 1e6)))],
-                "__sq": [Decimal(_exact_int_sum(_q_halfup(sq_term * 1e6)))],
+                "__wq": [Decimal(_exact_int_sum(core._q_halfup(w_term * 1e6)))],
+                "__sq": [Decimal(_exact_int_sum(core._q_halfup(sq_term * 1e6)))],
             }
         )
 
-    return _one_task_fold(cva, schema, fold)
+    return core._one_task_fold(cva, schema, fold)
 
 
 def mann_whitney_u(
@@ -832,7 +801,7 @@ def _kw_local_stats(cgv: DataFrame) -> DataFrame:
     dense value ranks; each group's term repeats the same IEEE
     sequence ``(2R_g)²/(4·n_g)·1e6`` on the same correctly-rounded
     double operands with the HALF_UP shortest-decimal quantization
-    (``_q_halfup``); the cubic tie sum uses unbounded Python ints."""
+    (``core._q_halfup``); the cubic tie sum uses unbounded Python ints."""
     from pyspark.sql.types import (
         DecimalType,
         LongType,
@@ -888,12 +857,12 @@ def _kw_local_stats(cgv: DataFrame) -> DataFrame:
             {
                 "k": pd.Series([k], dtype="int64"),
                 "n": pd.Series([n], dtype="int64"),
-                "__s": [Decimal(_exact_int_sum(_q_halfup(term)))],
+                "__s": [Decimal(_exact_int_sum(core._q_halfup(term)))],
                 "__tie3": [Decimal(tie3)],
             }
         )
 
-    return _one_task_fold(cgv, schema, fold)
+    return core._one_task_fold(cgv, schema, fold)
 
 
 def kruskal_wallis(
@@ -1224,7 +1193,7 @@ def _spearman_local_moments(cells: DataFrame) -> DataFrame:
             }
         )
 
-    return _one_task_fold(cells, schema, fold)
+    return core._one_task_fold(cells, schema, fold)
 
 
 def _spearman_moments(base: DataFrame) -> DataFrame:
@@ -1279,7 +1248,6 @@ def _spearman_suffstats(cells: DataFrame) -> DataFrame:
     cells-sized tables, and every sum regroups the same exact
     integers (Σ over rows of f(r2x) = Σ over cells of count·f(r2x)),
     so all downstream operands stay bit-identical."""
-    from bubbles_spark.ops import core as _core
     from bubbles_spark.ops.drift import (
         _cum_counts_prebuilt,
         _cum_counts_table,
@@ -1293,7 +1261,7 @@ def _spearman_suffstats(cells: DataFrame) -> DataFrame:
     # ONE early-terminating limit probe on the pinned cells sizes BOTH
     # counts tables: distinct values ≤ cells, so a small cell table
     # proves both small paths and the per-table probes are skipped.
-    hint = True if _core._small_enough(cells) else None
+    hint = True if core._small_enough(cells) else None
     cgx = cells.groupBy("__g", "__x").agg(
         F.sum("__cc").cast("bigint").alias("__c")
     )
@@ -1309,7 +1277,7 @@ def _spearman_suffstats(cells: DataFrame) -> DataFrame:
     )
     cum = (
         _cum_counts_table(g, "__g", "__y", small_hint=hint)
-        if _core._rank_proxy(g, "__y") is not None
+        if core._rank_proxy(g, "__y") is not None
         else _grouped_cum_counts_by_pid(g, "__g", "__y")
     )
     return cum.withColumn("__r2y", r2())
@@ -2475,7 +2443,7 @@ def _mood_local_stats(cgv: DataFrame) -> DataFrame:
     the above-median counts are pure integer facts on dense value
     ranks; each term repeats ``(a·N − n_g·A)² / n_g · 1e6`` as the
     same IEEE sequence with HALF_UP shortest-decimal quantization
-    (``_q_halfup``)."""
+    (``core._q_halfup``)."""
     from pyspark.sql.types import (
         DecimalType,
         LongType,
@@ -2529,11 +2497,11 @@ def _mood_local_stats(cgv: DataFrame) -> DataFrame:
                 "n": pd.Series([n], dtype="int64"),
                 "n_above": pd.Series([ta], dtype="int64"),
                 "__med": pd.Series([med_val]),
-                "__s": [Decimal(_exact_int_sum(_q_halfup(term)))],
+                "__s": [Decimal(_exact_int_sum(core._q_halfup(term)))],
             }
         )
 
-    return _one_task_fold(cgv, schema, fold)
+    return core._one_task_fold(cgv, schema, fold)
 
 
 def mood_median_test(
@@ -2716,7 +2684,7 @@ def _jt_local_stats(cgv: DataFrame) -> DataFrame:
             }
         )
 
-    return _one_task_fold(cgv, schema, fold)
+    return core._one_task_fold(cgv, schema, fold)
 
 
 def jonckheere_terpstra(
@@ -3154,7 +3122,7 @@ def _ad_local_stats(cgv: DataFrame) -> DataFrame:
     the same IEEE sequence ``l/N · (num·num) / den`` on the same
     correctly-rounded double operands, and both 1e-6
     micro-quantizations reproduced as Spark computes them
-    (``_q_halfup``) — the r13 graph-replay quantization discipline."""
+    (``core._q_halfup``) — the r13 graph-replay quantization discipline."""
     from pyspark.sql.types import (
         DecimalType,
         IntegerType,
@@ -3209,12 +3177,12 @@ def _ad_local_stats(cgv: DataFrame) -> DataFrame:
                     * (num * num)
                     / den.astype(np.float64)[None, :]
                 )
-                qt = _q_halfup(term * 1e6)[:, ok]
+                qt = core._q_halfup(term * 1e6)[:, ok]
             # per-group quantized term sums, then the per-group inner
             # term re-quantized and summed across groups
             tq = np.array([float(_exact_int_sum(row)) for row in qt])
             inner = tq / 1e6 / ng.astype(np.float64)
-            sq = _exact_int_sum(_q_halfup(inner * 1e6))
+            sq = _exact_int_sum(core._q_halfup(inner * 1e6))
         return pd.DataFrame(
             {
                 "k": pd.Series([k], dtype="int64"),
@@ -3224,7 +3192,7 @@ def _ad_local_stats(cgv: DataFrame) -> DataFrame:
             }
         )
 
-    return _one_task_fold(cgv, schema, fold)
+    return core._one_task_fold(cgv, schema, fold)
 
 
 def anderson_darling_k(

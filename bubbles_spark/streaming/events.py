@@ -1482,6 +1482,10 @@ def admit_stream_against_index(
     dedup_kw)."""
     from bubbles_spark.ops import dedup as _dedup
 
+    # no stateful operator consumes the source reader's state-shard
+    # hint here: drop it, or the next drain on this thread sizes its
+    # state shards from this source
+    _STATE_SHARD_HINT.pop(threading.get_ident(), None)
     spark = docs.sparkSession
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:

@@ -17,6 +17,23 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def fold_calls(monkeypatch):
+    """Record every call of ``core._one_task_fold``, the harness behind
+    every small-input fast path; the list grows by one per call."""
+    from bubbles_spark.ops import core
+
+    calls: list = []
+    real = core._one_task_fold
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(core, "_one_task_fold", spy)
+    return calls
+
+
 @pytest.fixture(scope="session")
 def people(spark):
     """The reference's canonical tiny fixture shape: (id, label, amount)."""

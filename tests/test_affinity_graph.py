@@ -249,14 +249,39 @@ def _bigger_graph():
     return edges
 
 
-@pytest.mark.parametrize("op", ["triangles", "links", "hits", "pagerank",
-                                "pagerank_w"])
-def test_graph_fast_and_distributed_paths_agree(spark, monkeypatch, op):
+_GRAPH_OPS = ["triangles", "links", "hits", "pagerank", "pagerank_w"]
+# degenerate inputs beside the mixed graph: each op must agree across
+# paths and keep its documented columns even with nothing to score
+_DEGENERATE_GRAPHS = {
+    "empty": [],
+    "self_loops": [(3, 3), (7, 7)],
+    "one_edge": [(1, 2)],
+}
+_GRAPH_OUT_COLS = {
+    "triangles": ["node", "triangles"],
+    "links": ["node_a", "node_b", "common_neighbors", "union_size",
+              "jaccard", "adamic_adar"],
+    "hits": ["node", "hub", "auth"],
+    "pagerank": ["node", "rank"],
+    "pagerank_w": ["node", "rank"],
+}
+
+
+@pytest.mark.parametrize(
+    "op,shape",
+    [pytest.param(op, None, id=op) for op in _GRAPH_OPS]
+    + [pytest.param(op, g, id=f"{op}-{g}")
+       for g in _DEGENERATE_GRAPHS for op in _GRAPH_OPS],
+)
+def test_graph_fast_and_distributed_paths_agree(
+    spark, monkeypatch, fold_calls, op, shape
+):
     """The small-graph single-task fast paths must be BIT-identical to
     the distributed plans — exact == on every column, floats included
     (the contract that lets the adaptive dispatch never change a
-    query's oracle hash)."""
-    edges = _bigger_graph()
+    query's oracle hash).  The fold must run when unforced and not
+    when forced; weighted pagerank never folds."""
+    edges = _bigger_graph() if shape is None else _DEGENERATE_GRAPHS[shape]
     df = spark.createDataFrame(edges, "src long, dst long")
     wdf = spark.createDataFrame(
         [(u, v, float((u * 7 + v * 3) % 11) / 4.0 + 0.25)
@@ -264,36 +289,45 @@ def test_graph_fast_and_distributed_paths_agree(spark, monkeypatch, op):
         "src long, dst long, w double",
     )
 
-    def run():
+    def result():
         if op == "triangles":
-            return sorted(map(tuple, graph.triangle_count(df).collect()))
+            return graph.triangle_count(df)
         if op == "links":
-            return sorted(map(tuple, graph.link_scores(df).collect()))
+            return graph.link_scores(df)
         if op == "hits":
-            return sorted(
-                (r["node"], int(r["hub"]), int(r["auth"]))
-                for r in graph.hits_scores(df, iters=3).collect()
-            )
+            return graph.hits_scores(df, iters=3)
         if op == "pagerank":
-            return sorted(map(tuple, graph.pagerank(
-                df, iters=3, damping=0.85
-            ).collect()))
-        return sorted(map(tuple, graph.pagerank(
-            wdf, iters=3, damping=0.85, weight_col="w"
-        ).collect()))
+            return graph.pagerank(df, iters=3, damping=0.85)
+        return graph.pagerank(wdf, iters=3, damping=0.85, weight_col="w")
 
-    # weighted pagerank's local replay is dispatch-disabled (measured
-    # slower) but stays pinned here via the test-only flag
-    monkeypatch.setattr(graph, "_WEIGHTED_PAGERANK_LOCAL", True)
-    fast = run()
+    def run():
+        out = result()
+        if op == "hits":
+            rows = sorted(
+                (r["node"], int(r["hub"]), int(r["auth"]))
+                for r in out.collect()
+            )
+        else:
+            rows = sorted(map(tuple, out.collect()))
+        return out.columns, rows
+
+    fast_cols, fast = run()
+    fast_folds = len(fold_calls)
     monkeypatch.setattr(graph, "_SMALL_GRAPH_MAX_EDGES", -1)
     monkeypatch.setattr(graph, "_WEDGE_FAST_PATH_MAX_EDGES", -1)
-    slow = run()
+    slow_cols, slow = run()
     assert fast == slow
-    assert len(fast) > 0
+    assert fast_cols == slow_cols == _GRAPH_OUT_COLS[op]
+    # pagerank solves no empty graph in one task (the distributed
+    # path's zero-node early return answers it)
+    folds = op != "pagerank_w" and not (op == "pagerank" and not edges)
+    assert (fast_folds >= 1) == folds
+    assert len(fold_calls) == fast_folds
+    if shape is None:
+        assert len(fast) > 0
 
 
-def test_graph_fast_paths_string_ids(spark, monkeypatch):
+def test_graph_fast_paths_string_ids(spark, monkeypatch, fold_calls):
     # string node ids order the same under Python < and Spark's UTF8
     # binary compare — the orientation / pair-key contract
     edges = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"),
@@ -306,6 +340,9 @@ def test_graph_fast_paths_string_ids(spark, monkeypatch):
         return tri, ls
 
     fast = run()
+    assert len(fold_calls) >= 1
+    n = len(fold_calls)
     monkeypatch.setattr(graph, "_WEDGE_FAST_PATH_MAX_EDGES", -1)
     slow = run()
     assert fast == slow
+    assert len(fold_calls) == n

@@ -168,8 +168,28 @@ def test_connected_components_random_vs_union_find(spark):
     assert got == expect
 
 
+def _cc_fast_and_iterative(pairs, monkeypatch, fold_calls):
+    """connected_components over ``pairs`` on the fast path, then
+    forced onto the iterative path: both label maps, after asserting
+    the union-find fold ran only in the first run and that both
+    outputs carry the documented columns."""
+    from bubbles_spark.ops import graph
+
+    def run():
+        out = dedup.connected_components(pairs)
+        assert out.columns == ["node_id", "component"]
+        return {r["node_id"]: r["component"] for r in out.collect()}
+
+    fast = run()
+    assert len(fold_calls) == 1
+    monkeypatch.setattr(graph, "_SMALL_GRAPH_MAX_EDGES", -1)
+    slow = run()
+    assert len(fold_calls) == 1
+    return fast, slow
+
+
 def test_connected_components_fast_and_iterative_paths_agree(
-    spark, monkeypatch
+    spark, monkeypatch, fold_calls
 ):
     """The single-task union-find fast path and the iterative
     hook/pointer-jump path must emit identical (node_id, component)
@@ -185,17 +205,29 @@ def test_connected_components_fast_and_iterative_paths_agree(
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "id_a string, id_b string")
 
-    fast = {r["node_id"]: r["component"]
-            for r in dedup.connected_components(pairs).collect()}
-    monkeypatch.setattr(dedup, "_CC_FAST_PATH_MAX_EDGES", -1)
-    slow = {r["node_id"]: r["component"]
-            for r in dedup.connected_components(pairs).collect()}
+    fast, slow = _cc_fast_and_iterative(pairs, monkeypatch, fold_calls)
     assert fast == slow
     # min-label contract: every component label is the min node in it
     by_comp: dict = {}
     for n, c in fast.items():
         by_comp.setdefault(c, []).append(n)
     assert all(c == min(ns) for c, ns in by_comp.items())
+
+
+@pytest.mark.parametrize(
+    "edges,expect",
+    [
+        pytest.param([], {}, id="empty"),
+        pytest.param([(3, 3), (7, 7)], {3: 3, 7: 7}, id="self_loops"),
+        pytest.param([(2, 1)], {1: 1, 2: 1}, id="one_edge"),
+    ],
+)
+def test_connected_components_degenerate_paths_agree(
+    spark, monkeypatch, fold_calls, edges, expect
+):
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    fast, slow = _cc_fast_and_iterative(pairs, monkeypatch, fold_calls)
+    assert fast == slow == expect
 
 
 def test_connected_components_empty_pairs(spark):
@@ -212,9 +244,9 @@ def test_connected_components_leaves_session_ml_serializable(
     plans, and any subsequent Spark-ML UDF query on the same session
     dies with ``NotSerializableException: ObservationManager`` at
     task-closure serialization (caught by the full suite in r13)."""
-    from bubbles_spark.ops import textan
+    from bubbles_spark.ops import graph, textan
 
-    monkeypatch.setattr(dedup, "_CC_FAST_PATH_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "_SMALL_GRAPH_MAX_EDGES", -1)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )

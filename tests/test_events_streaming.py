@@ -726,6 +726,41 @@ def test_admit_stream_against_index(spark, tmp_path):
     assert [r["doc_id"] for r in third.collect()] == [101]
 
 
+def test_admission_drops_state_shard_hint(spark, tmp_path):
+    """A testdata stream reader leaves a state-shard size hint for the
+    next drain on its thread.  Admission runs no stateful operator, so
+    it must drop the hint: otherwise the next drain on the thread
+    narrows its state shards from the admitted file's size."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bubbles_spark.ops import dedup
+    from bubbles_spark.streaming import events as sevents
+
+    dog = "the quick brown fox jumps over the lazy dog"
+    pq.write_table(
+        pa.table({
+            "doc_id": [1, 2],
+            "text": [dog, "novel words never before seen in this corpus"],
+        }),
+        tmp_path / "documents.parquet",
+    )
+    index = dedup.minhash_index(
+        spark.createDataFrame([(1, dog)], "doc_id long, text string")
+    )
+    stream = sevents.read_testdata_table_stream(spark, str(tmp_path), "documents")
+    got = sevents.admit_stream_against_index(
+        stream, index, str(tmp_path / "out"), str(tmp_path / "ckpt"), threshold=0.9
+    )
+    assert [r["doc_id"] for r in got.collect()] == [2]
+    token = sevents._sane_state_shards(spark)
+    try:
+        assert token is None
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    finally:
+        sevents._restore_state_shards(spark, token)
+
+
 def test_drain_admitted_survives_commit_log_purge(spark, tmp_path):
     """Spark purges commit-log entries older than minBatchesToRetain;
     the drain must keep every admit_batch dir with id ≤ the LAST

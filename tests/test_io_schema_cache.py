@@ -133,12 +133,12 @@ def test_connected_components_cut_schema_matches_inferred(spark, monkeypatch):
     back with the schema it wrote; each must equal what Spark would
     infer from that file, nullability included (NOT NULL input columns
     read back nullable either way)."""
-    from bubbles_spark.ops import dedup
+    from bubbles_spark.ops import dedup, graph
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long not null, id_b long not null"
     )
-    monkeypatch.setattr(dedup, "_CC_FAST_PATH_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "_SMALL_GRAPH_MAX_EDGES", -1)
     seen = _explicit_vs_inferred(monkeypatch)
     comp = {r["node_id"]: r["component"] for r in dedup.connected_components(pairs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}

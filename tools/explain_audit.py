@@ -969,8 +969,9 @@ CHECKS = [
          (r"(BatchEvalPython|ArrowEvalPython|MapInPandas)", "pure codegen, no Python")],
     ),
     (
-        # hits_scores returns a localCheckpoint'd frame (per-round
-        # lineage truncation) — pytest pins the iteration arithmetic
+        # hits_scores returns a localCheckpoint'd frame (one final
+        # checkpoint; small graphs take the one-task fold) — pytest
+        # pins the iteration arithmetic
         "hits_supplier_part",
         [],
         [(r"CartesianProduct|BroadcastNestedLoopJoin", "no cross product"),
@@ -1044,10 +1045,10 @@ CHECKS = [
          (r"(BatchEvalPython|ArrowEvalPython|MapInPandas)", "pure codegen, no Python")],
     ),
     (
-        # the returned frame is localCheckpoint'd (per-iteration
-        # lineage truncation), so the per-round partial_sum shape is
-        # not visible here — pytest pins the iteration arithmetic;
-        # this entry guards the final plan only
+        # the returned frame is localCheckpoint'd (one final
+        # checkpoint; small graphs take the one-task fold), so the
+        # per-round partial_sum shape is not visible here — pytest pins
+        # the iteration arithmetic; this entry guards the final plan only
         "pagerank_supplier_part",
         [],
         [(r"CartesianProduct|BroadcastNestedLoopJoin", "no cross product"),
