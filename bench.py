@@ -331,22 +331,31 @@ BENCH_QUERIES = [
 ]
 
 
-def main() -> int:
-    import __spark_entry__ as entrymod
+def quiet_spark(app_name: str = "bubbles_spark_bench"):
+    """The timing tools' SparkSession, whose stderr keeps only the
+    timing lines and real warnings: no progress bars, the benchmark's
+    log4j2 config (drops the benign late-heartbeat accumulator
+    traces), and no pandas FutureWarning from every Arrow-backed
+    Python worker.  The workers inherit the JVM's environment, so
+    PYTHONWARNINGS is set before the session (and its JVM) starts."""
     from bubbles_spark.session import get_spark
 
-    # stderr keeps only real warnings: no progress bars, and the
-    # benchmark's log4j2 config drops the benign late-heartbeat
-    # accumulator traces
+    os.environ["PYTHONWARNINGS"] = "ignore::FutureWarning:pyspark.sql.pandas.serializers"
     here = os.path.dirname(os.path.abspath(__file__))
     log4j = os.path.join(here, "perfbench", "log4j2.properties")
-    spark = get_spark(
-        "bubbles_spark_bench",
+    return get_spark(
+        app_name,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.extraJavaOptions": f"-Dlog4j2.configurationFile=file:{log4j}",
         },
     )
+
+
+def main() -> int:
+    import __spark_entry__ as entrymod
+
+    spark = quiet_spark()
     qs = entrymod.queries()
 
     def run(name: str) -> float:

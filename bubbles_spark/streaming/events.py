@@ -8,13 +8,24 @@ the live path.  Watermarks bound state for late data.
 Local testing drives a parquet-directory stream to completion with
 ``run_batchlike`` (availableNow trigger + memory sink) — the
 documented pattern for deterministic streaming tests.
+
+Every sink (``run_batchlike``, ``stream_to_parquet``,
+``admit_stream_against_index``) runs through one availableNow drain,
+``_drain``.  The two stateful sinks size their state shards in
+``_state_shards`` from the plan they are about to start: the bytes of
+its file-source leaves and whether it holds Python keyed state, so
+any file-source stream gets the same rule, however it was built.
 """
 
 from __future__ import annotations
 
+import contextlib
+import os
 import threading
 from typing import Sequence
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,7 +57,8 @@ def read_event_stream(
     ``glob_filter`` selects files inside the directory (the file
     source requires a directory basePath, so a single-file layout like
     ``sf_dir/events.parquet`` streams as ``(sf_dir,
-    glob_filter='events.parquet')``)."""
+    glob_filter='events.parquet')``).  Drains size their state
+    shards from the bytes this source reads (``_state_shards``)."""
     reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -70,14 +82,9 @@ def read_testdata_event_stream(
     rejects (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE) — cast to TIMESTAMP,
     a value-preserving move under the session's pinned UTC timezone.
     Either way the wall-clock values match what DuckDB sees, so
-    streaming results stay oracle-comparable."""
-    import os
-
+    streaming results stay oracle-comparable.  Drains size their
+    state shards from the plan's source, as for any stream."""
     src = os.path.join(sf_dir, "events.parquet")
-    try:
-        _set_state_shard_hint(os.path.getsize(src))
-    except OSError:
-        pass
     probe = table_schema(spark, src)
     ts_dt = probe["ts"].dataType.simpleString() if "ts" in probe.names else "timestamp"
 
@@ -1139,14 +1146,9 @@ def read_testdata_table_stream(
     (single-file layout ``sf_dir/{name}.parquet``).  Schema comes
     from ``io.table_schema`` — file-source streams require an explicit
     schema, and its file-identity cache keeps it in lockstep with
-    whatever the driver wrote."""
-    import os
-
+    whatever wrote the file.  Drains size their state shards from
+    the plan's source, as for any stream."""
     src = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        _set_state_shard_hint(os.path.getsize(src))
-    except OSError:
-        pass
     return read_event_stream(
         spark,
         sf_dir,
@@ -1195,146 +1197,123 @@ def docs_ingest_dedup_stream(
 
 _SHARD_TUNE_LOCK = threading.Lock()
 _SHARD_TUNE_DEPTH = 0
-# per-thread input-size hint (bytes) set by the testdata stream
-# readers and consumed by the NEXT _sane_state_shards call on the
-# same thread — see _set_state_shard_hint
-_STATE_SHARD_HINT: dict[int, int] = {}
-
-
-def _set_state_shard_hint(n_bytes: int) -> None:
-    """Record the stream source's on-disk size for the next drain on
-    this thread.
-
-    Stateful streaming shards its state store by
-    ``spark.sql.shuffle.partitions`` at query start, and AQE never
-    coalesces a streaming exchange — so a small drain pays one state
-    commit (file create + fsync) and one task per shard per
-    micro-batch regardless of input size (guide §2: derive the
-    partitioning from input size instead of a constant).  The source
-    readers know the input's byte size for free (``os.path.getsize``
-    on the driver — no Spark job), and the drain helpers consume the
-    hint to cap the state shards at ~4 MB of source per shard, floor
-    2, never above the session's configured width.  The hint only
-    ever REDUCES shard count below the session conf — a production
-    deployment that sets shuffle.partitions for its cluster keeps
-    full width on any real input (TB-scale sources hit the conf cap
-    immediately), and shard count never changes results (state is
-    hash-partitioned; the aggregations are associative — the drained
-    output is oracle-checked either way)."""
-    _STATE_SHARD_HINT[threading.get_ident()] = int(n_bytes)
 _SHARD_TUNE_PREV: str | None = None
+# plan operators that hold per-KEY Python state
+# (applyInPandasWithState / transformWithState family)
+_PYTHON_KEYED_STATE = (
+    "FlatMapGroupsInPandasWithState",
+    "ApplyInPandasWithState",
+    "FlatMapGroupsWithState",
+    "TransformWithState",
+)
 
 
-def _has_python_keyed_state(df: DataFrame) -> bool:
-    """True when the streaming plan holds a per-KEY Python state
-    operator (applyInPandasWithState / transformWithState family).
-    Those pay a fixed Python state-channel setup per TASK and
-    serialize the per-key work within a task, so they get their own
-    shard-sizing budget in ``_sane_state_shards`` (finer than the JVM
-    window-state rule, floored so the per-key work stays parallel —
-    2 shards regressed stream_ewma 2.1 → 4.2 s, r13).  Plan
-    inspection only; never throws (defaults False on any
-    introspection failure)."""
+def _stream_plan_facts(df: DataFrame) -> tuple[int | None, bool]:
+    """(source bytes, holds Python keyed state) from one read of the
+    stream's analyzed plan.  Bytes sum its streaming file-source
+    leaves, each distinct (``path``, ``pathGlobFilter``) once — a
+    self-joined source is one input — through the Hadoop FileSystem
+    (no Spark job); batch leaves (a stream-static join's table) are
+    skipped.  None when a streaming leaf has no file size (rate,
+    kafka).  (None, False) when the plan or the filesystem cannot be
+    read: sizing never fails a drain."""
     try:
-        s = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return False
-    return any(
-        m in s
-        for m in (
-            "FlatMapGroupsInPandasWithState",
-            "ApplyInPandasWithState",
-            "FlatMapGroupsWithState",
-            "TransformWithState",
-        )
-    )
+        plan = df._jdf.queryExecution().analyzed()
+        keyed = any(m in plan.toString() for m in _PYTHON_KEYED_STATE)
+        leaves = plan.collectLeaves()
+        sources, sized = set(), True
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.getClass().getSimpleName()
+            if kind == "StreamingRelation":
+                opts = leaf.dataSource().options()
+                path, glob = opts.get("path"), opts.get("pathGlobFilter")
+                if path.isDefined():
+                    sources.add((path.get(), glob.get() if glob.isDefined() else None))
+                    continue
+            sized = sized and not kind.startswith("Streaming")
+        if not (sized and sources):
+            return None, keyed
+        spark = df.sparkSession
+        return sum(_hadoop_bytes(spark, p, g) for p, g in sources), keyed
+    except (Py4JError, PySparkException):
+        return None, False
 
 
-def _sane_state_shards(
-    spark: SparkSession, keep_width: bool = False
-) -> str | None:
-    """Stateful streaming shards its state store by
-    spark.sql.shuffle.partitions AT QUERY START — AQE never coalesces
-    a streaming exchange, so an untuned session's default (200) means
-    200 near-empty state partitions and pure task-scheduling overhead
-    on a local run (measured 29.7s → ~3s for sessionize_stream).  If
-    the session still has the stock default, drop to ~2×cores for the
-    duration of the query; returns a token for _restore_state_shards.
+@contextlib.contextmanager
+def _state_shards(stream_df: DataFrame):
+    """Narrow ``spark.sql.shuffle.partitions`` for one drain of
+    ``stream_df``, then restore it.
 
-    SCOPE CAVEAT — SQLConf is session-global and OSS Spark offers no
-    per-query override (the state partition count is read from the
-    session conf when the first micro-batch plans, then pinned in the
-    checkpoint): while a tuned streaming query is draining, any OTHER
-    query planned in the same SparkSession sees the reduced partition
-    count.  Sessions that care should set shuffle.partitions
-    explicitly (any value < 100 disables this tuning).  Overlapping
-    streaming helpers in one session are safe: the save/restore is
-    depth-counted under a lock, so only the outermost call restores.
+    Stateful streaming shards its state store by that conf AT QUERY
+    START (then pins it in the checkpoint), and AQE never coalesces a
+    streaming exchange — so a small drain pays one state commit and
+    one task per shard per micro-batch whatever its input size.  The
+    width comes from the session conf and the plan about to start
+    (``_stream_plan_facts``):
+      - session width ≥ 100 (an untuned session's 200): max(8,
+        2 × cores) — measured 29.7 s → ~3 s for sessionize_stream;
+      - else, with a known source size, a byte budget per shard,
+        never above the session width: 4 MB, floor 2, for JVM state;
+        128 KB, floor 8, for Python keyed state, whose tasks each pay
+        a fixed ~60-100 ms state-channel setup but serialize the
+        per-key work (2 shards regressed stream_ewma 2.1 → 4.2 s,
+        r13; 16 shards on the 2 MB bench input measured best).
+    Real multi-MB inputs hit the session width, so only small inputs
+    narrow, and shard count never changes results.
+
+    SCOPE CAVEAT — SQLConf is session-global: while a narrowed drain
+    runs, any OTHER query planned in the session sees the narrowed
+    width.  Overlapping drains are safe: the save/restore is
+    depth-counted under a lock, so only the outermost one restores.
     """
-    import os
-
     global _SHARD_TUNE_DEPTH, _SHARD_TUNE_PREV
-    try:
-        cur = spark.conf.get("spark.sql.shuffle.partitions")
-    except Exception:
-        return None
-    hint = _STATE_SHARD_HINT.pop(threading.get_ident(), None)
-    # Per-key Python state ops (applyInPandasWithState family) size
-    # by a 32x FINER byte budget than JVM window state instead of
-    # pinning full width: every stateful task pays a fixed Python
-    # state-channel setup (~60-100 ms measured r13 — a 10-row
-    # 5-key stream costs ~3 s/batch at 32 shards, ~0.5 s at 2), so
-    # small inputs want fewer, fatter tasks; but the per-KEY work
-    # serializes inside a task (2 shards regressed stream_ewma
-    # 2.1 -> 4.2 s, the r13 #18 finding), so the floor is 8 and the
-    # budget is 128 KB/shard (16 shards on the 2 MB bench input —
-    # the measured optimum across the seven python-state streams;
-    # JVM-state streams keep the 4 MB rule).  Any real multi-MB
-    # input hits the session-width cap, so at scale both families
-    # run full width — the narrowing exists only for small inputs.
-    budget = (128 << 10) if keep_width else (4 << 20)
-    floor = 8 if keep_width else 2
+    spark = stream_df.sparkSession
+    cur = spark.conf.get("spark.sql.shuffle.partitions")
+    n = None
+    if cur.isdigit() and int(cur) >= 100:
+        n = max(8, 2 * (os.cpu_count() or 8))
+    elif cur.isdigit():
+        n_bytes, keyed = _stream_plan_facts(stream_df)
+        if n_bytes is not None:
+            budget, floor = ((128 << 10), 8) if keyed else ((4 << 20), 2)
+            narrow = min(int(cur), max(floor, -(-n_bytes // budget)))
+            n = narrow if narrow < int(cur) else None
     with _SHARD_TUNE_LOCK:
+        tuned = _SHARD_TUNE_DEPTH > 0 or n is not None
         if _SHARD_TUNE_DEPTH > 0:
-            # already tuned by an outer/concurrent helper: just nest
+            # already narrowed by an outer/concurrent drain: just nest
             _SHARD_TUNE_DEPTH += 1
-            return "__nested__"
-        if cur is not None and cur.isdigit() and int(cur) >= 100:
-            n = max(8, 2 * (os.cpu_count() or 8))
+        elif n is not None:
             spark.conf.set("spark.sql.shuffle.partitions", str(n))
-            _SHARD_TUNE_DEPTH = 1
-            _SHARD_TUNE_PREV = cur
-            return "__outer__"
-        if (
-            hint is not None
-            and cur is not None
-            and cur.isdigit()
-        ):
-            # input-size-derived shard count (see _set_state_shard_hint):
-            # per-family byte budget per state shard, floored, capped
-            # at the session width — only ever narrows for small inputs
-            n = min(int(cur), max(floor, -(-hint // budget)))
-            if n < int(cur):
-                spark.conf.set("spark.sql.shuffle.partitions", str(n))
-                _SHARD_TUNE_DEPTH = 1
-                _SHARD_TUNE_PREV = cur
-                return "__outer__"
-    return None
+            _SHARD_TUNE_DEPTH, _SHARD_TUNE_PREV = 1, cur
+    try:
+        yield
+    finally:
+        if tuned:
+            with _SHARD_TUNE_LOCK:
+                _SHARD_TUNE_DEPTH -= 1
+                if _SHARD_TUNE_DEPTH == 0:
+                    spark.conf.set(
+                        "spark.sql.shuffle.partitions", _SHARD_TUNE_PREV
+                    )
+                    _SHARD_TUNE_PREV = None
 
 
-def _restore_state_shards(spark: SparkSession, prev: str | None) -> None:
-    global _SHARD_TUNE_DEPTH, _SHARD_TUNE_PREV
-    if prev is None:
-        return
-    with _SHARD_TUNE_LOCK:
-        _SHARD_TUNE_DEPTH -= 1
-        if _SHARD_TUNE_DEPTH <= 0:
-            _SHARD_TUNE_DEPTH = 0
-            if _SHARD_TUNE_PREV is not None:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", _SHARD_TUNE_PREV
-                )
-                _SHARD_TUNE_PREV = None
+def _drain(writer, timeout_s: float, timeout_msg: str) -> None:
+    """Start ``writer`` with an availableNow trigger (process
+    everything currently available, then stop), wait up to
+    ``timeout_s`` and stop the query if it is still active.  Raises
+    ``TimeoutError(timeout_msg)`` when it did not drain: partial sink
+    output must never read as the stream's data."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        finished = q.awaitTermination(timeout_s)
+    finally:
+        if q.isActive:
+            q.stop()
+    if not finished:
+        raise TimeoutError(timeout_msg)
 
 
 def stream_to_parquet(
@@ -1354,34 +1333,23 @@ def stream_to_parquet(
     rewrites a committed file — the production streaming→lake path
     (this is the streaming twin of FileStore.create).  Partitioning
     columns propagate to the directory layout, so downstream batch
-    reads get partition pruning over the streamed output."""
+    reads get partition pruning over the streamed output.  State
+    shards are sized from the stream's own plan (``_state_shards``);
+    the checkpoint pins that width for every restart."""
     spark = stream_df.sparkSession
-    keep_w = _has_python_keyed_state(stream_df)
     writer = (
         stream_df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    prev = _sane_state_shards(spark, keep_width=keep_w)
-    finished = False
-    try:
-        q = writer.start()
-        try:
-            finished = q.awaitTermination(timeout_s)
-        finally:
-            if q.isActive:
-                q.stop()
-    finally:
-        _restore_state_shards(spark, prev)
-    if not finished:
-        # partial output would silently read as "the stream's data" —
-        # surface the timeout; the checkpoint makes a rerun resume
-        raise TimeoutError(
+    with _state_shards(stream_df):
+        _drain(
+            writer,
+            timeout_s,
             f"stream_to_parquet: stream did not drain within {timeout_s}s; "
-            f"committed files under {path!r} are safe to resume from"
+            f"committed files under {path!r} are safe to resume from",
         )
     # partition columns come last in a parquet directory's schema
     parts = [stream_df.schema[c] for c in partition_by or ()]
@@ -1397,39 +1365,35 @@ def run_batchlike(
 ) -> DataFrame:
     """Drive a streaming query over all currently-available input and
     return the result as a batch DataFrame (availableNow + memory
-    sink).  Deterministic: processes everything, then stops.
+    sink).  Deterministic: processes everything, then stops.  State
+    shards are sized from the stream's own plan (``_state_shards``).
 
     For windowed aggregations use output_mode="complete": in append
     mode a window only emits once the watermark passes its end, so the
     final windows of a finite input never appear.
+
+    The returned frame holds the sink's rows itself, so the sink's
+    ``query_name`` view is dropped (also on failure): a long-lived
+    session keeps no in-memory table per drain.
     """
     spark = stream_df.sparkSession
-    prev = _sane_state_shards(
-        spark, keep_width=_has_python_keyed_state(stream_df)
+    writer = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(query_name)
     )
-    finished = False
     try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(query_name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_s)
-        finally:
-            if q.isActive:
-                q.stop()
+        with _state_shards(stream_df):
+            _drain(
+                writer,
+                timeout_s,
+                f"run_batchlike({query_name!r}): stream did not drain within "
+                f"{timeout_s}s — raise timeout_s instead of consuming a "
+                f"partial memory-sink table",
+            )
+        return spark.sql(f"SELECT * FROM {query_name}")
     finally:
-        _restore_state_shards(spark, prev)
-    if not finished:
-        raise TimeoutError(
-            f"run_batchlike({query_name!r}): stream did not drain within "
-            f"{timeout_s}s — raise timeout_s instead of consuming a "
-            f"partial memory-sink table"
-        )
-    return spark.sql(f"SELECT * FROM {query_name}")
+        spark.catalog.dropTempView(query_name)
 
 
 def admit_stream_against_index(
@@ -1476,16 +1440,13 @@ def admit_stream_against_index(
     All filesystem access goes through the Hadoop FileSystem API, so
     ``path``/``checkpoint`` may be any supported scheme (s3a://,
     hdfs://, file:), not just the local disk.  No stateful operators
-    → no state store, no shard tuning needed; the index side re-plans
+    → no state store, so the drain is not sized (``_state_shards``
+    never runs here); the index side re-plans
     per batch, so at scale persist the signature table (or let AQE
     broadcast the micro-batch side via ``broadcast_batch=True`` in
     dedup_kw)."""
     from bubbles_spark.ops import dedup as _dedup
 
-    # no stateful operator consumes the source reader's state-shard
-    # hint here: drop it, or the next drain on this thread sizes its
-    # state shards from this source
-    _STATE_SHARD_HINT.pop(threading.get_ident(), None)
     spark = docs.sparkSession
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
@@ -1496,25 +1457,17 @@ def admit_stream_against_index(
             path.rstrip("/") + f"/admit_batch={batch_id}"
         )
 
-    q = (
-        docs.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_s)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not finished:
+    _drain(
+        docs.writeStream.foreachBatch(_admit).option(
+            "checkpointLocation", checkpoint
+        ),
+        timeout_s,
         # a silent partial drain would masquerade as "these docs were
         # duplicates" — surface it instead
-        raise TimeoutError(
-            f"admit_stream_against_index: stream did not drain within "
-            f"{timeout_s}s; partial results left under {path!r} are "
-            f"safe to resume from (same checkpoint)"
-        )
+        f"admit_stream_against_index: stream did not drain within "
+        f"{timeout_s}s; partial results left under {path!r} are "
+        f"safe to resume from (same checkpoint)",
+    )
     return _drain_admitted(spark, path, checkpoint, docs.schema)
 
 
@@ -1557,6 +1510,21 @@ def _hadoop_ls(spark: SparkSession, path: str) -> list[str]:
     if not fs.exists(hpath):
         return []
     return [st.getPath().getName() for st in fs.listStatus(hpath)]
+
+
+def _hadoop_bytes(spark: SparkSession, path: str, glob: str | None) -> int:
+    """Bytes a file source over ``path`` reads, via the Hadoop
+    FileSystem API like ``_hadoop_ls``: everything under it, or with a
+    ``pathGlobFilter`` the files directly under it whose name matches
+    (Hadoop ``GlobFilter``, as the file source applies it) — the
+    single-file layouts of the testdata readers.  A globbed source's
+    subdirectories are not counted."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if glob is None:
+        return fs.getContentSummary(hpath).getLength()
+    match = spark._jvm.org.apache.hadoop.fs.GlobFilter(glob)
+    return sum(st.getLen() for st in fs.listStatus(hpath, match) if st.isFile())
 
 
 GAP_STATE_SCHEMA = "last timestamp"

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from bubbles_spark.ops import events
@@ -726,11 +727,50 @@ def test_admit_stream_against_index(spark, tmp_path):
     assert [r["doc_id"] for r in third.collect()] == [101]
 
 
-def test_admission_drops_state_shard_hint(spark, tmp_path):
-    """A testdata stream reader leaves a state-shard size hint for the
-    next drain on its thread.  Admission runs no stateful operator, so
-    it must drop the hint: otherwise the next drain on the thread
-    narrows its state shards from the admitted file's size."""
+def _checkpoint_width(ckpt: str) -> str:
+    """The state-shard width a drain pinned in its checkpoint: the
+    ``spark.sql.shuffle.partitions`` that ``offsets/0`` records."""
+    import json
+    import os
+
+    with open(os.path.join(ckpt, "offsets", "0")) as f:
+        meta = json.loads(f.read().splitlines()[1])
+    return meta["conf"]["spark.sql.shuffle.partitions"]
+
+
+def _rate_dedup(spark, files=None):
+    """A stateful stream over a rate source, which has no file size;
+    an events stream ``files`` is unioned in when given."""
+    s = spark.readStream.format("rate").option("rowsPerSecond", 5).load()
+    if files is not None:
+        s = s.unionByName(
+            files.select(F.col("ts").alias("timestamp"), F.col("event_id").alias("value"))
+        )
+    return s.withWatermark("timestamp", "1 minute").dropDuplicatesWithinWatermark(
+        ["value"]
+    )
+
+
+@pytest.fixture
+def drain_widths(spark, monkeypatch):
+    """``spark.sql.shuffle.partitions`` in force as each drain starts
+    its writer, one entry per drain."""
+    from bubbles_spark.streaming import events as sevents
+
+    widths: list = []
+    real = sevents._drain
+
+    def spy(*args, **kwargs):
+        widths.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(sevents, "_drain", spy)
+    return widths
+
+
+def _documents_admission(spark, tmp_path, timeout_s: float = 120):
+    """Admit a two-doc ``documents.parquet`` stream against an index
+    holding the first doc; returns the admitted doc ids."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -750,15 +790,140 @@ def test_admission_drops_state_shard_hint(spark, tmp_path):
     )
     stream = sevents.read_testdata_table_stream(spark, str(tmp_path), "documents")
     got = sevents.admit_stream_against_index(
-        stream, index, str(tmp_path / "out"), str(tmp_path / "ckpt"), threshold=0.9
+        stream, index, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        threshold=0.9, timeout_s=timeout_s,
     )
-    assert [r["doc_id"] for r in got.collect()] == [2]
-    token = sevents._sane_state_shards(spark)
-    try:
-        assert token is None
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
-    finally:
-        sevents._restore_state_shards(spark, token)
+    return [r["doc_id"] for r in got.collect()]
+
+
+def test_admission_drops_state_shard_hint(spark, tmp_path, drain_widths):
+    """Admission over ``documents.parquet`` runs unsized and leaves
+    nothing behind for the next drain: a drain over another stream
+    right after sizes its state shards from its own source.  That
+    source is a rate stream, which has no file size, so the session
+    width 4 stays; the documents file would have narrowed it to 2."""
+    from bubbles_spark.streaming import events as sevents
+
+    assert _documents_admission(spark, tmp_path) == [2]
+    sevents.stream_to_parquet(
+        _rate_dedup(spark), str(tmp_path / "r_out"), str(tmp_path / "r_ckpt")
+    )
+    assert drain_widths == ["4", "4"]
+
+
+def test_read_event_stream_drain_sizes_state_shards(spark, tmp_path):
+    """A stream built directly with ``read_event_stream`` gets the
+    size rule: its few-KB source pins dedup state on the 2-shard
+    floor, below the session's 4, and the session width comes back."""
+    from bubbles_spark.streaming import events as sevents
+
+    _fixture(spark).withColumn("props", F.lit("{}")).write.parquet(
+        str(tmp_path / "src")
+    )
+    stream = sevents.dedup_stream(
+        sevents.read_event_stream(spark, str(tmp_path / "src"))
+    )
+    ckpt = str(tmp_path / "ckpt")
+    got = sevents.stream_to_parquet(stream, str(tmp_path / "out"), ckpt)
+    assert sorted(r["event_id"] for r in got.collect()) == [1, 2, 3, 4, 5]
+    assert _checkpoint_width(ckpt) == "2"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+
+
+def test_self_joined_source_sized_once(spark, tmp_path):
+    """A self-joined source is one input: its ~5 MB make 2 shards of
+    the 4 MB budget; counted twice they would make 3."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bubbles_spark.streaming import events as sevents
+
+    src = tmp_path / "big"
+    src.mkdir()
+    pq.write_table(
+        pa.table({
+            "k": list(range(5)),
+            "blob": [os.urandom(1 << 20) for _ in range(5)],
+        }),
+        src / "part-0.parquet",
+    )
+    assert 4 << 20 < os.path.getsize(src / "part-0.parquet") <= 6 << 20
+    s = spark.readStream.schema("k long").parquet(str(src))
+    joined = s.alias("a").join(s.alias("b"), "k")
+    ckpt = str(tmp_path / "ckpt")
+    got = sevents.stream_to_parquet(joined, str(tmp_path / "out"), ckpt)
+    assert sorted(r["k"] for r in got.collect()) == [0, 1, 2, 3, 4]
+    assert _checkpoint_width(ckpt) == "2"
+
+
+@pytest.mark.parametrize("with_file_source", [False, True])
+def test_rate_source_keeps_session_width(
+    spark, tmp_path, drain_widths, with_file_source
+):
+    """A rate source has no file size, so the size rule never applies
+    and its drain runs at the session width — also when a few-KB file
+    source is unioned in (its bytes are not the stream's size)."""
+    from bubbles_spark.streaming import events as sevents
+
+    files = None
+    if with_file_source:
+        _fixture(spark).write.parquet(str(tmp_path / "src"))
+        files = sevents.read_event_stream(spark, str(tmp_path / "src"))
+    sevents.stream_to_parquet(
+        _rate_dedup(spark, files), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    )
+    assert drain_widths == ["4"]
+
+
+def test_run_batchlike_drops_memory_sink_view(spark, tmp_path):
+    """The frame ``run_batchlike`` returns holds the sink's rows, so
+    the memory sink's view is dropped: the session keeps no table per
+    drain, and the returned rows are unchanged."""
+    from bubbles_spark.streaming import events as sevents
+
+    df = _fixture(spark).withColumn("props", F.lit("{}"))
+    df.write.parquet(str(tmp_path / "src"))
+    stream = sevents.dedup_stream(
+        sevents.read_event_stream(spark, str(tmp_path / "src"))
+    )
+    out = sevents.run_batchlike(stream, "t_view_drop")
+    assert "t_view_drop" not in [t.name for t in spark.catalog.listTables()]
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, df.collect()))
+
+
+@pytest.mark.parametrize(
+    "sink", ["run_batchlike", "stream_to_parquet", "admit_stream_against_index"]
+)
+def test_drain_timeout_stops_query_and_restores_width(spark, tmp_path, sink):
+    """A drain that does not finish in ``timeout_s`` raises
+    TimeoutError, stops its query and puts the session's shuffle
+    width back, narrowed or not (pyspark rejects a 0 timeout, so
+    0.001 s)."""
+    from bubbles_spark.streaming import events as sevents
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(TimeoutError):
+        if sink == "admit_stream_against_index":
+            _documents_admission(spark, tmp_path, timeout_s=0.001)
+        else:
+            _fixture(spark).withColumn("props", F.lit("{}")).write.parquet(
+                str(tmp_path / "src")
+            )
+            stream = sevents.dedup_stream(
+                sevents.read_event_stream(spark, str(tmp_path / "src"))
+            )
+            if sink == "run_batchlike":
+                sevents.run_batchlike(stream, "t_timeout", timeout_s=0.001)
+            else:
+                sevents.stream_to_parquet(
+                    stream, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+                    timeout_s=0.001,
+                )
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert "t_timeout" not in [t.name for t in spark.catalog.listTables()]
 
 
 def test_drain_admitted_survives_commit_log_purge(spark, tmp_path):

@@ -37,9 +37,9 @@ def main(argv: list[str]) -> int:
         return 2
 
     import __spark_entry__ as entrymod
-    from bubbles_spark.session import get_spark
+    from bench import quiet_spark
 
-    spark = get_spark("bubbles_spark_rebench")
+    spark = quiet_spark("bubbles_spark_rebench")
     qs = entrymod.queries()
 
     def run(name: str) -> float:

@@ -47,9 +47,9 @@ def main() -> int:
     sf1 = argv[1] if len(argv) > 1 else "/tmp/sf1"
 
     import __spark_entry__ as entrymod
-    from bubbles_spark.session import get_spark
+    from bench import quiet_spark
 
-    spark = get_spark("bubbles_spark_sf1_bench")
+    spark = quiet_spark("bubbles_spark_sf1_bench")
     # split synthesized single-file tables at row-group grain
     # (make_sf1.py writes 16 MB row groups): without this the 128 MB
     # default gives sf10's 56 MB documents table ONE split — map
