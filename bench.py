@@ -1,4 +1,5 @@
-"""Benchmark entry point (driver contract: ONE JSON line on stdout).
+"""Benchmark entry point (driver contract: ONE JSON line on stdout),
+and the one timing core every timing tool uses.
 
 Times the headline queries from ``__spark_entry__.queries()`` at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
@@ -8,13 +9,25 @@ computed column).  One warm-up pass of the flagship query absorbs
 JIT/codegen compilation so the reported numbers are steady-state —
 the regime that matters at 100 TB.
 
-Usage: python bench.py            # prints {"metric": ...} as the
-                                  # LAST stdout line
+Usage: python bench.py                 # every headline query: one cold
+                                       # + one reported warm run each;
+                                       # writes bench_results.json
+       python bench.py --reps N q ...  # named queries (or all with no
+                                       # names): minimum of N warm runs
+                                       # after one cold run; prints the
+                                       # same line, writes no file
+The {"metric": ...} line is the LAST stdout line; per-query timing
+lines go to stderr.
+
+Timing core (also used by tools/sf1_bench.py and tools/scale_smoke.py):
+``timed`` times one build thunk plus its noop write, ``best_of`` is
+the min-of-N warm-reps rule, ``scaling_point`` measures a 1x/kx pair.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import sys
@@ -352,23 +365,81 @@ def quiet_spark(app_name: str = "bubbles_spark_bench"):
     )
 
 
-def main() -> int:
+def timed(build) -> float:
+    """Wall seconds to build one DataFrame (``build()``, which may run
+    eager jobs: size probes, checkpoints, stream drains — part of the
+    query's cost) and force it end to end through the noop sink."""
+    t0 = time.time()
+    build().write.format("noop").mode("overwrite").save()
+    return time.time() - t0
+
+
+def best_of(build, reps: int) -> float:
+    """One untimed cold run, then the minimum of ``reps`` warm runs.
+    The cold run pays per-plan codegen/JIT once; any warm run above the
+    minimum is interference, never the plan (BASELINE.md: single warm
+    samples carry about ±30% noise)."""
+    timed(build)
+    return min(timed(build) for _ in range(reps))
+
+
+def scaling_point(build1, buildk, k: int) -> dict:
+    """Time the same operator at 1x (``build1``) and kx (``buildk``)
+    data: on each side a cold and a warm run, and when the warm run
+    reads under 1 s, the minimum of 3 warm runs (sub-second single
+    samples give noisy exponents near the flag bars).  Returns
+    ``{"t1", "tk", "alpha"}`` with alpha = log(tk / t1) / log(k)."""
+
+    def side(build) -> float:
+        t = best_of(build, 1)
+        return t if t >= 1.0 else min(t, timed(build), timed(build))
+
+    t1, tk = side(build1), side(buildk)
+    alpha = math.log(max(tk, 1e-3) / max(t1, 1e-3)) / math.log(k)
+    return {"t1": round(t1, 2), "tk": round(tk, 2), "alpha": round(alpha, 2)}
+
+
+STDOUT_QUERIES = 40
+
+
+def stdout_line(full: dict) -> str:
+    """The driver keeps only a ~2 KB TAIL of this process's output, and
+    the full per-query dict serializes past that — r4/r5 lost ~20 of
+    ~80 timings to a truncated JSON line ("parsed": null).  So the line
+    carries the STDOUT_QUERIES slowest queries, ties broken by name (a
+    fixed set size, so runs differ only in which names made it), and
+    only the names of failed queries; the full record is in the file
+    ``bench.py`` writes."""
+    times = full["queries"]
+    slowest = sorted(times, key=lambda q: (-times[q], q))[:STDOUT_QUERIES]
+    line = dict(full, queries={q: times[q] for q in slowest},
+                n_queries=len(times))
+    if "errors" in full:
+        line["errors"] = sorted(full["errors"])
+    return json.dumps(line, separators=(",", ":"))
+
+
+def main(argv: list[str]) -> int:
     import __spark_entry__ as entrymod
+
+    reps, names = 1, argv
+    if argv[:1] == ["--reps"]:
+        reps, names = int(argv[1]), argv[2:]
+        if reps < 1:
+            raise SystemExit("usage: bench.py [--reps N>=1] [query ...]")
 
     spark = quiet_spark()
     qs = entrymod.queries()
 
-    def run(name: str) -> float:
-        t0 = time.time()
-        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        return time.time() - t0
+    def build(name: str):
+        return lambda: qs[name](spark, SF_DIR)
 
     # warm-up: JIT + parquet footer cache + codegen compile
-    run("flagship_revenue_by_nation")
+    timed(build("flagship_revenue_by_nation"))
 
     times: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for name in BENCH_QUERIES:
+    for name in names or BENCH_QUERIES:
         if name not in qs:
             print(f"# skip {name}: not registered", file=sys.stderr)
             continue
@@ -376,52 +447,42 @@ def main() -> int:
         # (a CC non-convergence at sf0.1 once killed the entire run
         # and the driver recorded nothing)
         try:
-            cold = run(name)
-            # report the SECOND run: per-query codegen/JIT compiles on
-            # the first execution and is a one-time cost a long-lived
-            # cluster never pays again — steady-state is the 100 TB
-            # regime
-            times[name] = round(run(name), 3)
-            print(f"# {name}: {times[name]}s (cold {cold:.1f}s)", file=sys.stderr)
+            # reps=1 reports the SECOND run: per-query codegen/JIT
+            # compiles on the first execution and is a one-time cost a
+            # long-lived cluster never pays again — steady-state is the
+            # 100 TB regime
+            times[name] = round(best_of(build(name), reps), 3)
+            print(f"# {name}: {times[name]}s", file=sys.stderr)
         except Exception as exc:  # noqa: BLE001 — record and continue
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"# ERROR {name}: {errors[name]}", file=sys.stderr)
 
     m = re.search(r"sf([0-9.]+)", SF_DIR)
-    sf = float(m.group(1).rstrip(".")) if m else None
-    total = round(sum(times.values()), 3)
-
-    # The driver keeps only a ~2 KB TAIL of this process's output, and
-    # the full per-query dict serializes past that — r4/r5 lost ~20 of
-    # ~80 timings to a truncated JSON line ("parsed": null).  So: the
-    # COMPLETE timing vector goes to bench_results.json (committed with
-    # the round artifacts), and the stdout line carries as many of the
-    # slowest (= most informative) queries as fit its tail budget plus
-    # a pointer to the file.
     full = {
         "metric": "headline_total",
-        "value": total,
+        "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
-        "sf": sf,
+        "sf": float(m.group(1).rstrip(".")) if m else None,
+        # the parallelism the numbers were measured with, so an
+        # 8-core vs 32-core comparison can be checked from the record
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
     }
     if errors:
         full["errors"] = errors
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "bench_results.json"), "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
-
-    by_cost = sorted(times, key=times.get, reverse=True)
-    line = dict(full, queries={}, n_queries=len(times),
-                queries_file="bench_results.json")
-    for name in by_cost:
-        trial = dict(line, queries=dict(line["queries"], **{name: times[name]}))
-        if len(json.dumps(trial, separators=(",", ":"))) > 1800:
-            break
-        line = trial
-    print(json.dumps(line, separators=(",", ":")))
+    if argv:
+        # a named or repeated run is triage, never the committed vector
+        full["reps"] = reps
+    else:
+        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                               "bench_results.json"), "w") as f:
+            json.dump(full, f, indent=1, sort_keys=True)
+        full["queries_file"] = "bench_results.json"
+    print(stdout_line(full))
     return 0
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

@@ -1131,17 +1131,20 @@ def embedding_dup_pairs(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
         _norm_col(vec_col, dim).alias("__n"),
-    ).filter(F.col("__n") > 0)
-    v.persist()
+    ).filter(F.col("__n") > 0).localCheckpoint(eager=False)
 
     if lsh_bits > 0:
         # all tables·bits plane dots in one Arrow-batched numpy matmul
         # (see _bucketize_udf: the pure-expression form was a ~20k-node
-        # Catalyst tree — minutes of planning + no codegen); persisted
-        # because both join sides consume it — without the persist the
-        # UDF (the only Python stage here) runs twice per vector
+        # Catalyst tree — minutes of planning + no codegen); pinned
+        # because both join sides consume it — without the pin the
+        # UDF (the only Python stage here) runs twice per vector.
+        # Lazy RDD pins, not persist(): nothing is left in the
+        # session's cache once the query's references are gone.
         bucketize = _bucketize_udf(lsh_bits, lsh_tables, seed, dim)
-        bkts = v.select("__id", bucketize("__v").alias("__bkts")).persist()
+        bkts = v.select("__id", bucketize("__v").alias("__bkts")).localCheckpoint(
+            eager=False
+        )
         # b-side: one (table, bucket) entry per table — ids only
         b_side = bkts.select(
             "__id", F.posexplode("__bkts").alias("__t", "__bucket")
@@ -1628,7 +1631,9 @@ def pairs_against_index(
         # batch-sized RDD is context-cleaned with its references.
         # Interleaved A/B on admit_and_extend_planted: 6.44 -> 4.94 s
         # minimums, every pair better.
-        bsig = F.broadcast(bsig.localCheckpoint(eager=False))
+        # No broadcast hint here: the joins below broadcast bsig
+        # explicitly, and a hint on the pin itself reaches no join.
+        bsig = bsig.localCheckpoint(eager=False)
 
     bband = bsig.select(
         "__bid",

@@ -102,6 +102,21 @@ def test_embedding_dup_non64_dim(spark):
     assert pairs[(0, 100)] == 1.0 and pairs[(1, 101)] == 1.0
 
 
+@pytest.mark.parametrize("lsh_bits", [4, 0])
+def test_embedding_dup_pairs_leaves_cache_empty(spark, lsh_bits):
+    """The vector and bucket pins are lazy RDD checkpoints, not
+    persist(): once the pairs are collected the session's cache holds
+    nothing, so a second run neither reuses the first run's data nor
+    re-caches it."""
+    rows = [(i, [float(i == j) for j in range(16)]) for i in range(8)]
+    rows += [(100, rows[0][1]), (101, rows[1][1])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    spark.catalog.clearCache()
+    pairs = dedup.embedding_dup_pairs(df, threshold=0.99, lsh_bits=lsh_bits).collect()
+    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(0, 100), (1, 101)}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_embedding_lsh_recall_planted_near_dups(spark):
     """Multi-table LSH must recover >= 95% of PLANTED near-duplicates
     (cosine >= ~0.95 — the regime the operator exists for; recall at

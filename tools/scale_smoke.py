@@ -8,7 +8,16 @@ exponent alpha = log(t_K / t_1) / log(K).  Linear-time operators show
 alpha ≈ 1 (plus fixed overhead pulling it below 1 on small inputs);
 a quadratic blowup shows alpha ≈ 2 and is a design regression.
 
-Usage: python tools/scale_smoke.py [K]       (default 8)
+Each side is timed by ``bench.scaling_point``, the protocol shared with
+tools/sf1_bench.py: a cold and a warm run at 1x, then at Kx, and the
+minimum of 3 warm runs for a side reading under 1 s.  A timed run is
+build + noop write: most builds are lazy plan construction, but some
+(sample(mode=weighted/reservoir) at large k, size probes) run eager
+passes inside build — those passes are part of the operator's cost.
+
+Usage: python tools/scale_smoke.py [K] [op ...]   (default 8, all ops;
+       a named subset without warc_splittable_one_file prints no
+       "sf_dir" and exits 0)
 Prints one JSON line: {"k": K, "ops": {name: {"t1": s, "tk": s,
 "alpha": a}}}.
 """
@@ -16,10 +25,8 @@ Prints one JSON line: {"k": K, "ops": {name: {"t1": s, "tk": s,
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -77,11 +84,11 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
+    from bench import quiet_spark, scaling_point
     from bubbles_spark.io import load_table
     from bubbles_spark.ops import dedup, textan, textprep
-    from bubbles_spark.session import get_spark
 
-    spark = get_spark("scale_smoke")
+    spark = quiet_spark("scale_smoke")
     docs = load_table(spark, SF_DIR, "documents")
     embs = load_table(spark, SF_DIR, "embeddings")
     events = load_table(spark, SF_DIR, "events")
@@ -90,15 +97,14 @@ def main() -> int:
     nation = load_table(spark, SF_DIR, "nation")
     customer = load_table(spark, SF_DIR, "customer")
 
-    def run(build, df):
-        # time build + write: most builds are lazy plan construction,
-        # but sample(mode=weighted/reservoir) at large k runs its
-        # count/approx-quantile passes eagerly inside build — those
-        # passes are part of the operator's true cost
-        t0 = time.time()
-        out = build(df)
-        out.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
+    results = {}
+
+    def point(name, build1, buildk):
+        r = results[name] = scaling_point(build1, buildk, k)
+        print(
+            f"# {name}: t1={r['t1']:.2f}s t{k}={r['tk']:.2f}s alpha={r['alpha']:.2f}",
+            file=sys.stderr,
+        )
 
     def _image_pairs(d):
         """Synthesize a distinct smooth PGM per doc_id (full id in the
@@ -985,41 +991,22 @@ def main() -> int:
         "haversine_join": haversine_op,
     }
 
-    results = {}
     base = scaled_rel(1)
     big = scaled_rel(k)
     for name, build in REL_OPS.items():
         if only and name not in only:
             continue
-        run(build, base)
-        t1 = run(build, base)
-        tk = run(build, big)
-        alpha = math.log(max(tk, 1e-3) / max(t1, 1e-3)) / math.log(k)
-        results[name] = {"t1": round(t1, 2), "tk": round(tk, 2), "alpha": round(alpha, 2)}
-        print(f"# {name}: t1={t1:.2f}s t{k}={tk:.2f}s alpha={alpha:.2f}", file=sys.stderr)
+        point(name, lambda b=build: b(base), lambda b=build: b(big))
 
     for name, (df, id_col, build) in OPS.items():
         if only and name not in only:
             continue
         if df is embs:
+            # embeddings builders take (df, id_col); docs builders take (df)
             id_col = emb_id
-        # embeddings builders take (df, id_col); docs builders take (df)
-        build_fixed = (
-            (lambda d, _b=build, _i=id_col: _b(d, _i))
-            if df is embs
-            else build
-        )
-        # warm once at k=1 (JIT/codegen), then measure
-        run(build_fixed, df)
-        t1 = run(build_fixed, df)
-        tk = run(build_fixed, scaled(df, k, id_col))
-        alpha = math.log(max(tk, 1e-3) / max(t1, 1e-3)) / math.log(k)
-        results[name] = {
-            "t1": round(t1, 2),
-            "tk": round(tk, 2),
-            "alpha": round(alpha, 2),
-        }
-        print(f"# {name}: t1={t1:.2f}s t{k}={tk:.2f}s alpha={alpha:.2f}", file=sys.stderr)
+            build = lambda d, _b=build, _i=id_col: _b(d, _i)
+        big_df = scaled(df, k, id_col)
+        point(name, lambda b=build, d=df: b(d), lambda b=build, d=big_df: b(d))
 
     # --- WARC splittable: ONE plain archive, byte-range parallelism --
     # a single uncompressed .warc (file count = 1 at every k) must
@@ -1065,29 +1052,13 @@ def main() -> int:
         split = 1 << 20
 
         def _read(p):
-            return lambda _d: bw.read_warc_splittable(
-                spark, p, split_bytes=split
-            )
+            return lambda: bw.read_warc_splittable(spark, p, split_bytes=split)
 
         n_tasks = bw.read_warc_splittable(
             spark, f"{tmp}/big", split_bytes=split
         ).rdd.getNumPartitions()
-        run(_read(f"{tmp}/one"), None)
-        t1 = run(_read(f"{tmp}/one"), None)
-        tk = run(_read(f"{tmp}/big"), None)
-        alpha = math.log(max(tk, 1e-3) / max(t1, 1e-3)) / math.log(k)
-        results["warc_splittable_one_file"] = {
-            "t1": round(t1, 2),
-            "tk": round(tk, 2),
-            "alpha": round(alpha, 2),
-            "tasks_at_k": n_tasks,
-            "files": 1,
-        }
-        print(
-            f"# warc_splittable_one_file: t1={t1:.2f}s t{k}={tk:.2f}s "
-            f"alpha={alpha:.2f} tasks={n_tasks} (files=1)",
-            file=sys.stderr,
-        )
+        point("warc_splittable_one_file", _read(f"{tmp}/one"), _read(f"{tmp}/big"))
+        results["warc_splittable_one_file"].update(tasks_at_k=n_tasks, files=1)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

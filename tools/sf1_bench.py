@@ -18,19 +18,18 @@ Usage: python tools/sf1_bench.py [--k K] [N] [SF1_DIR] [name ...]
        for sf10 gives base-100)
 Prints one JSON line {query: {"t01": s, "t1": s, "alpha": a}}.
 
-Sub-second floor (BASELINE.md's documented ~1.7x measurement-context
-effect): a single warm rep of a <1s query gives noisy exponents near
-the 1.3 flag threshold, so any side reading under 1s is re-timed to
-the MINIMUM of 3 warm reps — mirroring the tools/rebench.py protocol.
+Each side is timed by ``bench.scaling_point``, the protocol shared
+with tools/scale_smoke.py: a side reading under 1s is re-timed to the
+MINIMUM of 3 warm reps (BASELINE.md's documented ~1.7x
+measurement-context effect: a single warm rep of a <1s query gives
+noisy exponents near the 1.3 flag threshold).
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -47,7 +46,7 @@ def main() -> int:
     sf1 = argv[1] if len(argv) > 1 else "/tmp/sf1"
 
     import __spark_entry__ as entrymod
-    from bench import quiet_spark
+    from bench import quiet_spark, scaling_point, timed
 
     spark = quiet_spark("bubbles_spark_sf1_bench")
     # split synthesized single-file tables at row-group grain
@@ -74,44 +73,23 @@ def main() -> int:
     if len(argv) > 2:
         top = [q for q in argv[2:] if q in qs]
 
-    def run(name: str, sf_dir: str) -> float:
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.time() - t0
-
-    def warm_min(name: str, sf_dir: str) -> float:
-        """One warm rep; if it reads sub-second, the min of 3 warm
-        reps (the rebench.py minimum protocol — single sub-second
-        samples give untrustworthy exponents near the flag bar)."""
-        t = run(name, sf_dir)
-        if t < 1.0:
-            t = min(t, run(name, sf_dir), run(name, sf_dir))
-        return t
-
-    run("flagship_revenue_by_nation", SF01)  # warm-up
+    timed(lambda: qs["flagship_revenue_by_nation"](spark, SF01))  # warm-up
 
     results: dict[str, dict] = {}
     for name in top:
         try:
-            run(name, SF01)
-            t01 = warm_min(name, SF01)
-            run(name, sf1)
-            t1 = warm_min(name, sf1)
+            p = scaling_point(
+                lambda: qs[name](spark, SF01), lambda: qs[name](spark, sf1), k
+            )
         except Exception as exc:  # noqa: BLE001 — record and continue
             results[name] = {"error": f"{type(exc).__name__}: {exc}"[:160]}
             print(f"# ERROR {name}: {results[name]['error']}", file=sys.stderr)
             continue
-        alpha = math.log10(max(t1, 1e-3) / max(t01, 1e-3)) / math.log10(k)
-        results[name] = {
-            "t01": round(t01, 2),
-            "t1": round(t1, 2),
-            "alpha": round(alpha, 2),
-        }
-        flag = "  <-- SUPER-LINEAR" if alpha > 1.3 else ""
+        results[name] = {"t01": p["t1"], "t1": p["tk"], "alpha": p["alpha"]}
+        flag = "  <-- SUPER-LINEAR" if p["alpha"] > 1.3 else ""
         print(
-            f"# {name}: sf0.1={t01:.2f}s sf_k{k}={t1:.2f}s alpha={alpha:.2f}{flag}",
+            f"# {name}: sf0.1={p['t1']:.2f}s sf_k{k}={p['tk']:.2f}s "
+            f"alpha={p['alpha']:.2f}{flag}",
             file=sys.stderr,
         )
 
