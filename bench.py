@@ -344,13 +344,15 @@ BENCH_QUERIES = [
 ]
 
 
-def quiet_spark(app_name: str = "bubbles_spark_bench"):
-    """The timing tools' SparkSession, whose stderr keeps only the
-    timing lines and real warnings: no progress bars, the benchmark's
-    log4j2 config (drops the benign late-heartbeat accumulator
-    traces), and no pandas FutureWarning from every Arrow-backed
-    Python worker.  The workers inherit the JVM's environment, so
-    PYTHONWARNINGS is set before the session (and its JVM) starts."""
+def quiet_spark(app_name: str = "bubbles_spark_bench", **kwargs):
+    """The timing and gate tools' SparkSession, whose stderr keeps
+    only the timing lines and real warnings: no progress bars, the
+    benchmark's log4j2 config (drops the benign late-heartbeat
+    accumulator traces), and no pandas FutureWarning from every
+    Arrow-backed Python worker.  The workers inherit the JVM's
+    environment, so PYTHONWARNINGS is set before the session (and its
+    JVM) starts.  Other keyword arguments (``master``, ...) go to
+    ``get_spark``."""
     from bubbles_spark.session import get_spark
 
     os.environ["PYTHONWARNINGS"] = "ignore::FutureWarning:pyspark.sql.pandas.serializers"
@@ -362,6 +364,7 @@ def quiet_spark(app_name: str = "bubbles_spark_bench"):
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.extraJavaOptions": f"-Dlog4j2.configurationFile=file:{log4j}",
         },
+        **kwargs,
     )
 
 

@@ -767,8 +767,8 @@ def id_gaps(df: DataFrame, col: str) -> DataFrame:
     result = the sequence is contiguous.
 
     The islands trick under the DISTRIBUTED rank: distinct ids get a
-    global row number (``_with_global_row_number`` — range partition
-    + per-partition offsets, never a single-task sort), ``id − rn``
+    global row number (``_with_global_row_number`` — value buckets
+    + per-bucket carry, never a single-task sort), ``id − rn``
     is constant within each contiguous island, islands reduce to
     (start, end), and consecutive islands pair by a second two-phase
     rank + self-equi-join (rank = rank+1) — so even a pathological

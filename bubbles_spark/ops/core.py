@@ -30,7 +30,7 @@ def shuffle_partitions(spark, default: int | None = None) -> int:
     """``spark.sql.shuffle.partitions`` as an int, surviving platforms
     where the conf is non-numeric (e.g. 'auto' under auto-optimized
     shuffle) — fall back to the cluster's default parallelism, the
-    right partition count for a range-partitioned two-phase pass.
+    right bucket count for a two-phase scan.
 
     No explicit fallback string to ``conf.get``: Spark 4.1 TYPE-CHECKS
     the supplied default against the conf's declared type and throws
@@ -512,14 +512,14 @@ def _threshold_topk(ranked: DataFrame, key_col: str, k: int) -> DataFrame:
        guarantee is deterministic (GK, not probabilistic), so the
        filtered survivor set always holds ≥ k rows.
     2. Filter to survivors (~1.5k rows) and exact-trim with the
-       distributed two-phase rank (range partition + per-partition
-       offsets, ``_with_global_row_number``) — no single task sees
-       more than its range's share.
+       distributed two-phase rank (value buckets + per-bucket carry,
+       ``_with_global_row_number``) — no single task sees more than
+       its bucket's share.
 
     Requires ``key_col`` to be deterministic content (see
     ``_uniform_from_content``) so both passes score rows identically.
     Driver traffic: one count, one double (the cutoff), and the
-    O(#partitions) offset map.
+    rank's O(#buckets) quantile bounds.
     """
     n = ranked.count()
     if n <= k:
@@ -745,33 +745,15 @@ def temporal_split(
     )
 
 
-# Inputs at or under this row count rank in ONE ordered window task
+# Inputs at or under this row count scan in ONE ordered window task
 # (a few tens of MB for the narrow projections the rank family feeds)
-# instead of paying the two-phase probe + offsets machinery.  Most
+# instead of paying the two-phase pin + bucketing machinery.  Most
 # rank-family callers rank per-entity AGGREGATES (customer-sized, not
 # event-sized), so at bench scale this collapses 3-4 scheduler jobs
 # per rank call to one — the round-8 regression was exactly that job
 # overhead.  Above the threshold the two-phase path takes over, so
 # nothing data-sized ever sorts in a single task.
 _SMALL_RANK_ROWS = 2_000_000
-
-
-def _pin_and_count(
-    df: DataFrame, n_hint: int | None
-) -> tuple[DataFrame, int]:
-    """Pin an AGGREGATE-shaped rank input (eager localCheckpoint) and
-    return it with its row count over the materialized blocks — for
-    inputs whose every extra evaluation re-runs a full upstream
-    aggregate.  Raw, possibly corpus-sized inputs must NOT come here
-    without a hint (an eager checkpoint of 100 TB before knowing its
-    size is the disaster the limit-probe in ``_small_enough`` avoids).
-    Callers that pass an ``n_hint`` at or under the threshold skip
-    the materialization entirely (their input feeds ONE window job)."""
-    if n_hint is not None and n_hint <= _SMALL_RANK_ROWS:
-        return df, n_hint
-    inp = df.localCheckpoint(eager=True)
-    n = n_hint if n_hint is not None else inp.count()
-    return inp, n
 
 
 def _small_enough(df: DataFrame) -> bool:
@@ -847,74 +829,54 @@ def _rank_proxy(df: DataFrame, name: str) -> Column | None:
         return F.col(name).cast("double")
     if isinstance(dt, T.DateType):
         return F.datediff(F.col(name), F.lit("1970-01-01").cast("date")).cast("double")
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+    if isinstance(dt, T.TimestampType):
         return F.col(name).cast("double")
+    if isinstance(dt, T.TimestampNTZType):
+        # no direct cast to double; read in the session zone, which is
+        # monotone non-decreasing (a DST gap or overlap only merges)
+        return F.col(name).cast("timestamp").cast("double")
     return None
 
 
-def _with_global_row_number(
-    df: DataFrame,
-    order_by: Sequence[tuple[str, str] | str],
-    n_hint: int | None = None,
+def _scan_buckets(
+    df: DataFrame, order_by: Sequence[tuple[str, str] | str]
 ) -> DataFrame:
-    """Scale-safe global row_number as ``__rn``.
-
-    Small inputs (``n_hint`` or an early-terminating LIMIT probe says
-    ≤ ``_SMALL_RANK_ROWS``): ONE constant-partitioned ordered window —
-    a single task sorts a few tens of MB, no probe / offsets / cache
-    jobs.  Callers that already counted pass ``n_hint`` to skip even
-    the probe job; most rank-family callers rank per-entity
-    aggregates, so this is the common path at any scale.
-
-    Large inputs: two-phase rank — cut the sort-key domain into
-    buckets, rank within buckets in parallel, add per-bucket
-    prefix-sum offsets (an O(#buckets) metadata collect).  A bare
-    ``Window.orderBy`` over data-sized input funnels EVERY row through
-    one task — the round-1 scale-killer this path exists to avoid.
+    """The bucketing step of the two-phase scan: ``df`` pinned by an
+    EAGER ``localCheckpoint`` plus ``__bkt``, whose ascending order is
+    the ``order_by`` order (equal sort keys share a bucket).
 
     The bucket is a pure FUNCTION OF THE ROW'S VALUE: boundary values
     are sampled once (Greenwald–Khanna quantiles of a double
-    sort-proxy) and baked into the plan as LITERALS, so the offsets
-    job and the rank job assign identical buckets no matter how Spark
-    physically partitions either evaluation.  (The pre-round-8 design
-    keyed offsets off ``spark_partition_id()`` after
-    ``repartitionByRange``, whose RDD-id-seeded boundary sampling
-    could shift every rank on a cache-evicted recompute.)  Bucket
-    assignment is a balanced binary-search when-tree over the literal
-    bounds — O(log p) per row and codegen-shallow at any partition
-    count.  The input is pinned by an EAGER ``localCheckpoint`` so the
-    probe, offsets, and rank jobs share one materialization without a
+    sort-proxy of the first order column) and baked into the plan as
+    LITERALS, so every evaluation assigns identical buckets no matter
+    how Spark physically partitions it.  Assignment is a balanced
+    binary-search when-tree over the literal bounds — O(log p) per
+    row and codegen-shallow at any partition count.  The pin lets the
+    quantile probe and the scan share one materialization without a
     module-level cache slot that concurrent pipelines could evict
     (storage is executor MEMORY_AND_DISK and is released by the
     ContextCleaner when the plan is garbage-collected).
 
-    Ties across rows with equal sort keys colocate (equal values get
-    equal buckets); within equal full sort keys order is undefined, as
-    with any row_number — callers needing bit-reproducibility pass a
-    unique tiebreak column, as all oracle-paired callers do.
-
-    Non-numeric first sort column: falls back to the range-partition
-    scheme (checkpoint-pinned pids), documented less robust.
-    """
-    cols = _order_cols(order_by)
+    A first order column with no numeric proxy (strings) falls back
+    to range partitioning keyed by the partition id, correct
+    only while every evaluation sees ONE physical partitioning: the
+    eager pin materializes it, since the RDD-id-seeded range sampler
+    could re-draw different boundaries on a recompute (the round-7
+    nondeterminism class the value buckets avoid)."""
     first = order_by[0]
     if isinstance(first, str):
         name, desc = first, False
     else:
         name, desc = first[0], str(first[1]).lower().startswith("d")
     proxy = _rank_proxy(df, name)
+    n_parts = shuffle_partitions(df.sparkSession)
     if proxy is None:
-        return _with_global_row_number_by_pid(df, order_by)
-    small = (
-        n_hint <= _SMALL_RANK_ROWS if n_hint is not None
-        else _small_enough(df)
-    )
-    if small:
-        w = Window.partitionBy(F.lit(0)).orderBy(*cols)
-        return df.withColumn("__rn", F.row_number().over(w))
+        return (
+            df.repartitionByRange(n_parts, *_order_cols(order_by))
+            .withColumn("__bkt", F.spark_partition_id())
+            .localCheckpoint(eager=True)
+        )
     inp = df.localCheckpoint(eager=True)
-    proxy = _rank_proxy(inp, name)
-    n_parts = shuffle_partitions(inp.sparkSession)
     qs = [i / n_parts for i in range(1, n_parts)]
     probe = inp.select(proxy.alias("__p")).filter(F.col("__p").isNotNull())
     bounds = sorted(set(probe.stat.approxQuantile("__p", qs, 0.01)))
@@ -922,76 +884,126 @@ def _with_global_row_number(
     # IEEE doubles), so one search routine serves both directions
     sproxy = -proxy if desc else proxy
     sbounds = sorted(-b for b in bounds) if desc else bounds
-    bkt = _bucket_search(sproxy, sbounds)
     # NULLs sort first under asc(), last under desc() (_order_cols);
-    # give them the matching extreme bucket
-    null_bkt = len(bounds) + 1 if desc else -1
-    bkt = F.when(F.col(name).isNull(), F.lit(null_bkt)).otherwise(bkt)
-    bucketed = inp.withColumn("__bkt", bkt)
-    sizes = {
-        r["__bkt"]: r["__cnt"]
-        for r in bucketed.groupBy("__bkt")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-        .collect()
-    }
-    acc = 0
-    offsets: dict[int, int] = {}
-    for b in sorted(sizes):
-        offsets[b] = acc
-        acc += sizes[b]
-    off_map = F.create_map(
-        *[F.lit(x) for bkt_off in offsets.items() for x in bkt_off]
-    )
-    w = Window.partitionBy("__bkt").orderBy(*cols)
-    return (
-        bucketed.withColumn(
-            "__rn",
-            F.row_number().over(w) + F.coalesce(off_map[F.col("__bkt")], F.lit(0)),
-        )
-        .drop("__bkt")
+    # NaN, Spark's largest double, last under asc(), first under
+    # desc(): give each the matching extreme bucket
+    lo, hi = -1, len(bounds) + 1
+    null_bkt, nan_bkt = (hi, lo) if desc else (lo, hi)
+    return inp.withColumn(
+        "__bkt",
+        F.when(F.col(name).isNull(), F.lit(null_bkt))
+        .when(F.isnan(proxy), F.lit(nan_bkt))
+        .otherwise(_bucket_search(sproxy, sbounds)),
     )
 
 
-def _with_global_row_number_by_pid(
-    df: DataFrame, order_by: Sequence[tuple[str, str] | str]
+def _carry(
+    bucketed: DataFrame,
+    groups: Sequence[str],
+    parts: dict[str, Column],
+    agg: Callable[[str], Column] = F.sum,
 ) -> DataFrame:
-    """Fallback two-phase rank for non-numeric first sort columns:
-    range-repartition on the sort key, rank within partitions, add
-    per-partition prefix-sum offsets keyed by ``spark_partition_id``.
-    Correct only while both jobs see ONE physical partitioning — the
-    eager ``localCheckpoint`` pins it by materializing (a plain
-    persist could be evicted and the RDD-id-seeded range sampler
-    could then re-draw different boundaries on recompute, silently
-    shifting every rank — the round-7 nondeterminism class; the
-    numeric path above buckets by value instead)."""
+    """The carry step of the two-phase scan: join onto the bucketed
+    rows, per ``parts`` item ``name: partial``, ``name`` — the ``agg``
+    of the per-(bucket, group) ``partial`` aggregates over every
+    EARLIER bucket of the row's ``groups`` key (NULL in the first) —
+    and ``name_tot``, the ``agg`` over all of the key's buckets.  The
+    partial table holds at most #buckets rows per key, so its windows
+    never sort data-sized input in one task and the carry needs no
+    driver collect."""
+    keys = ["__bkt", *groups]
+    key = [F.col(g) for g in groups] or [F.lit(0)]
+    earlier = (
+        Window.partitionBy(*key)
+        .orderBy("__bkt")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    whole = Window.partitionBy(*key)
+    carry = bucketed.groupBy(*keys).agg(
+        *[p.alias(n) for n, p in parts.items()]
+    ).select(
+        *keys,
+        *[agg(n).over(earlier).alias(n) for n in parts],
+        *[agg(n).over(whole).alias(f"{n}_tot") for n in parts],
+    )
+    return bucketed.join(carry if groups else F.broadcast(carry), keys)
+
+
+def _prefix_scan(
+    df: DataFrame,
+    order_by: Sequence[tuple[str, str] | str],
+    sums: Sequence[str] = (),
+    groups: Sequence[str] = (),
+    n_hint: int | None = None,
+    small_hint: bool | None = None,
+) -> DataFrame:
+    """The one scale-safe prefix scan behind every global rank and
+    cumulative count: ``df`` plus, in ``order_by`` order within each
+    ``groups`` key (the whole table when empty), per ``sums`` column
+    ``c`` its inclusive running sum ``cum_<c>`` and the key's total
+    ``tot_<c>`` — or, with no ``sums``, the row number ``__rn``.
+
+    The one size decision: ``small_hint`` when given, else ``n_hint``
+    against ``_SMALL_RANK_ROWS``, else the early-terminating LIMIT
+    probe.  A small input scans in ONE ordered window per key — a
+    single task sorts a few tens of MB, no pin / bucketing / carry
+    jobs.  Callers that already counted pass ``n_hint`` to skip even
+    the probe job.
+
+    A large input runs the two-phase scan: ``_scan_buckets`` cuts the
+    order into value buckets, the scan runs within (bucket, key) in
+    parallel, and ``_carry`` adds the running total of the key's
+    earlier buckets.  A bare ``Window.orderBy`` over data-sized input
+    funnels EVERY row through one task — the round-1 scale-killer
+    this path exists to avoid.
+
+    Ties across rows with equal sort keys colocate (equal values get
+    equal buckets); within equal full sort keys the order is
+    undefined, as with any row_number — callers needing
+    bit-reproducibility pass a unique tiebreak column, as all
+    oracle-paired callers do."""
     cols = _order_cols(order_by)
-    n_parts = shuffle_partitions(df.sparkSession)
-    parted = (
-        df.repartitionByRange(n_parts, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    sizes = {
-        r["__pid"]: r["__cnt"]
-        for r in parted.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
-    off_map = F.create_map(
-        *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
-    )
-    w = Window.partitionBy("__pid").orderBy(*cols)
-    return (
-        parted.withColumn(
-            "__rn",
-            F.row_number().over(w) + F.coalesce(off_map[F.col("__pid")], F.lit(0)),
+    if small_hint is None:
+        small_hint = (
+            n_hint <= _SMALL_RANK_ROWS if n_hint is not None
+            else _small_enough(df)
         )
-        .drop("__pid")
+    if small_hint:
+        key = [F.col(g) for g in groups] or [F.lit(0)]
+        run = Window.partitionBy(*key).orderBy(*cols)
+        if not sums:
+            return df.withColumn("__rn", F.row_number().over(run))
+        run = run.rowsBetween(Window.unboundedPreceding, 0)
+        return df.select(
+            "*",
+            *[F.sum(c).over(run).alias(f"cum_{c}") for c in sums],
+            *[F.sum(c).over(Window.partitionBy(*key)).alias(f"tot_{c}") for c in sums],
+        )
+    parts = {f"__carry{i}": F.sum(c) for i, c in enumerate(sums)}
+    b = _carry(
+        _scan_buckets(df, order_by),
+        groups,
+        parts or {"__carry": F.count(F.lit(1))},
     )
+    helpers = [c for c in b.columns if c not in df.columns]
+    run = Window.partitionBy("__bkt", *groups).orderBy(*cols)
+    if not sums:
+        rn = F.row_number().over(run) + F.coalesce("__carry", F.lit(0))
+        return b.withColumn("__rn", rn).drop(*helpers)
+    run = run.rowsBetween(Window.unboundedPreceding, 0)
+    return b.withColumns(
+        {f"cum_{c}": F.sum(c).over(run) + F.coalesce(o, F.lit(0)) for o, c in zip(parts, sums)}
+        | {f"tot_{c}": F.col(f"{o}_tot") for o, c in zip(parts, sums)}
+    ).drop(*helpers)
+
+
+def _with_global_row_number(
+    df: DataFrame,
+    order_by: Sequence[tuple[str, str] | str],
+    n_hint: int | None = None,
+) -> DataFrame:
+    """Scale-safe global row_number as ``__rn`` (``_prefix_scan``)."""
+    return _prefix_scan(df, order_by, n_hint=n_hint)
 
 
 def _order_cols(orderby: Sequence[tuple[str, str] | str]) -> list[Column]:

@@ -432,7 +432,7 @@ def connected_components(
             .distinct()
         )
         # Small-graph fast path — the same adaptive-by-measured-size
-        # pattern as drift._cum_counts_table: the PAIR graph is
+        # pattern as core._prefix_scan: the PAIR graph is
         # candidate-pair-sized (≪ corpus — near-dup hits, not rows),
         # and below a few million edges the iterative machinery's
         # ~16 materialization cuts cost 10-30× more than solving the

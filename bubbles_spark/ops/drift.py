@@ -24,7 +24,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from bubbles_spark.ops.core import _with_global_row_number, shuffle_partitions
+from bubbles_spark.ops.core import _prefix_scan, _with_global_row_number
 
 __all__ = [
     "exact_quantiles",
@@ -64,53 +64,22 @@ __all__ = [
 
 def _partitioned_cumsum(df: DataFrame, order_col: str, sum_cols: list[str]):
     """Cumulative sums of ``sum_cols`` under the global ``order_col``
-    order, scale-safely: range-partition on the order key, cumsum
-    within partitions in parallel, add per-partition prefix offsets
-    (an O(#partitions) driver collect — metadata, not data).  The
-    same two-phase trick as ``core._with_global_row_number``; a bare
-    ``Window.orderBy`` here would funnel every row through one task.
+    order, scale-safely (``core._prefix_scan``; a bare
+    ``Window.orderBy`` here would funnel every row through one task).
+    ``df`` must be distinct-keyed on ``order_col``: the running sums
+    are then exact on either path of the scan.
 
-    Returns ``(cum_df, totals, parted)``: the input rows plus
-    ``cum_<col>`` columns (inclusive of the current row), the grand
-    total per summed column, and the pinned intermediate (kept in the
-    signature for caller compatibility; the eager ``localCheckpoint``
-    makes the pid→offset map safe against cache eviction — a lost
-    block fails loudly instead of silently re-sampling ranges, and
-    the ContextCleaner reclaims storage when the plan is dropped)."""
-    spark = df.sparkSession
-    n_parts = shuffle_partitions(spark)
-    parted = (
-        df.repartitionByRange(n_parts, order_col)
-        .sortWithinPartitions(order_col)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    per_pid = (
-        parted.groupBy("__pid")
-        .agg(*[F.sum(c).alias(c) for c in sum_cols])
-        .collect()
-    )
-    sizes = {r["__pid"]: [r[c] or 0 for c in sum_cols] for r in per_pid}
-    offsets: dict[int, list[int]] = {}
-    acc = [0] * len(sum_cols)
-    for pid in sorted(sizes):
-        offsets[pid] = list(acc)
-        acc = [a + s for a, s in zip(acc, sizes[pid])]
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = parted
-    for i, c in enumerate(sum_cols):
-        omap = F.create_map(
-            *[F.lit(x) for pid, offs in offsets.items() for x in (pid, offs[i])]
-        )
-        out = out.withColumn(
-            f"cum_{c}",
-            F.sum(c).over(w) + F.coalesce(omap[F.col("__pid")], F.lit(0)),
-        )
-    return out, {c: acc[i] for i, c in enumerate(sum_cols)}, parted
+    Returns ``(cum_df, totals)``: the input rows plus ``cum_<col>``
+    columns (inclusive of the current row) and the grand total per
+    summed column, collected with the row count that sizes the
+    scan."""
+    tot = df.agg(
+        F.count(F.lit(1)).alias("__n"), *[F.sum(c).alias(c) for c in sum_cols]
+    ).collect()[0]
+    cum = _prefix_scan(df, [order_col], sum_cols, n_hint=tot["__n"])
+    return cum.drop(*[f"tot_{c}" for c in sum_cols]), {
+        c: tot[c] or 0 for c in sum_cols
+    }
 
 
 def exact_quantiles(df: DataFrame, col: str, qs: list[float]) -> list[float]:
@@ -120,8 +89,8 @@ def exact_quantiles(df: DataFrame, col: str, qs: list[float]) -> list[float]:
     agree on the data agree on the quantile to the last bit.
 
     One distributed ranking pass for ALL requested quantiles
-    (``_with_global_row_number``: range partition + per-partition
-    offsets — no single-task global sort), then a rank-membership
+    (``_with_global_row_number`` — no single-task global sort on
+    data-sized input), then a rank-membership
     filter collects exactly ``len(qs)`` rows to the driver.
     """
     vals = df.select(F.col(col).alias("__v")).filter(F.col("__v").isNotNull())
@@ -302,11 +271,11 @@ def ks_distance(ref: DataFrame, cur: DataFrame, col: str) -> DataFrame:
     Returns one row: (ks, n_ref, n_cur).
 
     Exact, not approximated, and scale-safe: pool both sides with a
-    0/1 tag (map-only), ONE keyed count per distinct value, then a
-    range-partitioned cumulative sum (per-partition prefix offsets
-    collected as O(#partitions) driver metadata — the same two-phase
-    trick as ``_with_global_row_number``, never a single-task global
-    window).  The ECDF ratios are one IEEE division per side and the
+    0/1 tag (map-only), ONE keyed count per distinct value, then the
+    global cumulative sum (``_partitioned_cumsum``: one ordered window
+    when the distinct values are few, else the value-bucketed
+    two-phase scan — never a single-task window over data-sized
+    input).  The ECDF ratios are one IEEE division per side and the
     max over exact doubles is order-independent, so the statistic is
     bit-identical across engines."""
     pooled = ref.select(
@@ -318,30 +287,27 @@ def ks_distance(ref: DataFrame, cur: DataFrame, col: str) -> DataFrame:
         F.sum("a").alias("ca"), F.sum("b").alias("cb")
     )
     spark = ref.sparkSession
-    cum, totals, parted = _partitioned_cumsum(per_v, "v", ["ca", "cb"])
-    try:
-        n_ref, n_cur = totals["ca"], totals["cb"]
-        if n_ref == 0 or n_cur == 0:
-            raise ValueError("ks_distance: a side has no non-null values")
-        out = cum.agg(
-            F.max(
-                F.abs(
-                    F.col("cum_ca").cast("double") / F.lit(float(n_ref))
-                    - F.col("cum_cb").cast("double") / F.lit(float(n_cur))
-                )
-            ).alias("ks")
-        ).select(
-            "ks",
-            F.lit(n_ref).cast("bigint").alias("n_ref"),
-            F.lit(n_cur).cast("bigint").alias("n_cur"),
-        )
-        # materialize before unpersist: the 1-row result costs nothing
-        rows = out.collect()
-        from bubbles_spark.ops.core import local_table
+    cum, totals = _partitioned_cumsum(per_v, "v", ["ca", "cb"])
+    n_ref, n_cur = totals["ca"], totals["cb"]
+    if n_ref == 0 or n_cur == 0:
+        raise ValueError("ks_distance: a side has no non-null values")
+    out = cum.agg(
+        F.max(
+            F.abs(
+                F.col("cum_ca").cast("double") / F.lit(float(n_ref))
+                - F.col("cum_cb").cast("double") / F.lit(float(n_cur))
+            )
+        ).alias("ks")
+    ).select(
+        "ks",
+        F.lit(n_ref).cast("bigint").alias("n_ref"),
+        F.lit(n_cur).cast("bigint").alias("n_cur"),
+    )
+    # the 1-row result as a local table: consumers never re-run the scan
+    rows = out.collect()
+    from bubbles_spark.ops.core import local_table
 
-        return local_table(spark, rows, out.schema)
-    finally:
-        parted.unpersist()
+    return local_table(spark, rows, out.schema)
 
 
 def auc_score(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
@@ -352,8 +318,8 @@ def auc_score(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
 
     The whole statistic stays in INTEGER space until one final
     division: per distinct score, (count, positives) aggregate in one
-    shuffle; a range-partitioned cumulative count gives each tie
-    group's rank offset; then
+    shuffle; a cumulative count (``_partitioned_cumsum``) gives each
+    tie group's rank offset; then
 
         S   = Σ pos · (2·cum_before + cnt + 1)      (= 2·rank-sum)
         AUC = (S − n_pos·(n_pos+1)) / (2·n_pos·n_neg)
@@ -371,37 +337,34 @@ def auc_score(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
         )
     )
     spark = df.sparkSession
-    cum, totals, parted = _partitioned_cumsum(per_s, "s", ["cnt", "pos"])
-    try:
-        n = totals["cnt"]
-        n_pos = totals["pos"]
-        n_neg = n - n_pos
-        if n_pos == 0 or n_neg == 0:
-            raise ValueError("auc_score: need both classes present")
-        before = F.col("cum_cnt") - F.col("cnt")
-        s_terms = cum.agg(
-            F.sum(
-                F.col("pos") * (F.lit(2) * before + F.col("cnt") + F.lit(1))
-            ).alias("S")
-        )
-        # n_pos·(n_pos+1) precomputed in PYTHON int space: two int32
-        # literals multiplied engine-side overflow under ANSI folding
-        # once n_pos passes ~46k (hit in the k=4 scale smoke)
-        out = s_terms.select(
-            (
-                (F.col("S") - F.lit(n_pos * (n_pos + 1)).cast("bigint"))
-                .cast("double")
-                / F.lit(float(2 * n_pos * n_neg))
-            ).alias("auc"),
-            F.lit(n_pos).cast("bigint").alias("n_pos"),
-            F.lit(n_neg).cast("bigint").alias("n_neg"),
-        )
-        rows = out.collect()
-        from bubbles_spark.ops.core import local_table
+    cum, totals = _partitioned_cumsum(per_s, "s", ["cnt", "pos"])
+    n = totals["cnt"]
+    n_pos = totals["pos"]
+    n_neg = n - n_pos
+    if n_pos == 0 or n_neg == 0:
+        raise ValueError("auc_score: need both classes present")
+    before = F.col("cum_cnt") - F.col("cnt")
+    s_terms = cum.agg(
+        F.sum(
+            F.col("pos") * (F.lit(2) * before + F.col("cnt") + F.lit(1))
+        ).alias("S")
+    )
+    # n_pos·(n_pos+1) precomputed in PYTHON int space: two int32
+    # literals multiplied engine-side overflow under ANSI folding
+    # once n_pos passes ~46k (hit in the k=4 scale smoke)
+    out = s_terms.select(
+        (
+            (F.col("S") - F.lit(n_pos * (n_pos + 1)).cast("bigint"))
+            .cast("double")
+            / F.lit(float(2 * n_pos * n_neg))
+        ).alias("auc"),
+        F.lit(n_pos).cast("bigint").alias("n_pos"),
+        F.lit(n_neg).cast("bigint").alias("n_neg"),
+    )
+    rows = out.collect()
+    from bubbles_spark.ops.core import local_table
 
-        return local_table(spark, rows, out.schema)
-    finally:
-        parted.unpersist()
+    return local_table(spark, rows, out.schema)
 
 
 def cohens_kappa(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
@@ -841,21 +804,10 @@ def _grouped_cum_counts(
 ) -> DataFrame:
     """Per-group cumulative value counts without a per-group sort:
     per-(group, value) counts (map-side combined — a giant group
-    collapses to its distinct values) cumulated by the two-phase
-    trick, where the per-group prefix offsets are a window over the
-    tiny (bucket, group) partial-sum table (≤ #buckets rows per
-    group — no skew, no driver collect, no single-task sort).  The
-    smallest value whose ``__cum`` reaches ceil(q·n) IS the type-1
-    rank-ceil(q·n) value, bit-identical to a per-group row_number
-    rank.
-
-    The bucket is a pure FUNCTION OF THE VALUE (literal quantile
-    boundaries over the distinct values, same scheme as
-    ``core._with_global_row_number``) — never ``spark_partition_id``,
-    whose assignment could shift if a persisted partitioning is
-    evicted and the range partitioner re-samples (the round-7 driver
-    nondeterminism class).  Non-numeric ``col`` falls back to the
-    pid-based variant.
+    collapses to its distinct values) cumulated by
+    ``_cum_counts_prebuilt``.  The smallest value whose ``__cum``
+    reaches ceil(q·n) IS the type-1 rank-ceil(q·n) value,
+    bit-identical to a per-group row_number rank.
 
     Output: group_col, col, __c (value count), __cum (cumulative
     count ≤ value within group), __n (group total)."""
@@ -874,133 +826,30 @@ def _cum_counts_prebuilt(
     col: str,
     small_hint: bool | None = None,
 ) -> DataFrame:
-    """Dispatch tail of ``_grouped_cum_counts`` over a PREBUILT
-    per-(group, value) counts table (column ``__c``) — callers that
-    already hold the counts (e.g. derived from a pinned finer-grained
-    count table) reuse the numeric two-phase / pid-fallback dispatch
-    without a second pass over the raw rows."""
-    from bubbles_spark.ops import core as _core
-
-    proxy = _core._rank_proxy(counts, col)
-    if proxy is None:
-        return _grouped_cum_counts_by_pid(counts, group_col, col)
-    return _cum_counts_table(counts, group_col, col, small_hint=small_hint)
-
-
-def _cum_counts_table(
-    counts: DataFrame,
-    group_col: str,
-    col: str,
-    small_hint: bool | None = None,
-) -> DataFrame:
     """The cumulation tail of ``_grouped_cum_counts`` over a PREBUILT
-    per-(group, value) counts table (column ``__c``) — callers that
-    need cumulative counts over a value grid the raw rows cannot
-    express (zero-filled cells, e.g. ``stattests.jonckheere_terpstra``)
-    build the table themselves and reuse the same small-path /
-    two-phase machinery.  ``col`` must be numeric (``_rank_proxy``
-    resolvable).  Output contract matches ``_grouped_cum_counts``.
+    per-(group, value) counts table (column ``__c``, one row per
+    distinct value of a group) — callers that already hold the counts
+    (derived from a pinned finer-grained count table, or a zero-filled
+    value grid the raw rows cannot express, e.g.
+    ``stattests.jonckheere_terpstra``) reuse it without a second pass
+    over the raw rows.  Extra columns pass through.
 
+    ``core._prefix_scan`` per group: when small, the per-group ordered
+    window IS the right plan (one shuffle, no pin or carry jobs); the
+    two-phase path protects the pathological group with millions of
+    distinct values, its per-group carry a window over the tiny
+    (bucket, group) partial-sum table (no skew, no driver collect).
     ``small_hint``: callers that already PROVED the counts table fits
     under ``_SMALL_RANK_ROWS`` (e.g. via one limit-probe on the
     pre-aggregate rows, an upper bound on distinct values) pass True
-    to skip the limit probe — which re-evaluates the whole upstream
-    aggregate — entirely; None sizes here as always."""
-    from bubbles_spark.ops import core as _core
-    # the counts table is one row per (group, DISTINCT value) — when
-    # small, the per-group ordered window IS the right plan (one
-    # shuffle, no probe/offset jobs); the two-phase path below only
-    # protects the pathological group with millions of distinct
-    # values.  Size via the early-terminating LIMIT probe FIRST —
-    # counts is distinct-values-sized, which for near-unique numeric
-    # columns is corpus-sized, exactly the eager-checkpoint-before-
-    # sizing hazard _pin_and_count's contract forbids; only the
-    # multi-consumer two-phase path below pays the checkpoint
-    if small_hint if small_hint is not None else _core._small_enough(counts):
-        w_in = (
-            Window.partitionBy(group_col)
-            .orderBy(col)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        w_tot = Window.partitionBy(group_col)
-        return counts.withColumn(
-            "__cum", F.sum("__c").over(w_in)
-        ).withColumn("__n", F.sum("__c").over(w_tot))
-    counts = counts.localCheckpoint(eager=True)
-    proxy = _core._rank_proxy(counts, col)
-    n_parts = shuffle_partitions(counts.sparkSession)
-    qs_list = [i / n_parts for i in range(1, n_parts)]
-    probe = counts.select(proxy.alias("__p"))
-    bounds = sorted(set(probe.stat.approxQuantile("__p", qs_list, 0.01)))
-    bkt = _core._bucket_search(proxy, bounds)
-    parted = counts.withColumn("__bkt", bkt)
-    partials = parted.groupBy("__bkt", group_col).agg(
-        F.sum("__c").alias("__pc")
-    )
-    w_off = (
-        Window.partitionBy(group_col)
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = partials.select(
-        "__bkt",
-        group_col,
-        F.coalesce(F.sum("__pc").over(w_off), F.lit(0)).alias("__off"),
-    )
-    totals = partials.groupBy(group_col).agg(F.sum("__pc").alias("__n"))
-    w_in = (
-        Window.partitionBy("__bkt", group_col)
-        .orderBy(col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        parted.withColumn("__cin", F.sum("__c").over(w_in))
-        .join(offsets, ["__bkt", group_col])
-        .join(totals, group_col)
-        .withColumn("__cum", F.col("__off") + F.col("__cin"))
-    )
+    to skip the limit probe, which re-evaluates the whole upstream
+    aggregate; None sizes here.
 
-
-def _grouped_cum_counts_by_pid(
-    counts: DataFrame, group_col: str, col: str
-) -> DataFrame:
-    """Fallback for non-numeric value columns: range-partition on
-    (group, value) and key the offsets by ``spark_partition_id``,
-    pinned by an eager localCheckpoint (see
-    ``core._with_global_row_number_by_pid`` for why the numeric path
-    buckets by value instead)."""
-    n_parts = shuffle_partitions(counts.sparkSession)
-    parted = (
-        counts.repartitionByRange(n_parts, group_col, col)
-        .sortWithinPartitions(group_col, col)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    partials = parted.groupBy("__pid", group_col).agg(
-        F.sum("__c").alias("__pc")
-    )
-    w_off = (
-        Window.partitionBy(group_col)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = partials.select(
-        "__pid",
-        group_col,
-        F.coalesce(F.sum("__pc").over(w_off), F.lit(0)).alias("__off"),
-    )
-    totals = partials.groupBy(group_col).agg(F.sum("__pc").alias("__n"))
-    w_in = (
-        Window.partitionBy("__pid", group_col)
-        .orderBy(col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        parted.withColumn("__cin", F.sum("__c").over(w_in))
-        .join(offsets, ["__pid", group_col])
-        .join(totals, group_col)
-        .withColumn("__cum", F.col("__off") + F.col("__cin"))
-    )
+    Output: the counts columns plus __cum (cumulative count ≤ value
+    within group) and __n (group total)."""
+    return _prefix_scan(
+        counts, [col], ["__c"], [group_col], small_hint=small_hint
+    ).withColumnsRenamed({"cum___c": "__cum", "tot___c": "__n"})
 
 
 def group_quantiles(
@@ -1018,7 +867,7 @@ def group_quantiles(
 
     Scale: the same machinery as ``winsorize_by`` — per-(group,
     value) counts map-side combine (a giant group collapses to its
-    distinct values), range-partitioned two-phase cumsum, per-group
+    distinct values), the per-group prefix scan, per-group
     min-over-threshold picks; one wide aggregate emits EVERY
     requested q in a single pass, then unpivots to long form.  No
     per-group sort, no driver collect, no skew cliff.
@@ -1068,10 +917,10 @@ def winsorize_by(
     LEAST/GREATEST — zero new float math), and scale-safe even when
     ONE group holds most of the table: ranks come from per-(group,
     value) counts (map-side combined — the giant group collapses to
-    its distinct values) cumulated by the range-partitioned two-phase
-    trick, where the per-group prefix offsets are a WINDOW over the
-    tiny (partition-id, group) partial-sum table (≤ #partitions rows
-    per group — no skew, no driver collect, no single-task sort).
+    its distinct values) cumulated by the prefix scan, whose two-phase
+    path carries each group's prefix as a WINDOW over the tiny
+    (bucket, group) partial-sum table (≤ #buckets rows per group —
+    no skew, no driver collect, no single-task sort).
     The smallest value whose cumulative count reaches ceil(q·n) IS
     the type-1 rank-ceil(q·n) value, so results are bit-identical to
     a per-group row_number rank.  NULL values stay NULL; a group with
@@ -1108,28 +957,25 @@ def quantile_normalize(
     Exactness: one integer cumulative count ÷ one integer total — a
     single IEEE division, bit-exact anywhere (equals SQL's
     ``cume_dist()``).  Scale shape: per-DISTINCT-value counts (one
-    keyed shuffle), the range-partitioned two-phase cumsum — never
-    ``cume_dist``'s single-task global window — then an equi-join of
-    the distinct-values-sized table back onto the rows."""
+    keyed shuffle), the global cumsum (``_partitioned_cumsum``: the
+    two-phase scan once the distinct values are many — never
+    ``cume_dist``'s single-task window over data-sized input), then
+    an equi-join of the distinct-values-sized table back onto the
+    rows."""
     c = F.col(col)
     per_v = (
         df.filter(c.isNotNull())
         .groupBy(c.alias("__qv"))
         .agg(F.count(F.lit(1)).alias("__cnt"))
     )
-    cum, totals, parted = _partitioned_cumsum(per_v, "__qv", ["__cnt"])
-    try:
-        n = totals["__cnt"]
-        if n == 0:
-            raise ValueError(f"quantile_normalize: no non-null values in {col!r}")
-        qmap = cum.select(
-            "__qv",
-            (
-                F.col("cum___cnt").cast("double") / F.lit(float(n))
-            ).alias("__q"),
-        ).localCheckpoint(eager=True)
-    finally:
-        parted.unpersist()
+    cum, totals = _partitioned_cumsum(per_v, "__qv", ["__cnt"])
+    n = totals["__cnt"]
+    if n == 0:
+        raise ValueError(f"quantile_normalize: no non-null values in {col!r}")
+    qmap = cum.select(
+        "__qv",
+        (F.col("cum___cnt").cast("double") / F.lit(float(n))).alias("__q"),
+    ).localCheckpoint(eager=True)
     return (
         df.join(qmap, c == F.col("__qv"), "left")
         .withColumn(out_col or col, F.col("__q"))

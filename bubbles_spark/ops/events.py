@@ -2314,9 +2314,10 @@ def concurrency_report(
     one row per DISTINCT instant by a map-side-combined keyed count
     BEFORE any ordering.  With ``by``, the running sum is a per-key
     window (per-key boundary counts bounded by per-key intervals);
-    without, it is the range-partitioned two-phase cumsum
-    (drift._partitioned_cumsum) — never a bare global-ORDER window
-    funneling the curve through one task.
+    without, it is the global cumsum (drift._partitioned_cumsum: one
+    ordered window when the curve is small, else the two-phase scan)
+    — never a bare global-ORDER window funneling a data-sized curve
+    through one task.
 
     Output: [by,] ts, delta, concurrent (BIGINT), ordered by ts."""
     s, e = F.col(start_col), F.col(end_col)
@@ -2339,13 +2340,11 @@ def concurrency_report(
         ).orderBy(by, "ts")
     from bubbles_spark.ops.drift import _partitioned_cumsum
 
-    cum, _, parted = _partitioned_cumsum(deltas, "ts", ["delta"])
+    cum, _ = _partitioned_cumsum(deltas, "ts", ["delta"])
     out = cum.select(
         "ts", "delta", F.col("cum_delta").cast("bigint").alias("concurrent")
     ).orderBy("ts")
-    out = out.localCheckpoint(eager=True)
-    parted.unpersist()
-    return out
+    return out.localCheckpoint(eager=True)
 
 
 def state_dwell_report(

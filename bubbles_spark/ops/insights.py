@@ -11,7 +11,7 @@ Reference scope: Stiivi/bubbles ships nothing comparable (SURVEY.md
 the same exactness discipline as ops/drift.py: counts and ranks are
 integers, money stays DECIMAL end-to-end, every emitted double is a
 fixed sequence of IEEE steps on exact operands, and every global
-ranking is the two-phase range-partitioned pass — never a single-task
+ranking is the two-phase value-bucketed scan — never a single-task
 window over data.
 """
 
@@ -583,9 +583,9 @@ def abc_classification(
     classes); each share is one IEEE division and the class cut
     compares prior-share doubles both engines derive identically.
 
-    Scale: one two-phase global rank (never a single-task window),
-    then a range-partitioned two-phase cumulative sum over the unique
-    rank — both metadata-collect passes; no data-sized window.
+    Scale: one global rank, then a global cumulative sum over the
+    unique rank (``core._prefix_scan`` both, two-phase past
+    ``_SMALL_RANK_ROWS``); no data-sized single-task window.
 
     Output: id, value, rank, cum_value, cum_share, abc_class."""
     from bubbles_spark.ops.drift import _partitioned_cumsum
@@ -602,32 +602,28 @@ def abc_classification(
     ranked = _with_global_row_number(
         base.withColumn("__nv", -F.col("value")), ["__nv", "id"]
     ).drop("__nv")
-    cum, totals, parted = _partitioned_cumsum(
+    cum, totals = _partitioned_cumsum(
         ranked.withColumnRenamed("__rn", "rank"), "rank", ["value"]
     )
-    try:
-        total = totals["value"]
-        prior = (F.col("cum_value") - F.col("value")).cast("decimal(18,2)")
-        prior_share = prior.cast("double") / F.lit(float(total)).cast("double")
-        out = cum.select(
-            "id",
-            "value",
-            F.col("rank").cast("bigint").alias("rank"),
-            F.col("cum_value").cast("decimal(18,2)").alias("cum_value"),
-            (
-                F.col("cum_value").cast("decimal(18,2)").cast("double")
-                / F.lit(float(total)).cast("double")
-            ).alias("cum_share"),
-            F.when(prior_share < a_share, "A")
-            .when(prior_share < b_share, "B")
-            .otherwise("C")
-            .alias("abc_class"),
-            # item-table-sized output: materialize before releasing the
-            # cumsum cache (quantile_normalize discipline)
-        ).localCheckpoint(eager=True)
-    finally:
-        parted.unpersist()
-    return out
+    total = totals["value"]
+    prior = (F.col("cum_value") - F.col("value")).cast("decimal(18,2)")
+    prior_share = prior.cast("double") / F.lit(float(total)).cast("double")
+    return cum.select(
+        "id",
+        "value",
+        F.col("rank").cast("bigint").alias("rank"),
+        F.col("cum_value").cast("decimal(18,2)").alias("cum_value"),
+        (
+            F.col("cum_value").cast("decimal(18,2)").cast("double")
+            / F.lit(float(total)).cast("double")
+        ).alias("cum_share"),
+        F.when(prior_share < a_share, "A")
+        .when(prior_share < b_share, "B")
+        .otherwise("C")
+        .alias("abc_class"),
+        # item-table-sized output, pinned: consumers never re-run the
+        # rank and the scan
+    ).localCheckpoint(eager=True)
 
 
 def weighted_median(
@@ -1292,7 +1288,7 @@ def log_rank_test(
     At-risk counts at POOLED times (each arm must be evaluated at the
     other arm's event times too) come from a zero-filled
     (distinct pooled durations × 2 arms) grid cumulated by the shared
-    two-phase machinery (``drift._cum_counts_table`` — no single-task
+    two-phase machinery (``drift._cum_counts_prebuilt`` — no single-task
     sort at any distinct-duration count):
     ``n_at_risk = n_arm − cum_leaving + leaving_here``.
 
@@ -1306,7 +1302,7 @@ def log_rank_test(
 
     Output (one row): group_a (string), n_total, o_a (bigint),
     e_a, v_a, z, chi2 (double)."""
-    from bubbles_spark.ops.drift import _cum_counts_table
+    from bubbles_spark.ops.drift import _cum_counts_prebuilt
 
     ev = F.col(event_col).cast("int")
     base = df.filter(
@@ -1343,7 +1339,7 @@ def log_rank_test(
             F.coalesce("__d", F.lit(0)).alias("__dd"),
         )
     )
-    cum = _cum_counts_table(grid, "__grp", "__t")
+    cum = _cum_counts_prebuilt(grid, "__grp", "__t")
     risk = cum.select(
         "__grp",
         "__t",

@@ -1225,19 +1225,18 @@ def _spearman_suffstats(cells: DataFrame) -> DataFrame:
     count ``__c`` and the exact decimal partials ``__tx = Σ r2x`` /
     ``__txx = Σ r2x²`` — that aggregate IS the per-(group, value)
     counts table the cumulative-rank machinery wants, so the y ranks
-    come from feeding it straight to ``_cum_counts_table`` (prebuilt-
-    counts entry point) and the y side NEVER joins back to the raw
-    rows.  r13: vs the symmetric two-rank-join shape this removes one
-    full counts pass over the corpus and the corpus↔rank-table y join
-    (the dominant shuffle when y is near-unique), and moves the
-    five-sum moment aggregate from corpus-sized to distinct-y-sized.
+    come from feeding it straight to ``_cum_counts_prebuilt`` and the
+    y side NEVER joins back to the raw rows.  r13: vs the symmetric
+    two-rank-join shape this removes one full counts pass over the
+    corpus and the corpus↔rank-table y join (the dominant shuffle when
+    y is near-unique), and moves the five-sum moment aggregate from
+    corpus-sized to distinct-y-sized.
 
     Exactness: ``__c``/``__tx``/``__txx`` are exact integer /
     DECIMAL(38,0) sums; regrouping Σ r2x·f(y) as Σ_y (Σ r2x)·f(y) is
     reassociation of exact integer addition — every downstream
     sufficient statistic is value-identical to the join-based shape,
-    so rho's IEEE sequence is bit-identical.  Non-numeric ``__y``
-    falls back to the same pid-based cumulative the old path used.
+    so rho's IEEE sequence is bit-identical.
 
     Output: one row per (__g, __y) with __c (bigint), __tx, __txx
     (decimal(38,0)), __r2y (bigint doubled average y-rank).
@@ -1248,11 +1247,7 @@ def _spearman_suffstats(cells: DataFrame) -> DataFrame:
     cells-sized tables, and every sum regroups the same exact
     integers (Σ over rows of f(r2x) = Σ over cells of count·f(r2x)),
     so all downstream operands stay bit-identical."""
-    from bubbles_spark.ops.drift import (
-        _cum_counts_prebuilt,
-        _cum_counts_table,
-        _grouped_cum_counts_by_pid,
-    )
+    from bubbles_spark.ops.drift import _cum_counts_prebuilt
 
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     r2 = lambda: (  # noqa: E731
@@ -1275,11 +1270,7 @@ def _spearman_suffstats(cells: DataFrame) -> DataFrame:
             d(F.col("__r2x")) * F.col("__r2x") * F.col("__cc")
         ).alias("__txx"),
     )
-    cum = (
-        _cum_counts_table(g, "__g", "__y", small_hint=hint)
-        if core._rank_proxy(g, "__y") is not None
-        else _grouped_cum_counts_by_pid(g, "__g", "__y")
-    )
+    cum = _cum_counts_prebuilt(g, "__g", "__y", small_hint=hint)
     return cum.withColumn("__r2y", r2())
 
 
@@ -1350,59 +1341,36 @@ def _envelope_over_rank(
     step-down (Holm).  At or under ``_SMALL_RANK_ROWS`` this is ONE
     ordered window task — hypothesis tables are test results (metrics
     × segments), so that is the overwhelmingly common case.  Above
-    it, the same two-phase shape as the rank machinery: the dense
-    rank cuts into contiguous fixed-width buckets (a pure function of
-    the rank — no sampling, no pid), an in-bucket running min/max
-    parallelizes across buckets, and the cross-bucket carry is a
-    window over the buckets-sized partial table — never a data-sized
-    single-task sort.  min/max are order-insensitive, so the result
-    is bit-identical to the one-window plan."""
+    it, the prefix scan's two-phase shape: the dense rank cuts into
+    contiguous fixed-width buckets numbered in scan order (a pure
+    function of the rank — no sampling, no pid), an in-bucket running
+    min/max parallelizes across buckets, and ``core._carry`` brings
+    the earlier buckets' min/max — never a data-sized single-task
+    sort.  min/max are order-insensitive, so the result is
+    bit-identical to the one-window plan."""
     from pyspark.sql import Window
 
-    from bubbles_spark.ops.core import _SMALL_RANK_ROWS, shuffle_partitions
-
-    t = ranked.withColumn("__val", val)
-    if m <= _SMALL_RANK_ROWS:
-        w = (
-            Window.partitionBy(F.lit(0))
-            .orderBy(F.col("rank").desc() if step_up else F.col("rank").asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        agg = F.min if step_up else F.max
-        return t.withColumn(out, agg("__val").over(w)).drop("__val")
-    n_b = shuffle_partitions(ranked.sparkSession)
-    width = -(-m // n_b)
-    t = t.withColumn(
-        "__bkt", ((F.col("rank") - 1) / F.lit(width)).cast("bigint")
-    )
     agg = F.min if step_up else F.max
-    order = F.col("__bkt").desc() if step_up else F.col("__bkt").asc()
-    carry = (
-        t.groupBy("__bkt")
-        .agg(agg("__val").alias("__part"))
-        .select(
-            "__bkt",
-            agg("__part")
-            .over(
-                Window.partitionBy(F.lit(0))
-                .orderBy(order)
-                .rowsBetween(Window.unboundedPreceding, -1)
-            )
-            .alias("__carry"),
-        )
-    )
-    w_in = (
-        Window.partitionBy("__bkt")
-        .orderBy(F.col("rank").desc() if step_up else F.col("rank").asc())
+    run = (
+        Window.orderBy(F.col("rank").desc() if step_up else F.col("rank").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    pick = F.least if step_up else F.greatest
-    return (
-        t.withColumn("__in", agg("__val").over(w_in))
-        .join(F.broadcast(carry), "__bkt")
-        .withColumn(out, pick(F.col("__in"), F.col("__carry")))
-        .drop("__val", "__bkt", "__in", "__carry")
+    t = ranked.withColumn("__val", val)
+    if m <= core._SMALL_RANK_ROWS:
+        run = run.partitionBy(F.lit(0))
+        return t.withColumn(out, agg("__val").over(run)).drop("__val")
+    width = -(-m // core.shuffle_partitions(ranked.sparkSession))
+    pos = F.lit(m) - F.col("rank") if step_up else F.col("rank") - F.lit(1)
+    t = core._carry(
+        t.withColumn("__bkt", (pos / F.lit(width)).cast("bigint")),
+        (),
+        {"__carry": agg("__val")},
+        agg,
     )
+    pick = F.least if step_up else F.greatest
+    return t.withColumn(
+        out, pick(agg("__val").over(run.partitionBy("__bkt")), F.col("__carry"))
+    ).drop("__val", "__bkt", "__carry", "__carry_tot")
 
 
 def fdr_correct(
@@ -2717,7 +2685,7 @@ def jonckheere_terpstra(
     - larger: per-(group, value) counts spread onto the pooled value
       grid (distinct values × k arms, zero-filled), cumulated per arm
       by the shared two-phase rank machinery
-      (``drift._cum_counts_table`` — no single-task sort at any
+      (``drift._cum_counts_prebuilt`` — no single-task sort at any
       distinct-value count), then one k-row window per value
       accumulates the strictly-below / tied counts of all PRECEDING
       arms.
@@ -2736,7 +2704,7 @@ def jonckheere_terpstra(
     mean_j (double), z (double)."""
     from pyspark.sql import Window
 
-    from bubbles_spark.ops.drift import _cum_counts_table
+    from bubbles_spark.ops.drift import _cum_counts_prebuilt
 
     # the pinned count table feeds every downstream consumer (grid
     # probe / grid join / ng / tstats on the distributed path) —
@@ -2760,7 +2728,7 @@ def jonckheere_terpstra(
                 "__grp", "__v", F.coalesce("__cg", F.lit(0)).alias("__c")
             )
         )
-        cum = _cum_counts_table(grid, "__grp", "__v")
+        cum = _cum_counts_prebuilt(grid, "__grp", "__v")
         # per value, accumulate the strictly-below and tied counts of
         # all PRECEDING arms (k rows per partition — bounded, no skew)
         w_prev = (
@@ -3216,7 +3184,7 @@ def anderson_darling_k(
     (the ÷4 scalings cancel exactly between numerator and
     denominator).  The zero-filled (distinct values × k groups) grid
     is cumulated by the shared two-phase machinery
-    (``drift._cum_counts_table`` — no single-task sort); each term is
+    (``drift._cum_counts_prebuilt`` — no single-task sort); each term is
     a fixed IEEE sequence on exact DECIMAL(38,0) operands,
     micro-quantized before the cross-value sums (the
     ``kruskal_wallis`` budget).  All values tied (the only way a
@@ -3225,7 +3193,7 @@ def anderson_darling_k(
     Output (one row): k, n (bigint), a2_akn (double)."""
     from pyspark.sql import Window
 
-    from bubbles_spark.ops.drift import _cum_counts_table
+    from bubbles_spark.ops.drift import _cum_counts_prebuilt
 
     # same multi-consumer shape as jonckheere_terpstra; the grid cap
     # bounds the fast path's dense k×V matrix
@@ -3243,7 +3211,7 @@ def anderson_darling_k(
                 "__grp", "__v", F.coalesce("__cg", F.lit(0)).alias("__c")
             )
         )
-        cum = _cum_counts_table(grid, "__grp", "__v")
+        cum = _cum_counts_prebuilt(grid, "__grp", "__v")
         w_val = Window.partitionBy("__v")
         # pooled multiplicity and pooled doubled midrank cum per value
         # (sums over the k arms at that value — k rows per partition)

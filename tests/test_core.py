@@ -164,30 +164,226 @@ def test_two_phase_rank_big_path_forced(spark, monkeypatch):
         ).collect()
     }
     assert got == {4: 1, 1: 2, 5: 3, 3: 4, 2: 5}
+    # a string first sort column (no numeric proxy) and a double one
+    # with NaN (Spark's largest double, first under desc): desc, NULLs
+    # (last under desc) and an id tiebreak, on both paths; the sort
+    # column is named like insights.rfm_segments' ("__o")
+    ids = spark.range(0, 300)
+    for col, kind in (
+        (F.format_string("s%02d", (F.col("id") * 37) % 29), "str"),
+        (
+            F.when(F.col("id") % 7 == 0, F.lit(float("nan"))).otherwise(
+                ((F.col("id") * 37) % 29).cast("double")
+            ),
+            "dbl",
+        ),
+    ):
+        dfs = ids.select(
+            F.col("id"),
+            F.when(F.col("id") % 11 == 0, F.lit(None)).otherwise(col).alias("__o"),
+        )
+        order = [("__o", "desc"), ("id", "asc")]
+
+        def ranks():
+            return {
+                r["id"]: r["__rn"]
+                for r in core._with_global_row_number(dfs, order).collect()
+            }
+
+        monkeypatch.setattr(core, "_SMALL_RANK_ROWS", 2)
+        big = ranks()
+        monkeypatch.setattr(core, "_SMALL_RANK_ROWS", 2_000_000)
+        small = ranks()
+        rows = sorted((r["id"], r["__o"]) for r in dfs.collect())
+        # desc, NULLs last, NaN above every double; stable on id
+        rows.sort(
+            key=lambda r: (r[1] is not None, r[1] != r[1], r[1] == r[1] and r[1]),
+            reverse=True,
+        )
+        want = {i: rn for rn, (i, _) in enumerate(rows, 1)}
+        assert big == small == want, kind
 
 
 def test_grouped_cum_counts_big_path_forced(spark, monkeypatch):
     from bubbles_spark.ops import core as _core
     from bubbles_spark.ops.drift import _grouped_cum_counts
 
-    df = spark.createDataFrame(
+    num = spark.createDataFrame(
         [("g", float(v % 13)) for v in range(200)]
         + [("h", float(v % 7)) for v in range(50)],
         "g string, v double",
     )
+    # a string value column has no numeric proxy
+    txt = num.select("g", F.format_string("v%02d", F.col("v").cast("int")).alias("v"))
 
-    def snap():
+    def snap(df):
         return {
             (r["g"], r["v"]): (r["__c"], r["__cum"], r["__n"])
             for r in _grouped_cum_counts(df, "g", "v").collect()
         }
 
-    small = snap()
-    monkeypatch.setattr(_core, "_SMALL_RANK_ROWS", 3)
-    big = snap()
-    assert big == small
-    # sanity: per-group totals match the construction
-    assert small[("g", 0.0)][2] == 200 and small[("h", 0.0)][2] == 50
+    for df, lo, hi in ((num, 0.0, 6.0), (txt, "v00", "v06")):
+        monkeypatch.setattr(_core, "_SMALL_RANK_ROWS", 2_000_000)
+        small = snap(df)
+        monkeypatch.setattr(_core, "_SMALL_RANK_ROWS", 3)
+        big = snap(df)
+        assert big == small
+        # sanity: counts and per-group totals match the construction
+        assert small[("g", lo)] == (16, 16, 200)
+        assert small[("h", lo)][2] == small[("h", hi)][1] == 50
+
+
+def _ks_ref(pdf):
+    ref, cur = pdf[pdf.side == 0].v, pdf[pdf.side == 1].v
+    pts = sorted(set(pdf.v))
+    ks = max(
+        abs(float((ref <= v).sum()) / len(ref) - float((cur <= v).sum()) / len(cur))
+        for v in pts
+    )
+    return [(ks, len(ref), len(cur))]
+
+
+def _auc_ref(pdf):
+    per = pdf.groupby("v").agg(cnt=("y", "size"), pos=("y", "sum")).sort_index()
+    before = per.cnt.cumsum() - per.cnt
+    s = int((per.pos * (2 * before + per.cnt + 1)).sum())
+    n_pos = int(per.pos.sum())
+    n_neg = int(per.cnt.sum()) - n_pos
+    auc = float(s - n_pos * (n_pos + 1)) / float(2 * n_pos * n_neg)
+    return [(auc, n_pos, n_neg)]
+
+
+def _qn_ref(pdf):
+    n = len(pdf)
+    return sorted(
+        (int(i), float((pdf.v <= v).sum()) / float(n))
+        for i, v in zip(pdf.id, pdf.v)
+    )
+
+
+def _abc_ref(pdf):
+    from decimal import Decimal
+
+    rows = sorted(
+        ((Decimal(str(v)), int(i)) for i, v in zip(pdf.id, pdf.v)),
+        key=lambda t: (-t[0], t[1]),
+    )
+    total = sum(v for v, _ in rows)
+    out, cum = [], Decimal(0)
+    for rank, (v, i) in enumerate(rows, 1):
+        prior = float(cum) / float(total)
+        cum += v
+        cls = "A" if prior < 0.8 else "B" if prior < 0.95 else "C"
+        out.append((i, rank, cum, float(cum) / float(total), cls))
+    return sorted(out)
+
+
+def _conc_ref(pdf):
+    d: dict[int, int] = {}
+    for s, e in zip(pdf.s, pdf.e):
+        d[s] = d.get(s, 0) + 1
+        d[e] = d.get(e, 0) - 1
+    out, run = [], 0
+    for t in sorted(d):
+        run += d[t]
+        if d[t]:
+            out.append((t, d[t], run))
+    return out
+
+
+def _ks_run(spark, pdf):
+    from bubbles_spark.ops import drift
+
+    df = spark.createDataFrame(pdf)
+    rows = drift.ks_distance(
+        df.filter("side = 0"), df.filter("side = 1"), "v"
+    ).collect()
+    return [(r["ks"], r["n_ref"], r["n_cur"]) for r in rows]
+
+
+def _auc_run(spark, pdf):
+    from bubbles_spark.ops import drift
+
+    rows = drift.auc_score(spark.createDataFrame(pdf), "v", "y").collect()
+    return [(r["auc"], r["n_pos"], r["n_neg"]) for r in rows]
+
+
+def _qn_run(spark, pdf):
+    from bubbles_spark.ops import drift
+
+    out = drift.quantile_normalize(spark.createDataFrame(pdf), "v")
+    return sorted((r["id"], r["v"]) for r in out.collect())
+
+
+def _abc_run(spark, pdf):
+    from bubbles_spark.ops import insights
+
+    out = insights.abc_classification(spark.createDataFrame(pdf), "id", "v")
+    return sorted(
+        (r["id"], r["rank"], r["cum_value"], r["cum_share"], r["abc_class"])
+        for r in out.collect()
+    )
+
+
+def _conc_run(spark, pdf):
+    from datetime import datetime
+
+    from bubbles_spark.ops import events
+
+    # TIMESTAMP_NTZ bounds, as the registered queries pass them
+    df = spark.createDataFrame(pdf).select(
+        *[F.timestamp_seconds(c).cast("timestamp_ntz").alias(c) for c in ("s", "e")]
+    )
+    out = events.concurrency_report(df, "s", "e")
+    return [
+        (int((r["ts"] - datetime(1970, 1, 1)).total_seconds()), r["delta"], r["concurrent"])
+        for r in out.collect()
+    ]
+
+
+def _cumsum_input(name):
+    import pandas as pd
+
+    ids = list(range(240))
+    if name == "ks":
+        return pd.DataFrame(
+            {"side": [i % 2 for i in ids], "v": [float((i * 37) % 53) for i in ids]}
+        )
+    if name == "auc":
+        return pd.DataFrame(
+            {"v": [float((i * 37) % 41) for i in ids], "y": [(i * 7) % 3 % 2 for i in ids]}
+        )
+    if name in ("qn", "abc"):
+        return pd.DataFrame(
+            {"id": ids, "v": [float((i * 37) % 61) / 4 for i in ids]}
+        )
+    return pd.DataFrame(
+        {"s": [(i * 37) % 97 for i in ids], "e": [(i * 37) % 97 + i % 9 for i in ids]}
+    )
+
+
+@pytest.mark.parametrize(
+    "run, ref, name",
+    [
+        (_ks_run, _ks_ref, "ks"),
+        (_auc_run, _auc_ref, "auc"),
+        (_qn_run, _qn_ref, "qn"),
+        (_abc_run, _abc_ref, "abc"),
+        (_conc_run, _conc_ref, "concurrency"),
+    ],
+    ids=["ks_distance", "auc_score", "quantile_normalize", "abc_classification",
+         "concurrency_report"],
+)
+def test_partitioned_cumsum_callers_both_paths(spark, monkeypatch, run, ref, name):
+    """Every global cumulative-sum caller gives the pandas reference's
+    values bit-for-bit at the default threshold and with the
+    two-phase path forced (threshold 0)."""
+    pdf = _cumsum_input(name)
+    want = ref(pdf)
+    default = run(spark, pdf)
+    monkeypatch.setattr(core, "_SMALL_RANK_ROWS", 0)
+    forced = run(spark, pdf)
+    assert default == forced == want
 
 
 def test_top_k(people):

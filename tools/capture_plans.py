@@ -33,9 +33,9 @@ def main(argv: list[str]) -> int:
     os.makedirs(outdir, exist_ok=True)
 
     import __spark_entry__ as entrymod
-    from bubbles_spark.session import get_spark
+    from bench import quiet_spark
 
-    spark = get_spark("capture_plans")
+    spark = quiet_spark("capture_plans")
     qs = entrymod.queries()
     for name in names:
         if name not in qs:

@@ -521,7 +521,7 @@ CHECKS = [
           "growing-index admission must never fall back to NL join")],
     ),
     # winsorize/mad collect their quantile scalars at build time via
-    # _with_global_row_number (range-partition two-phase rank — that
+    # _with_global_row_number (the prefix scan's rank — that
     # pass's plan shape is audited through the sample_nth/top-k
     # entries); the RETURNED plan must be a map-only clamp/filter.
     (
@@ -544,10 +544,11 @@ CHECKS = [
          (r"BroadcastHashJoin", "spine and totals join as broadcasts")],
         [(r"(BatchEvalPython|ArrowEvalPython|MapInPandas)", "pure codegen, no Python")],
     ),
-    # ks_distance materializes its 1-row statistic before unpersisting
-    # the range-partitioned cumulative pass, so the returned plan is a
-    # local scan; the internal pass reuses the audited two-phase-rank
-    # machinery (rangepartitioning + per-partition offsets).
+    # ks_distance materializes its 1-row statistic as a local table,
+    # so the returned plan is a local scan; the internal cumulative
+    # pass is the prefix scan audited through the rank entries (one
+    # ordered window when small, value buckets + carry join past
+    # _SMALL_RANK_ROWS).
     (
         "ks_events_value",
         [(r"LocalTableScan|Scan ExistingRDD", "statistic is a 1-row materialized result")],
@@ -603,8 +604,8 @@ CHECKS = [
          (r"(BatchEvalPython|ArrowEvalPython|MapInPandas)", "pure codegen, no Python")],
     ),
     # quantile_normalize materializes its distinct-value ECDF map via
-    # eager checkpoint (the cumsum ran through the audited two-phase
-    # pass); the returned plan is the checkpointed map equi-joined back.
+    # eager checkpoint (the cumsum ran through the audited prefix
+    # scan); the returned plan is the checkpointed map equi-joined back.
     (
         "quantile_normalize_orders",
         [(r"Scan ExistingRDD|LogicalRDD", "ECDF map is the materialized two-phase cumsum"),
@@ -843,7 +844,7 @@ CHECKS = [
     ),
     (
         "abc_parts_revenue",
-        [(r"LogicalRDD|Scan ExistingRDD", "materialized item table (cumsum cache released)")],
+        [(r"LogicalRDD|Scan ExistingRDD", "materialized item table (eager checkpoint of the cumsum)")],
         [(r"(BatchEvalPython|ArrowEvalPython|MapInPandas)", "pure codegen, no Python")],
     ),
     (
@@ -1236,12 +1237,12 @@ CHECKS = [
          (r"(BatchEvalPython|ArrowEvalPython|MapInPandas)", "pure codegen, no Python"),
          (r"Window", "no lag window — gap-safe join alignment")],
     ),
-    # shipments_in_transit: the curve is materialized via the
-    # two-phase cumsum's localCheckpoint, so the audited plan is the
+    # shipments_in_transit: the curve is materialized by an eager
+    # localCheckpoint of the cumsum, so the audited plan is the
     # checkpointed RDD scan — assert the materialization happened
     (
         "shipments_in_transit",
-        [(r"Scan ExistingRDD|LogicalRDD", "two-phase cumsum materialized (cache released)")],
+        [(r"Scan ExistingRDD|LogicalRDD", "cumsum curve materialized (eager checkpoint)")],
         [(r"(BatchEvalPython|ArrowEvalPython|MapInPandas)", "pure codegen, no Python"),
          (r"CartesianProduct|BroadcastNestedLoopJoin", "no cross product")],
     ),

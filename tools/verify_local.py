@@ -131,9 +131,9 @@ def main(only: list[str]) -> int:
             .getOrCreate()
         )
     else:
-        from bubbles_spark.session import get_spark
+        from bench import quiet_spark
 
-        spark = get_spark("verify_local", master=master)
+        spark = quiet_spark("verify_local", master=master)
     print(f"master: {master}  strict: {STRICT}  sf_dir: {SF_DIR}")
     con = duckdb.connect()
     for t in TABLES:
