@@ -15,23 +15,36 @@ Reference parity map: see SURVEY.md §2 (citations of the form
 repository; /root/reference was empty at survey time).
 """
 
-from bubbles_spark.schema import Field, FieldList, FieldFilter, to_field
-from bubbles_spark.session import get_spark
-from bubbles_spark.pipeline import ExecutionContext, Pipeline
-from bubbles_spark import io, ops, probes
+import importlib
 
 __version__ = "0.1.0"
 
-__all__ = [
-    "Field",
-    "FieldList",
-    "FieldFilter",
-    "to_field",
-    "get_spark",
-    "Pipeline",
-    "ExecutionContext",
-    "io",
-    "ops",
-    "probes",
-    "__version__",
-]
+# public name -> module that defines it; loaded on first access (PEP 562),
+# so importing one submodule (the worker daemon, ``_pyworker``) pulls in
+# neither the operators nor pandas/pyarrow
+_LAZY = {
+    "Field": "bubbles_spark.schema",
+    "FieldList": "bubbles_spark.schema",
+    "FieldFilter": "bubbles_spark.schema",
+    "to_field": "bubbles_spark.schema",
+    "get_spark": "bubbles_spark.session",
+    "Pipeline": "bubbles_spark.pipeline",
+    "ExecutionContext": "bubbles_spark.pipeline",
+    "io": None,
+    "ops": None,
+    "probes": None,
+}
+
+__all__ = [*_LAZY, "__version__"]
+
+
+def __getattr__(name: str):
+    if name not in _LAZY:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    module = _LAZY[name]
+    value = (
+        importlib.import_module(f"{__name__}.{name}") if module is None
+        else getattr(importlib.import_module(module), name)
+    )
+    globals()[name] = value
+    return value

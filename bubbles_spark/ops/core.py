@@ -919,14 +919,20 @@ def _carry(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     whole = Window.partitionBy(*key)
+    on = {k: f"__carry_key{i}" for i, k in enumerate(keys)}
     carry = bucketed.groupBy(*keys).agg(
         *[p.alias(n) for n, p in parts.items()]
     ).select(
-        *keys,
+        *[F.col(k).alias(c) for k, c in on.items()],
         *[agg(n).over(earlier).alias(n) for n in parts],
         *[agg(n).over(whole).alias(f"{n}_tot") for n in parts],
     )
-    return bucketed.join(carry if groups else F.broadcast(carry), keys)
+    # NULL-safe on the group key: a NULL group keeps its rows, as on
+    # the one-window path
+    cond = [F.col("__bkt") == F.col(on["__bkt"])] + [
+        F.col(g).eqNullSafe(F.col(on[g])) for g in groups
+    ]
+    return bucketed.join(carry if groups else F.broadcast(carry), cond).drop(*on.values())
 
 
 def _prefix_scan(

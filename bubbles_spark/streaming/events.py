@@ -1256,9 +1256,13 @@ def _state_shards(stream_df: DataFrame):
       - else, with a known source size, a byte budget per shard,
         never above the session width: 4 MB, floor 2, for JVM state;
         128 KB, floor 8, for Python keyed state, whose tasks each pay
-        a fixed ~60-100 ms state-channel setup but serialize the
-        per-key work (2 shards regressed stream_ewma 2.1 → 4.2 s,
-        r13; 16 shards on the 2 MB bench input measured best).
+        a fixed cost but serialize the per-key work (2 shards
+        regressed stream_ewma 2.1 → 4.2 s, r13; 16 shards on the 2 MB
+        bench input measured best).  The fixed cost, measured as 12
+        more shards on one stream_ewma drain at ``local[4]``: about
+        0.07 s of Python-worker CPU and 0.08 s of wall time per task
+        (0.4 s of CPU before ``session.get_spark``'s worker daemon
+        stopped each task re-reading ``pyspark.zip``).
     Real multi-MB inputs hit the session width, so only small inputs
     narrow, and shard count never changes results.
 

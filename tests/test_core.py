@@ -233,6 +233,27 @@ def test_grouped_cum_counts_big_path_forced(spark, monkeypatch):
         assert small[("h", lo)][2] == small[("h", hi)][1] == 50
 
 
+def test_two_phase_carry_keeps_null_group(spark, monkeypatch):
+    """The carry joins back on the group key NULL-safely: a NULL group
+    survives the two-phase path as it survives the one-window path."""
+    from bubbles_spark.ops import core as _core
+    from bubbles_spark.ops.drift import group_quantiles
+
+    df = spark.createDataFrame(
+        [("a" if i < 24 else "b" if i < 48 else None, float(i % 17)) for i in range(60)],
+        "g string, v double",
+    )
+
+    def snap():
+        return {(r["g"], r["q"]): tuple(r) for r in group_quantiles(df, "g", "v").collect()}
+
+    small = snap()
+    monkeypatch.setattr(_core, "_SMALL_RANK_ROWS", 0)
+    big = snap()
+    assert {g for g, _ in small} == {"a", "b", None}
+    assert big == small
+
+
 def _ks_ref(pdf):
     ref, cur = pdf[pdf.side == 0].v, pdf[pdf.side == 1].v
     pts = sorted(set(pdf.v))
