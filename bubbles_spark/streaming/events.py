@@ -15,11 +15,12 @@ Every sink (``run_batchlike``, ``stream_to_parquet``,
 ``_state_shards`` from the plan they are about to start: the bytes of
 its file-source leaves and whether it holds Python keyed state, so
 any file-source stream gets the same rule, however it was built.
+``_drain`` sets that width, and on a local checkpoint Spark's
+FileSystem-based checkpoint manager, for the ``start()`` call only.
 """
 
 from __future__ import annotations
 
-import contextlib
 import os
 import threading
 from typing import Sequence
@@ -1195,9 +1196,15 @@ def docs_ingest_dedup_stream(
     return keyed.dropDuplicates([shard_col, "__content_h"]).drop("__content_h")
 
 
-_SHARD_TUNE_LOCK = threading.Lock()
-_SHARD_TUNE_DEPTH = 0
-_SHARD_TUNE_PREV: str | None = None
+# one drain at a time reads and narrows the session confs around its
+# start() (see ``_drain``)
+_START_LOCK = threading.Lock()
+# Spark's checkpoint manager that commits with FileSystem.rename
+_FS_CHECKPOINTS = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 # plan operators that hold per-KEY Python state
 # (applyInPandasWithState / transformWithState family)
 _PYTHON_KEYED_STATE = (
@@ -1240,10 +1247,9 @@ def _stream_plan_facts(df: DataFrame) -> tuple[int | None, bool]:
         return None, False
 
 
-@contextlib.contextmanager
-def _state_shards(stream_df: DataFrame):
-    """Narrow ``spark.sql.shuffle.partitions`` for one drain of
-    ``stream_df``, then restore it.
+def _state_shards(stream_df: DataFrame) -> str | None:
+    """The ``spark.sql.shuffle.partitions`` one drain of ``stream_df``
+    starts at, or None to keep the session's width.
 
     Stateful streaming shards its state store by that conf AT QUERY
     START (then pins it in the checkpoint), and AQE never coalesces a
@@ -1262,55 +1268,114 @@ def _state_shards(stream_df: DataFrame):
         more shards on one stream_ewma drain at ``local[4]``: about
         0.07 s of Python-worker CPU and 0.08 s of wall time per task
         (0.4 s of CPU before ``session.get_spark``'s worker daemon
-        stopped each task re-reading ``pyspark.zip``).
+        stopped each task re-reading ``pyspark.zip``).  Each shard
+        also commits one state-delta file per micro-batch, which on a
+        local checkpoint costs what ``_drain`` describes.
     Real multi-MB inputs hit the session width, so only small inputs
     narrow, and shard count never changes results.
 
-    SCOPE CAVEAT — SQLConf is session-global: while a narrowed drain
-    runs, any OTHER query planned in the session sees the narrowed
-    width.  Overlapping drains are safe: the save/restore is
-    depth-counted under a lock, so only the outermost one restores.
+    SCOPE CAVEAT — SQLConf is session-global: ``_drain`` decides and
+    sets the width under its start lock for the ``start()`` call only
+    (the query reads it then), so a query that another thread plans
+    during that call sees the narrowed width.
     """
-    global _SHARD_TUNE_DEPTH, _SHARD_TUNE_PREV
     spark = stream_df.sparkSession
     cur = spark.conf.get("spark.sql.shuffle.partitions")
-    n = None
-    if cur.isdigit() and int(cur) >= 100:
-        n = max(8, 2 * (os.cpu_count() or 8))
-    elif cur.isdigit():
-        n_bytes, keyed = _stream_plan_facts(stream_df)
-        if n_bytes is not None:
-            budget, floor = ((128 << 10), 8) if keyed else ((4 << 20), 2)
-            narrow = min(int(cur), max(floor, -(-n_bytes // budget)))
-            n = narrow if narrow < int(cur) else None
-    with _SHARD_TUNE_LOCK:
-        tuned = _SHARD_TUNE_DEPTH > 0 or n is not None
-        if _SHARD_TUNE_DEPTH > 0:
-            # already narrowed by an outer/concurrent drain: just nest
-            _SHARD_TUNE_DEPTH += 1
-        elif n is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(n))
-            _SHARD_TUNE_DEPTH, _SHARD_TUNE_PREV = 1, cur
-    try:
-        yield
-    finally:
-        if tuned:
-            with _SHARD_TUNE_LOCK:
-                _SHARD_TUNE_DEPTH -= 1
-                if _SHARD_TUNE_DEPTH == 0:
-                    spark.conf.set(
-                        "spark.sql.shuffle.partitions", _SHARD_TUNE_PREV
-                    )
-                    _SHARD_TUNE_PREV = None
+    if not cur.isdigit():
+        return None
+    if int(cur) >= 100:
+        return str(max(8, 2 * (os.cpu_count() or 8)))
+    n_bytes, keyed = _stream_plan_facts(stream_df)
+    if n_bytes is None:
+        return None
+    budget, floor = ((128 << 10), 8) if keyed else ((4 << 20), 2)
+    narrow = min(int(cur), max(floor, -(-n_bytes // budget)))
+    return str(narrow) if narrow < int(cur) else None
 
 
-def _drain(writer, timeout_s: float, timeout_msg: str) -> None:
-    """Start ``writer`` with an availableNow trigger (process
-    everything currently available, then stop), wait up to
-    ``timeout_s`` and stop the query if it is still active.  Raises
-    ``TimeoutError(timeout_msg)`` when it did not drain: partial sink
-    output must never read as the stream's data."""
-    q = writer.trigger(availableNow=True).start()
+def _local_logs(spark: SparkSession, *dirs: str | None) -> bool:
+    """Whether every directory in ``dirs`` is on the local filesystem
+    (scheme ``file``), by URI parsing alone — no filesystem call.  A
+    path without a scheme resolves against the default filesystem
+    (``fs.defaultFS``), as Spark resolves it.  None stands for the
+    checkpoint Spark picks itself: under
+    ``spark.sql.streaming.checkpointLocation`` when that is set, else
+    a temp dir on the default filesystem."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    default = jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(conf).getScheme()
+    root = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+
+    def scheme(d: str | None) -> str | None:
+        d = d or root
+        return (d and jvm.org.apache.hadoop.fs.Path(d).toUri().getScheme()) or default
+
+    return all(scheme(d) == "file" for d in dirs)
+
+
+def _drain(
+    stream_df: DataFrame,
+    writer,
+    timeout_s: float,
+    timeout_msg: str,
+    logs: tuple[str | None, ...],
+    sized: bool = True,
+) -> None:
+    """Start ``writer`` (over ``stream_df``) with an availableNow
+    trigger (process everything currently available, then stop), wait
+    up to ``timeout_s`` and stop the query if it is still active.
+    Raises ``TimeoutError(timeout_msg)`` when it did not drain:
+    partial sink output must never read as the stream's data.
+
+    Two session confs are set for the ``start()`` call only, under one
+    lock, then put back (unset when the session had none): the query
+    clones the session inside ``start()``, so its logs and its
+    executors' state stores keep both for the whole run.
+      - ``spark.sql.shuffle.partitions``: the state-shard width from
+        ``_state_shards`` when ``sized``.
+      - ``spark.sql.streaming.checkpointFileManagerClass``: Spark's
+        ``FileSystemBasedCheckpointFileManager`` when every
+        write-ahead log directory in ``logs`` (the checkpoint, and a
+        file sink's output, whose ``_spark_metadata`` log the same
+        manager writes; None for Spark's own temp checkpoint) is on
+        the local filesystem (``_local_logs``) and the session names
+        no manager of its own.  Every micro-batch commits offset,
+        commit, source-log and state-delta files, each as a temp file
+        renamed into place.  Spark's default FileContext-based
+        manager renames through ``AbstractFileSystem.rename``, which
+        runs ``getFileLinkStatus`` on the source, the destination and
+        both ``.crc`` siblings; without Hadoop's native library
+        (``NativeIO``) the local filesystem runs each as a ``readlink``
+        process, so one committed file costs 8 ``readlink``
+        processes (224 of the 306 processes one warm pass of the
+        streaming benchmark started at ``local[4]``).  The FileSystem-based manager renames with
+        ``FileSystem.rename``, which ``RawLocalFileSystem`` runs as
+        ``File.renameTo``: the same check-then-rename, with no
+        process.  Other schemes (HDFS, S3, ...) keep Spark's default,
+        whose rename semantics are the ones Spark documents for them.
+        ``.crc`` files and the checkpoint checksums are still written
+        and checked.
+    """
+    spark = stream_df.sparkSession
+    writer = writer.trigger(availableNow=True)
+    with _START_LOCK:
+        confs = {}
+        width = _state_shards(stream_df) if sized else None
+        if width is not None:
+            confs["spark.sql.shuffle.partitions"] = width
+        if spark.conf.get(_MANAGER_CONF, None) is None and _local_logs(spark, *logs):
+            confs[_MANAGER_CONF] = _FS_CHECKPOINTS
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            q = writer.start()
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
     try:
         finished = q.awaitTermination(timeout_s)
     finally:
@@ -1348,13 +1413,14 @@ def stream_to_parquet(
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    with _state_shards(stream_df):
-        _drain(
-            writer,
-            timeout_s,
-            f"stream_to_parquet: stream did not drain within {timeout_s}s; "
-            f"committed files under {path!r} are safe to resume from",
-        )
+    _drain(
+        stream_df,
+        writer,
+        timeout_s,
+        f"stream_to_parquet: stream did not drain within {timeout_s}s; "
+        f"committed files under {path!r} are safe to resume from",
+        logs=(checkpoint, path),
+    )
     # partition columns come last in a parquet directory's schema
     parts = [stream_df.schema[c] for c in partition_by or ()]
     cols = [f for f in stream_df.schema if f not in parts] + parts
@@ -1387,14 +1453,15 @@ def run_batchlike(
         .queryName(query_name)
     )
     try:
-        with _state_shards(stream_df):
-            _drain(
-                writer,
-                timeout_s,
-                f"run_batchlike({query_name!r}): stream did not drain within "
-                f"{timeout_s}s — raise timeout_s instead of consuming a "
-                f"partial memory-sink table",
-            )
+        _drain(
+            stream_df,
+            writer,
+            timeout_s,
+            f"run_batchlike({query_name!r}): stream did not drain within "
+            f"{timeout_s}s — raise timeout_s instead of consuming a "
+            f"partial memory-sink table",
+            logs=(None,),
+        )
         return spark.sql(f"SELECT * FROM {query_name}")
     finally:
         spark.catalog.dropTempView(query_name)
@@ -1444,8 +1511,8 @@ def admit_stream_against_index(
     All filesystem access goes through the Hadoop FileSystem API, so
     ``path``/``checkpoint`` may be any supported scheme (s3a://,
     hdfs://, file:), not just the local disk.  No stateful operators
-    → no state store, so the drain is not sized (``_state_shards``
-    never runs here); the index side re-plans
+    → no state store, so the drain is not sized (``_drain`` never
+    calls ``_state_shards`` here); the index side re-plans
     per batch, so at scale persist the signature table (or let AQE
     broadcast the micro-batch side via ``broadcast_batch=True`` in
     dedup_kw)."""
@@ -1462,6 +1529,7 @@ def admit_stream_against_index(
         )
 
     _drain(
+        docs,
         docs.writeStream.foreachBatch(_admit).option(
             "checkpointLocation", checkpoint
         ),
@@ -1471,6 +1539,8 @@ def admit_stream_against_index(
         f"admit_stream_against_index: stream did not drain within "
         f"{timeout_s}s; partial results left under {path!r} are "
         f"safe to resume from (same checkpoint)",
+        logs=(checkpoint,),
+        sized=False,
     )
     return _drain_admitted(spark, path, checkpoint, docs.schema)
 

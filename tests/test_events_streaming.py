@@ -752,20 +752,26 @@ def _rate_dedup(spark, files=None):
 
 
 @pytest.fixture
-def drain_widths(spark, monkeypatch):
-    """``spark.sql.shuffle.partitions`` in force as each drain starts
-    its writer, one entry per drain."""
+def drain_starts(spark, monkeypatch):
+    """The session confs in force as each drain's writer starts, one
+    (``spark.sql.shuffle.partitions``, checkpoint manager class or
+    None) pair per ``DataStreamWriter.start`` call."""
+    from pyspark.sql.streaming import DataStreamWriter
+
     from bubbles_spark.streaming import events as sevents
 
-    widths: list = []
-    real = sevents._drain
+    starts: list = []
+    real = DataStreamWriter.start
 
-    def spy(*args, **kwargs):
-        widths.append(spark.conf.get("spark.sql.shuffle.partitions"))
-        return real(*args, **kwargs)
+    def spy(self, *args, **kwargs):
+        starts.append((
+            spark.conf.get("spark.sql.shuffle.partitions"),
+            spark.conf.get(sevents._MANAGER_CONF, None),
+        ))
+        return real(self, *args, **kwargs)
 
-    monkeypatch.setattr(sevents, "_drain", spy)
-    return widths
+    monkeypatch.setattr(DataStreamWriter, "start", spy)
+    return starts
 
 
 def _documents_admission(spark, tmp_path, timeout_s: float = 120):
@@ -796,7 +802,7 @@ def _documents_admission(spark, tmp_path, timeout_s: float = 120):
     return [r["doc_id"] for r in got.collect()]
 
 
-def test_admission_drops_state_shard_hint(spark, tmp_path, drain_widths):
+def test_admission_drops_state_shard_hint(spark, tmp_path, drain_starts):
     """Admission over ``documents.parquet`` runs unsized and leaves
     nothing behind for the next drain: a drain over another stream
     right after sizes its state shards from its own source.  That
@@ -808,7 +814,7 @@ def test_admission_drops_state_shard_hint(spark, tmp_path, drain_widths):
     sevents.stream_to_parquet(
         _rate_dedup(spark), str(tmp_path / "r_out"), str(tmp_path / "r_ckpt")
     )
-    assert drain_widths == ["4", "4"]
+    assert [w for w, _ in drain_starts] == ["4", "4"]
 
 
 def test_read_event_stream_drain_sizes_state_shards(spark, tmp_path):
@@ -860,7 +866,7 @@ def test_self_joined_source_sized_once(spark, tmp_path):
 
 @pytest.mark.parametrize("with_file_source", [False, True])
 def test_rate_source_keeps_session_width(
-    spark, tmp_path, drain_widths, with_file_source
+    spark, tmp_path, drain_starts, with_file_source
 ):
     """A rate source has no file size, so the size rule never applies
     and its drain runs at the session width — also when a few-KB file
@@ -874,7 +880,215 @@ def test_rate_source_keeps_session_width(
     sevents.stream_to_parquet(
         _rate_dedup(spark, files), str(tmp_path / "out"), str(tmp_path / "ckpt")
     )
-    assert drain_widths == ["4"]
+    assert [w for w, _ in drain_starts] == ["4"]
+
+
+def test_wide_session_narrows_only_at_start(spark, tmp_path, drain_starts):
+    """On an untuned-width session (≥ 100) the drain starts at
+    max(8, 2 × cores) shards, the checkpoint pins that width for the
+    whole query, and the session width is back as soon as the query
+    has started."""
+    import os
+
+    from bubbles_spark.streaming import events as sevents
+
+    _fixture(spark).withColumn("props", F.lit("{}")).write.parquet(
+        str(tmp_path / "src")
+    )
+    stream = sevents.dedup_stream(
+        sevents.read_event_stream(spark, str(tmp_path / "src"))
+    )
+    ckpt = str(tmp_path / "ckpt")
+    want = str(max(8, 2 * (os.cpu_count() or 8)))
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        got = sevents.stream_to_parquet(stream, str(tmp_path / "out"), ckpt)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+    assert sorted(r["event_id"] for r in got.collect()) == [1, 2, 3, 4, 5]
+    assert [w for w, _ in drain_starts] == [want]
+    assert _checkpoint_width(ckpt) == want
+    assert len(os.listdir(os.path.join(ckpt, "state", "0"))) >= int(want)
+
+
+def test_concurrent_drains_read_the_session_width(spark, tmp_path, monkeypatch):
+    """Drains started from more threads than cores each read the
+    session's own width, never another drain's narrowed one, and the
+    session width is back once all have started.  Each start() is
+    held open 0.2 s and the threads start 0.05 s apart, so without the
+    start lock a later drain would read an earlier one's width."""
+    import os
+    import sys
+    import threading
+    import time
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from bubbles_spark.streaming import events as sevents
+
+    _fixture(spark).withColumn("props", F.lit("{}")).write.parquet(
+        str(tmp_path / "src")
+    )
+    want = str(max(8, 2 * (os.cpu_count() or 8)))
+    n = (os.cpu_count() or 4) + 2
+    ready = threading.Barrier(n, timeout=120)
+    widths: list = []
+    errors: list = []
+    real = DataStreamWriter.start
+
+    def slow_start(self, *args, **kwargs):
+        widths.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        time.sleep(0.2)
+        return real(self, *args, **kwargs)
+
+    def drain(i):
+        try:
+            stream = sevents.dedup_stream(
+                sevents.read_event_stream(spark, str(tmp_path / "src"))
+            )
+            ready.wait()
+            time.sleep(0.05 * i)
+            sevents.stream_to_parquet(
+                stream, str(tmp_path / f"out{i}"), str(tmp_path / f"ckpt{i}")
+            )
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    monkeypatch.setattr(DataStreamWriter, "start", slow_start)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        threads = [threading.Thread(target=drain, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+    finally:
+        sys.setswitchinterval(switch)
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+    assert errors == []
+    assert widths == [want] * n
+    assert [_checkpoint_width(str(tmp_path / f"ckpt{i}")) for i in range(n)] == [want] * n
+    assert spark.conf.get(sevents._MANAGER_CONF, None) is None
+
+
+def test_local_checkpoints_use_filesystem_manager(spark, tmp_path, drain_starts):
+    """Every drain over a local checkpoint starts its writer with
+    Spark's FileSystem-based checkpoint manager, and the session conf
+    is unset again afterwards."""
+    from bubbles_spark.streaming import events as sevents
+
+    assert spark.conf.get(sevents._MANAGER_CONF, None) is None
+    _fixture(spark).withColumn("props", F.lit("{}")).write.parquet(
+        str(tmp_path / "src")
+    )
+
+    def stream():
+        return sevents.dedup_stream(
+            sevents.read_event_stream(spark, str(tmp_path / "src"))
+        )
+
+    assert sevents.run_batchlike(stream(), "t_manager").count() == 5
+    got = sevents.stream_to_parquet(
+        stream(), str(tmp_path / "p_out"), str(tmp_path / "p_ckpt")
+    )
+    assert got.count() == 5
+    assert _documents_admission(spark, tmp_path) == [2]
+    assert [m for _, m in drain_starts] == [sevents._FS_CHECKPOINTS] * 3
+    assert spark.conf.get(sevents._MANAGER_CONF, None) is None
+
+
+def test_drain_keeps_session_checkpoint_manager(spark, tmp_path, drain_starts):
+    """A manager the session names itself is used as it is and left
+    in place."""
+    from bubbles_spark.streaming import events as sevents
+
+    own = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    _fixture(spark).withColumn("props", F.lit("{}")).write.parquet(
+        str(tmp_path / "src")
+    )
+    stream = sevents.dedup_stream(
+        sevents.read_event_stream(spark, str(tmp_path / "src"))
+    )
+    spark.conf.set(sevents._MANAGER_CONF, own)
+    try:
+        got = sevents.stream_to_parquet(
+            stream, str(tmp_path / "out"), str(tmp_path / "ckpt")
+        )
+        assert got.count() == 5
+        assert spark.conf.get(sevents._MANAGER_CONF) == own
+    finally:
+        spark.conf.unset(sevents._MANAGER_CONF)
+    assert [m for _, m in drain_starts] == [own]
+
+
+@pytest.mark.parametrize(
+    "path, local",
+    [
+        ("file:/x", True),
+        ("/x", True),  # no scheme: the session's default FS, file:
+        ("hdfs://nn:8020/x", False),
+        ("s3a://b/x", False),
+    ],
+)
+def test_local_logs_by_scheme(spark, path, local):
+    """Locality is read from the path's URI alone (none of these
+    paths exists, and no filesystem is contacted)."""
+    from bubbles_spark.streaming import events as sevents
+
+    assert sevents._local_logs(spark, path) is local
+    assert sevents._local_logs(spark, "file:/y", path) is local
+
+
+def test_stream_to_parquet_resumes_default_manager_checkpoint(spark, tmp_path):
+    """A checkpoint that Spark's default manager wrote resumes through
+    ``stream_to_parquet``: the second drain adds only the new input
+    file's rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bubbles_spark.streaming import events as sevents
+
+    src = tmp_path / "src"
+    src.mkdir()
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def write(fname, ids):
+        pq.write_table(
+            pa.table({
+                "event_id": ids,
+                "ts": [_ts(i) for i in ids],
+                "user_id": [10] * len(ids),
+                "event_type": ["a"] * len(ids),
+                "value": [float(i) for i in ids],
+                "props": ["{}"] * len(ids),
+            }),
+            str(src / fname),
+        )
+
+    write("f1.parquet", [1, 2, 3])
+    assert spark.conf.get(sevents._MANAGER_CONF, None) is None
+    q = (
+        sevents.read_event_stream(spark, str(src)).writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+
+    write("f2.parquet", [4, 5])
+    got = sevents.stream_to_parquet(
+        sevents.read_event_stream(spark, str(src)), out_dir, ckpt
+    )
+    assert sorted(r["event_id"] for r in got.collect()) == [1, 2, 3, 4, 5]
 
 
 def test_run_batchlike_drops_memory_sink_view(spark, tmp_path):

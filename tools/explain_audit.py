@@ -18,9 +18,11 @@ Exits non-zero if a required plan property is missing.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -1496,18 +1498,20 @@ CHECKS = [
 ]
 
 
+# temp inputs a builder leaves for its lazy plan, closed by main()
+_CLEANUP = contextlib.ExitStack()
+
+
 def _build_warc_splittable(spark):
     """Live read_warc_splittable plan over a synthetic 2-record plain
     archive with splits smaller than one record — the plan must be a
     fabricated-splits scan feeding one Arrow-batched parse stage (the
     registered warc_pipeline_splittable query materializes its result
     before returning, so its reader plan is audited here instead)."""
-    import os
-    import tempfile
-
     from bubbles_spark import warc as bw
 
-    tmp = tempfile.mkdtemp(prefix="audit_warc_")
+    # the plan is lazy: main() removes the archive after the check ran
+    tmp = _CLEANUP.enter_context(tempfile.TemporaryDirectory(prefix="audit_warc_"))
     body = b"HTTP/1.1 200 OK\r\n\r\nhello"
     rec = (
         "WARC/1.0\r\nWARC-Type: response\r\nWARC-Record-ID: urn:a:1\r\n"
@@ -1601,7 +1605,8 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            plan = plan_of(build(spark))
+            with _CLEANUP:
+                plan = plan_of(build(spark))
         except Exception as exc:  # analysis failure IS an audit failure
             print(f"FAIL {name}: plan does not analyze: {type(exc).__name__}: {exc}")
             failures += 1
