@@ -21,7 +21,7 @@ import os
 from typing import Any, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructType
 
 from bubbles_spark.schema import FieldList
 
@@ -75,8 +75,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``session.get_spark``) at inference and again at execution time.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.schema(table_schema(spark, path)).parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    schema = table_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    if name == "events" and "ts" in schema.names and schema["ts"].dataType == LongType():
         from pyspark.sql import functions as F
 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -39,6 +39,19 @@ def get_spark(
         changed.  Only module lookup is touched, so no result changes;
         the workers must be able to import ``bubbles_spark``, as they
         must for the engine's UDFs.
+      - PySpark's DataFrame origin capture off
+        (``spark.python.sql.dataFrameDebugging.enabled``).  With it on,
+        every Column and ``functions`` call reads the active session,
+        the ``PySparkCurrentOrigin`` class and a SQL conf through py4j,
+        then sets and clears the origin: several round trips per call,
+        about 1,900 per warm pass of the benchmark's batch workload.
+        Results are unchanged; errors keep their class and message and
+        lose only the Python file:line in their "DataFrame context".
+        To get it back for a debugging session, pass
+        ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+        "true"}`` in a fresh process: PySpark caches the first value
+        it reads (``pyspark.errors.utils.is_debugging_enabled``) for
+        the life of the process.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
@@ -59,6 +72,7 @@ def get_spark(
         # parquet TIMESTAMP(NANOS) reads as long (io.load_table)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.daemon.module", "bubbles_spark._pyworker")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

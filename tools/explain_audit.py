@@ -1593,9 +1593,9 @@ STREAM_CHECKS = [
 
 def main() -> int:
     import __spark_entry__ as entrymod
-    from bubbles_spark.session import get_spark
+    from bench import quiet_spark
 
-    spark = get_spark("plan_audit")
+    spark = quiet_spark("plan_audit")
     qs = entrymod.queries()
     only = set(sys.argv[1:])
     failures = 0
