@@ -25,22 +25,17 @@ from pyspark.sql.types import LongType, StructType
 
 from bubbles_spark.schema import FieldList
 
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 # abspath -> (file identity, StructType); see table_schema
 _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+# data file path -> (file identity, footer row count); see footer_rows
+_FOOTER_ROWS: dict[str, tuple[tuple, int]] = {}
+
+
+def _identity(path: str) -> tuple:
+    """The file identity both caches key on: ``(path, st_ino, st_size,
+    st_mtime_ns)``, so any rewrite or append reads again."""
+    st = os.stat(path)
+    return path, st.st_ino, st.st_size, st.st_mtime_ns
 
 
 def table_schema(spark: SparkSession, path: str) -> StructType:
@@ -56,12 +51,40 @@ def table_schema(spark: SparkSession, path: str) -> StructType:
     for root, dirs, names in os.walk(path):
         dirs[:] = sorted(d for d in dirs if d[0] not in "_.")
         files += [os.path.join(root, n) for n in sorted(names) if n[0] not in "_."]
-    stats = [(f, os.stat(f)) for f in files]
-    ident = tuple((f, st.st_ino, st.st_size, st.st_mtime_ns) for f, st in stats)
+    ident = tuple(_identity(f) for f in files)
     hit = _SCHEMAS.get(path)
     if hit is None or hit[0] != ident:
         hit = _SCHEMAS[path] = (ident, spark.read.parquet(path).schema)
     return hit[1]
+
+
+def footer_rows(files, cap: int) -> int | None:
+    """Sum of the parquet footer row counts of ``files`` (URIs, e.g. a
+    relation's ``inputFiles``), read one file at a time and no further
+    once the sum passes ``cap``.  None unless every file read is a
+    local ``file:`` parquet file.  Runs no Spark job; counts are
+    cached per ``_identity``, as ``table_schema`` caches schemas."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    total = 0
+    for i in range(len(files)):
+        uri = urlparse(files[i])
+        if uri.scheme != "file":
+            return None
+        path = unquote(uri.path)
+        try:
+            ident = _identity(path)
+            hit = _FOOTER_ROWS.get(path)
+            if hit is None or hit[0] != ident:
+                hit = _FOOTER_ROWS[path] = (ident, pq.read_metadata(path).num_rows)
+        except (OSError, ValueError):  # gone, or not parquet (ArrowInvalid)
+            return None
+        total += hit[1]
+        if total > cap:
+            break
+    return total
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -82,12 +105,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: Iterable[str] = TPCH_TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 class DataStore:

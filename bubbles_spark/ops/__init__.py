@@ -4,93 +4,50 @@ One implementation per operator (the reference ships one per
 *representation* — rows/sql/mongo — and dispatches at runtime;
 Catalyst is our single representation, so dispatch disappears.
 SURVEY.md §2/§3.2).
+
+Names load on first access (PEP 562), as in ``bubbles_spark``: a
+worker that unpickles a fold naming ``core`` imports ``core`` and
+what it imports, not every operator module.
 """
 
-from bubbles_spark.ops.core import (
-    added_keys,
-    added_rows,
-    aggregate,
-    append,
-    changed_rows,
-    derive,
-    distinct,
-    duplicate_stats,
-    duplicates,
-    field_filter,
-    filter_by_predicate,
-    filter_by_range,
-    filter_by_set,
-    filter_by_value,
-    filter_not_empty,
-    fuzzy_join,
-    join_details,
-    range_join,
-    rename_fields,
-    sample,
-    scd2_merge,
-    sort,
-    top_k,
-)
-from bubbles_spark.ops.reshape import histogram, unpivot, zscore_normalize
-from bubbles_spark.ops.text import (
-    empty_to_missing,
-    split_date,
-    string_strip,
-    text_substitute,
-    threshold,
-    transliterate,
-)
-from bubbles_spark.ops.audit import basic_audit, infer_types
-from bubbles_spark.ops import activity, affinity, dedup, drift, events, graph, insights, privacy, sketch, spatial, stattests, textan, textprep, vector, multimodal
+import importlib
 
-__all__ = [
-    "activity",
-    "added_keys",
-    "added_rows",
-    "affinity",
-    "aggregate",
-    "append",
-    "basic_audit",
-    "changed_rows",
-    "dedup",
-    "derive",
-    "distinct",
-    "duplicate_stats",
-    "drift",
-    "duplicates",
-    "empty_to_missing",
-    "events",
-    "field_filter",
-    "filter_by_predicate",
-    "filter_by_range",
-    "filter_by_set",
-    "filter_by_value",
-    "filter_not_empty",
-    "histogram",
-    "infer_types",
-    "insights",
-    "fuzzy_join",
-    "graph",
-    "join_details",
-    "multimodal",
-    "privacy",
-    "range_join",
-    "rename_fields",
-    "sample",
-    "scd2_merge",
-    "sketch",
-    "stattests",
-    "sort",
-    "spatial",
-    "unpivot",
-    "zscore_normalize",
-    "split_date",
-    "string_strip",
-    "text_substitute",
-    "textan",
-    "textprep",
-    "threshold",
-    "top_k",
-    "transliterate",
-    "vector",
-]
+_CORE = (
+    "added_keys", "added_rows", "aggregate", "append", "changed_rows",
+    "derive", "distinct", "duplicate_stats", "duplicates", "field_filter",
+    "filter_by_predicate", "filter_by_range", "filter_by_set",
+    "filter_by_value", "filter_not_empty", "fuzzy_join", "join_details",
+    "range_join", "rename_fields", "sample", "scd2_merge", "sort", "top_k",
+)
+_MODULES = (
+    "activity", "affinity", "dedup", "drift", "events", "graph", "insights",
+    "multimodal", "privacy", "sketch", "spatial", "stattests", "textan",
+    "textprep", "vector",
+)
+
+# public name -> module that defines it (None: the name is a submodule)
+_LAZY = {
+    **dict.fromkeys(_CORE, "core"),
+    **dict.fromkeys(("histogram", "unpivot", "zscore_normalize"), "reshape"),
+    **dict.fromkeys(
+        ("empty_to_missing", "split_date", "string_strip", "text_substitute",
+         "threshold", "transliterate"),
+        "text",
+    ),
+    **dict.fromkeys(("basic_audit", "infer_types"), "audit"),
+    **dict.fromkeys(_MODULES),
+}
+
+__all__ = sorted(_LAZY)
+
+
+def __getattr__(name: str):
+    if name not in _LAZY:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    module = _LAZY[name]
+    value = (
+        importlib.import_module(f"{__name__}.{name}") if module is None
+        else getattr(importlib.import_module(f"{__name__}.{module}"), name)
+    )
+    globals()[name] = value
+    return value

@@ -756,11 +756,46 @@ def temporal_split(
 _SMALL_RANK_ROWS = 2_000_000
 
 
-def _small_enough(df: DataFrame) -> bool:
-    """Early-terminating smallness probe for RAW inputs: counts
-    through a LIMIT, so a corpus-sized scan stops at the threshold
-    instead of materializing or counting everything."""
-    return df.limit(_SMALL_RANK_ROWS + 1).count() <= _SMALL_RANK_ROWS
+# plan operators that never raise their input's row count (``fits``)
+_ROW_KEEPING = frozenset({
+    "Project", "Filter", "Aggregate", "Sort", "GlobalLimit", "LocalLimit",
+    "Window", "Distinct", "Deduplicate", "SubqueryAlias",
+})
+
+
+def fits(df: DataFrame, *, max_rows: int, probe: Callable[[], bool] | None = None) -> bool:
+    """The one size decision between a one-task fold and a distributed
+    plan: True when ``df`` has at most ``max_rows`` rows.
+
+    Proved with no Spark job when ``df``'s analyzed plan (the one it
+    was built with, so a persisted frame still shows its source; no
+    optimizer run) is one parquet relation under ``_ROW_KEEPING``
+    operators: its footer row counts (``io.footer_rows``) bound the
+    rows.  Otherwise ``probe()`` decides; by default one count through
+    a LIMIT, which stops at ``max_rows + 1`` rows (2-3 jobs under
+    AQE).  Callers read their caps at call time."""
+    import re
+
+    from bubbles_spark import io
+
+    plan = df._jdf.queryExecution().analyzed()
+    # (verbose, addSuffix, maxFields, printOperatorId, printOutputColumns):
+    # field lists in full, as a cut one also logs a warning
+    tree = plan.treeString(False, False, 2**31 - 1, False, False).splitlines()
+    nodes = [re.match(r"[ :+-]*(\w*)", line).group(1) for line in tree]
+    if (
+        nodes.count("Relation") == 1
+        and set(nodes) - {"Relation"} <= _ROW_KEEPING
+        and tree[nodes.index("Relation")].endswith(" parquet")
+    ):
+        leaf = plan.collectLeaves().head()
+        bound = io.footer_rows(leaf.relation().inputFiles(), max_rows)
+        # at least 1: a global aggregate emits one row from none
+        if bound is not None and max(bound, 1) <= max_rows:
+            return True
+    if probe is None:
+        return df.limit(max_rows + 1).count() <= max_rows
+    return probe()
 
 
 def _one_task_fold(df: DataFrame, schema, fold) -> DataFrame:
@@ -950,11 +985,11 @@ def _prefix_scan(
     ``tot_<c>`` — or, with no ``sums``, the row number ``__rn``.
 
     The one size decision: ``small_hint`` when given, else ``n_hint``
-    against ``_SMALL_RANK_ROWS``, else the early-terminating LIMIT
-    probe.  A small input scans in ONE ordered window per key — a
-    single task sorts a few tens of MB, no pin / bucketing / carry
-    jobs.  Callers that already counted pass ``n_hint`` to skip even
-    the probe job.
+    against ``_SMALL_RANK_ROWS``, else ``fits`` (no job when parquet
+    footers bound the input).  A small input scans in ONE ordered
+    window per key — a single task sorts a few tens of MB, no pin /
+    bucketing / carry jobs.  Callers that already counted pass
+    ``n_hint`` to skip even the probe job.
 
     A large input runs the two-phase scan: ``_scan_buckets`` cuts the
     order into value buckets, the scan runs within (bucket, key) in
@@ -972,7 +1007,7 @@ def _prefix_scan(
     if small_hint is None:
         small_hint = (
             n_hint <= _SMALL_RANK_ROWS if n_hint is not None
-            else _small_enough(df)
+            else fits(df, max_rows=_SMALL_RANK_ROWS)
         )
     if small_hint:
         key = [F.col(g) for g in groups] or [F.lit(0)]

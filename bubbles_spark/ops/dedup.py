@@ -436,16 +436,15 @@ def connected_components(
         # candidate-pair-sized (≪ corpus — near-dup hits, not rows),
         # and below a few million edges the iterative machinery's
         # ~16 materialization cuts cost 10-30× more than solving the
-        # whole thing in ONE task.  The count is metadata-only (edges
-        # was just cut to parquet — parquet count reads footers).
+        # whole thing in ONE task.  The size decision runs no job:
+        # edges was just cut to parquet, whose footers count its rows.
         # Union-find with per-component min relabeling produces
         # EXACTLY the big path's output (component = min node id —
         # partitioning- and order-independent), so results are
         # bit-identical; the iterative path stays the contract for
         # graphs that outgrow one task.  The edge cap is the graph
         # module's linear-work cap, read at call time.
-        n_edges = edges.count()
-        if n_edges <= graph._SMALL_GRAPH_MAX_EDGES:
+        if core.fits(edges, max_rows=graph._SMALL_GRAPH_MAX_EDGES):
 
             def _union_find(pdf):
                 import pandas as pd
@@ -1117,7 +1116,10 @@ def embedding_dup_pairs(
     ceil(log2(n)) (clamped [8, 24]) for ~O(1) expected bucket
     occupancy — candidates then grow ~n·tables·(bits+1) and the
     multi-table OR keeps recall high.  The default stays fixed at 12
-    for plan determinism; pass None on corpora of unknown size.
+    for plan determinism; pass None on corpora of unknown size.  The
+    auto-size stays an eager ``count()``: the exact n picks the bit
+    count and so the buckets and the result, where ``core.fits``
+    proves only an upper bound.
     """
     import math as _math
 
@@ -1246,7 +1248,9 @@ def semantic_dup_pairs(
     candidate join, which shuffles (id, cluster) pairs only.
 
     Scale shape at 100 TB: ``n_clusters=None`` auto-sizes to
-    ceil(n / 256) clamped [16, 65536] — BOUNDED expected cluster
+    ceil(n / 256) clamped [16, 65536] (one eager ``count()``: the
+    exact n picks the clusters and so the result, which an upper row
+    bound cannot) — BOUNDED expected cluster
     size, so per-cluster all-pairs work totals ~n·128, LINEAR in
     corpus size (sqrt(n) clusters — the IVF sizing — would give
     sqrt(n)-sized clusters and n^1.5 pair work; SemDeDup at paper

@@ -49,12 +49,14 @@ __all__ = [
 # while every score these ops emit is either an exact integer or a
 # replayable fixed IEEE sequence — so the local solve is bit-identical
 # and pinned against the distributed path in tests.  Every local solve
-# is a ``fold(pdf)`` run by ``core._one_task_fold``.  The thresholds
-# bound one task's MEMORY/WORK (module constants, not tuning knobs):
-# the linear-work ops (pagerank, hits and dedup.connected_components'
-# union-find) share one edge cap; wedge-enumerating ops (triangles /
-# link scores) do O(m^1.5) local work, so their cap keeps that under
-# ~1e8 set operations.
+# is a ``fold(pdf)`` run by ``core._one_task_fold``, picked by
+# ``core.fits`` (no job where parquet footers bound the edges, else a
+# LIMIT count that also materializes the persisted edges).  The
+# thresholds bound one task's MEMORY/WORK (module constants, not
+# tuning knobs): the linear-work ops (pagerank, hits and
+# dedup.connected_components' union-find) share one edge cap;
+# wedge-enumerating ops (triangles / link scores) do O(m^1.5) local
+# work, so their cap keeps that under ~1e8 set operations.
 _SMALL_GRAPH_MAX_EDGES = 2_000_000
 _WEDGE_FAST_PATH_MAX_EDGES = 100_000
 
@@ -152,7 +154,7 @@ def triangle_count(
     # small-graph fast path: same degree orientation, same wedge
     # enumeration, run in one task — counts are exact ints either way
     # (paths pinned against each other in test_affinity_graph)
-    if und.count() <= _WEDGE_FAST_PATH_MAX_EDGES:
+    if core.fits(und, max_rows=_WEDGE_FAST_PATH_MAX_EDGES):
 
         def _tri_local(pdf):
             import pandas as pd
@@ -301,7 +303,7 @@ def pagerank(
     # ranks are bit-identical (pinned in test_affinity_graph).  A
     # weighted replay would quantize once per EDGE per iteration, not
     # once per source, and measured slower than the distributed plan.
-    if weight_col is None and 0 < e.count() <= _SMALL_GRAPH_MAX_EDGES:
+    if weight_col is None and core.fits(e, max_rows=_SMALL_GRAPH_MAX_EDGES):
         _iters, _damp = int(iters), float(damping)
 
         def _pr_local(pdf):
@@ -450,7 +452,7 @@ def hits_scores(
     # small-graph fast path: the scores are exact integer path counts
     # — Python's unbounded ints replay the DECIMAL(38,0) sums exactly
     # in one task (paths pinned against each other in tests)
-    if e.count() <= _SMALL_GRAPH_MAX_EDGES:
+    if core.fits(e, max_rows=_SMALL_GRAPH_MAX_EDGES):
         _iters = int(iters)
 
         def _hits_local(pdf):
@@ -572,7 +574,7 @@ def link_scores(
     # exact ints — one task instead of the wedge join's 6+ exchanges
     # (paths pinned against each other in tests)
     und_c = und.persist()
-    if und_c.count() <= _WEDGE_FAST_PATH_MAX_EDGES:
+    if core.fits(und_c, max_rows=_WEDGE_FAST_PATH_MAX_EDGES):
         _minc = int(min_common)
         _maxhub = None if max_hub_degree is None else int(max_hub_degree)
 

@@ -461,26 +461,43 @@ _CELL_FOLD_MAX_GRID = 4_000_000
 _SPEARMAN_FOLD_MAX_ROWS = 1_000_000
 
 
-def _cells_fit(
+def _sized_cells(
+    src: DataFrame,
     cells: DataFrame,
     count_col: str,
     *,
     max_rows: int | None = None,
     max_grid: int | None = None,
-) -> bool:
-    """The rank tests' one size decision: True when the pinned count
-    table ``cells`` fits the single-task fold — at most
-    ``_CELL_FOLD_MAX_CELLS`` cells and ``max_rows`` input rows (the
-    sum of ``count_col``; default ``_CELL_FOLD_MAX_ROWS``), and with
-    ``max_grid`` set, a (distinct ``__grp``) × (distinct ``__v``)
-    grid of at most that size.  An empty table takes the distributed
-    path.
+) -> tuple[DataFrame, bool]:
+    """The rank tests' one size decision, ``(table, fold)``: whether
+    the lazy count table ``cells`` of the input ``src`` fits the
+    single-task fold, and the table both branches then read.
 
-    This 1-row aggregate is the one eager job per rank-test call: it
-    picks the path and materializes the lazy pin in the same job, so
-    either branch then reads the pinned cells."""
-    if max_rows is None:
-        max_rows = _CELL_FOLD_MAX_ROWS
+    Cells and summed counts never exceed input rows, so where
+    ``core.fits`` proves from parquet footers, with no Spark job, that
+    ``src`` is within both caps, the fold reads ``cells`` unpinned
+    inside the sink job.  Otherwise, and always under ``max_grid``
+    (no row count bounds the k×V grid), the cells are pinned and
+    ``_cells_fit`` probes them."""
+    max_rows = _CELL_FOLD_MAX_ROWS if max_rows is None else max_rows
+    # the footer bound alone: the fallback below pins before it probes
+    if max_grid is None and core.fits(
+        src, max_rows=min(max_rows, _CELL_FOLD_MAX_CELLS), probe=lambda: False
+    ):
+        return cells, True
+    cells = cells.localCheckpoint(eager=False)
+    return cells, _cells_fit(cells, count_col, max_rows, max_grid)
+
+
+def _cells_fit(cells: DataFrame, count_col: str, max_rows: int, max_grid: int | None) -> bool:
+    """The rank tests' size probe: True when the pinned count table
+    ``cells`` fits the single-task fold — at most
+    ``_CELL_FOLD_MAX_CELLS`` cells and ``max_rows`` input rows (the
+    sum of ``count_col``), and with ``max_grid`` set, a (distinct
+    ``__grp``) × (distinct ``__v``) grid of at most that size.  An
+    empty table takes the distributed path.  One collected 1-row
+    aggregate, 3 Spark jobs under AQE: it also materializes the pin,
+    so either branch then reads the pinned cells."""
     aggs = [F.count(F.lit(1)).alias("__cells"), F.sum(count_col).alias("__rows")]
     if max_grid is not None:
         aggs += [
@@ -496,6 +513,18 @@ def _cells_fit(
     return max_grid is None or int(sz["__k"]) * int(sz["__nv"]) <= max_grid
 
 
+def _fold_row(folded: DataFrame, zero: Sequence[str] = ()) -> DataFrame:
+    """A one-row cell fold as the global aggregate the distributed
+    path ends in: the fold's row, or, when the input filters to no
+    cells (the fold then emits nothing), the distributed path's one
+    row — NULL but for its row-count columns ``zero``, which read 0.
+    On the fold's single partition this adds no exchange."""
+    return folded.agg(*[
+        (F.coalesce(F.max(c), F.lit(0)) if c in zero else F.max(c)).alias(c)
+        for c in folded.columns
+    ])
+
+
 def _exact_int_sum(r) -> int:
     """Exact sum of an array of integral doubles (the decimal(38,0)
     folds): one int64 vector sum when provably in range, unbounded
@@ -508,28 +537,27 @@ def _exact_int_sum(r) -> int:
 
 
 def _group_value_cells(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
-    """The lazily pinned per-(group, value) count table (__grp, __v,
-    __cg) of the non-NULL pairs: ONE corpus aggregate that the size
-    probe, the fold and every distributed consumer read (the pooled
-    counts derive from it by exact integer sums)."""
+    """The lazy per-(group, value) count table (__grp, __v, __cg) of
+    the non-NULL pairs: ONE corpus aggregate that the fold or every
+    distributed consumer reads (the pooled counts derive from it by
+    exact integer sums); multi-consumer callers pin it."""
     base = df.filter(
         F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
     ).select(F.col(group_col).alias("__grp"), F.col(value_col).alias("__v"))
     return (
         base.groupBy("__grp", "__v")
         .agg(F.count(F.lit(1)).alias("__cg"))
-        .localCheckpoint(eager=False)
     )
 
 
 def _two_arm_cells(
     df: DataFrame, group_col: str, value_col: str, group_a, group_b
 ) -> DataFrame:
-    """The lazily pinned two-arm value-count table (__g = 0, __v, __c
-    pooled count, __ca arm-a count) of the non-NULL values of the two
-    named arms: ONE corpus aggregate, and the cumulative machinery
-    runs on the reduced table — counts are identical, so every
-    downstream operand is bit-exact."""
+    """The lazy two-arm value-count table (__g = 0, __v, __c pooled
+    count, __ca arm-a count) of the non-NULL values of the two named
+    arms: ONE corpus aggregate, and the cumulative machinery runs on
+    the reduced table — counts are identical, so every downstream
+    operand is bit-exact.  Multi-consumer callers pin it."""
     both = df.filter(
         F.col(group_col).isin([group_a, group_b])
         & F.col(value_col).isNotNull()
@@ -544,7 +572,6 @@ def _two_arm_cells(
             F.count(F.lit(1)).alias("__c"),
             F.sum("__isa").alias("__ca"),
         )
-        .localCheckpoint(eager=False)
     )
 
 
@@ -752,9 +779,9 @@ def mann_whitney_u(
     P-values deliberately not emitted (module docstring).
 
     Output (one row): n_a, n_b, u_a, u_b, rank_sum_a, mean_u, z."""
-    cva = _two_arm_cells(df, group_col, value_col, group_a, group_b)
-    if _cells_fit(cva, "__c"):
-        agg = _cva_local_stats(cva)
+    cva, fold = _sized_cells(df, _two_arm_cells(df, group_col, value_col, group_a, group_b), "__c")
+    if fold:
+        agg = _fold_row(_cva_local_stats(cva))
     else:
         agg = _two_arm_rank_sums(cva)
     n1 = F.col("n_a").cast("double")
@@ -887,9 +914,9 @@ def kruskal_wallis(
     yield NULL.
 
     Output (one row): k, n, df, h_stat, tie_divisor, h_tied."""
-    cgv = _group_value_cells(df, group_col, value_col)
-    if _cells_fit(cgv, "__cg"):
-        agg = _kw_local_stats(cgv)
+    cgv, fold = _sized_cells(df, _group_value_cells(df, group_col, value_col), "__cg")
+    if fold:
+        agg = _fold_row(_kw_local_stats(cgv), zero=("k",))
     else:
         cum, per_group = _group_rank_sums(cgv)
         two_rg = F.col("__2rg").cast("double")
@@ -1095,19 +1122,15 @@ def paired_t_test(
 
 def _spearman_cells(base: DataFrame) -> DataFrame:
     """The shared reduction both spearman paths start from: one
-    map-side-combined count per (group, x, y) triple, lazily pinned
-    (one corpus aggregation for everything downstream — the fast
-    fold, or the distributed rank machinery which now joins
+    map-side-combined count per (group, x, y) triple (one corpus
+    aggregation for everything downstream — the fast fold, or, pinned
+    by ``_sized_cells``, the distributed rank machinery, which joins
     cells-sized tables instead of raw rows)."""
-    return (
-        base.groupBy("__g", "__x", "__y")
-        .agg(F.count(F.lit(1)).alias("__cc"))
-        .localCheckpoint(eager=False)
-    )
+    return base.groupBy("__g", "__x", "__y").agg(F.count(F.lit(1)).alias("__cc"))
 
 
 def _spearman_local_moments(cells: DataFrame) -> DataFrame:
-    """Single-task Spearman sufficient statistics over the pinned
+    """Single-task Spearman sufficient statistics over the
     (group, x, y, count) cell table: one row per group with n and the
     five exact sums (Σ2Rx, Σ2Ry, Σ2Rx·2Ry, Σ(2Rx)², Σ(2Ry)² — all
     DECIMAL(38,0)) the rho tail consumes.  Doubled average ranks per
@@ -1198,12 +1221,14 @@ def _spearman_local_moments(cells: DataFrame) -> DataFrame:
 
 def _spearman_moments(base: DataFrame) -> DataFrame:
     """Per-group Spearman moments table (__g, n, __sx, __sy, __sxy,
-    __sxx, __syy) — dispatched by measured cell/row size (the r13
-    cell-fold discipline): small inputs fold in one task, larger ones
-    run the distributed rank machinery over the same pinned cells."""
+    __sxx, __syy) — dispatched by ``_sized_cells`` (the r13 cell-fold
+    discipline): small inputs fold in one task, larger ones run the
+    distributed rank machinery over the same cells, pinned."""
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    cells = _spearman_cells(base)
-    if _cells_fit(cells, "__cc", max_rows=_SPEARMAN_FOLD_MAX_ROWS):
+    cells, fold = _sized_cells(
+        base, _spearman_cells(base), "__cc", max_rows=_SPEARMAN_FOLD_MAX_ROWS
+    )
+    if fold:
         return _spearman_local_moments(cells)
     t = _spearman_suffstats(cells)
     return t.groupBy("__g").agg(
@@ -1253,10 +1278,10 @@ def _spearman_suffstats(cells: DataFrame) -> DataFrame:
     r2 = lambda: (  # noqa: E731
         F.lit(2) * F.col("__cum") - F.col("__c") + F.lit(1)
     ).cast("bigint")
-    # ONE early-terminating limit probe on the pinned cells sizes BOTH
+    # ONE size decision on the pinned cells sizes BOTH
     # counts tables: distinct values ≤ cells, so a small cell table
     # proves both small paths and the per-table probes are skipped.
-    hint = True if core._small_enough(cells) else None
+    hint = True if core.fits(cells, max_rows=core._SMALL_RANK_ROWS) else None
     cgx = cells.groupBy("__g", "__x").agg(
         F.sum("__cc").cast("bigint").alias("__c")
     )
@@ -2176,7 +2201,7 @@ def dunn_test(
     Output: group_a, group_b, n_a, n_b, mean_rank_a, mean_rank_b, z
     (one row per unordered pair, group_a < group_b)."""
     cum, per_group = _group_rank_sums(
-        _group_value_cells(df, group_col, value_col)
+        _group_value_cells(df, group_col, value_col).localCheckpoint(eager=False)
     )
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     glob = cum.agg(
@@ -2503,11 +2528,11 @@ def mood_median_test(
     from bubbles_spark.ops.drift import _cum_counts_prebuilt
 
     # the pooled median selection AND the per-group above-median
-    # classification both derive from the pinned cells by exact
-    # integer sums
-    cgv = _group_value_cells(df, group_col, value_col)
-    if _cells_fit(cgv, "__cg"):
-        agg = _mood_local_stats(cgv)
+    # classification both derive from the cells (pinned on the
+    # distributed path) by exact integer sums
+    cgv, fold = _sized_cells(df, _group_value_cells(df, group_col, value_col), "__cg")
+    if fold:
+        agg = _fold_row(_mood_local_stats(cgv))
     else:
         pooled = (
             cgv.groupBy("__v")
@@ -2669,7 +2694,7 @@ def jonckheere_terpstra(
 
     ``J = Σ_{i<j} U_ij`` over ordered group pairs, each ``U_ij`` the
     Mann–Whitney count ``#(x<y) + ½#(x=y)``.  No pair explosion, two
-    code paths dispatched by the MEASURED cell-table size (the r13
+    code paths dispatched by the cell-table size (the r13
     graph fast-path discipline — the threshold bounds one task's
     memory, not a tuning knob):
 
@@ -2706,14 +2731,14 @@ def jonckheere_terpstra(
 
     from bubbles_spark.ops.drift import _cum_counts_prebuilt
 
-    # the pinned count table feeds every downstream consumer (grid
-    # probe / grid join / ng / tstats on the distributed path) —
+    # on the distributed path the pinned count table feeds every
+    # downstream consumer (grid probe / grid join / ng / tstats) —
     # unpinned, each re-ran the full corpus aggregation (~8 scans per
     # run measured)
-    cgv = _group_value_cells(df, group_col, value_col)
+    cgv, fold = _sized_cells(df, _group_value_cells(df, group_col, value_col), "__cg")
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    if _cells_fit(cgv, "__cg"):
-        agg = _jt_local_stats(cgv)
+    if fold:
+        agg = _fold_row(_jt_local_stats(cgv), zero=("k",))
     else:
         groups = cgv.select("__grp").distinct()
         vals = cgv.groupBy("__v").agg(F.sum("__cg").alias("__tv"))
@@ -3197,8 +3222,10 @@ def anderson_darling_k(
 
     # same multi-consumer shape as jonckheere_terpstra; the grid cap
     # bounds the fast path's dense k×V matrix
-    cgv = _group_value_cells(df, group_col, value_col)
-    if _cells_fit(cgv, "__cg", max_grid=_CELL_FOLD_MAX_GRID):
+    cgv, fold = _sized_cells(
+        df, _group_value_cells(df, group_col, value_col), "__cg", max_grid=_CELL_FOLD_MAX_GRID
+    )
+    if fold:
         agg = _ad_local_stats(cgv)
     else:
         groups = cgv.select("__grp").distinct()
@@ -3392,7 +3419,9 @@ def cliffs_delta(
     # read flat-to-slightly-negative (0.53-0.61 -> 0.60-0.71 s), the
     # extra size-fold job buying nothing here, unlike
     # mann_whitney/ansari whose probe+window+join it replaces
-    cva = _two_arm_cells(df, group_col, value_col, group_a, group_b)
+    cva = _two_arm_cells(df, group_col, value_col, group_a, group_b).localCheckpoint(
+        eager=False
+    )
     agg = _two_arm_rank_sums(cva).withColumn(
         "n_b", (F.col("__n") - F.col("n_a")).cast("bigint")
     )
@@ -3440,9 +3469,9 @@ def ansari_bradley(
     Output (one row): n_a, n_b, w_stat, mean_w, z (double)."""
     from bubbles_spark.ops.drift import _cum_counts_prebuilt
 
-    cva = _two_arm_cells(df, group_col, value_col, group_a, group_b)
-    if _cells_fit(cva, "__c"):
-        agg = _ab_local_stats(cva)
+    cva, fold = _sized_cells(df, _two_arm_cells(df, group_col, value_col, group_a, group_b), "__c")
+    if fold:
+        agg = _fold_row(_ab_local_stats(cva))
     else:
         cum = _cum_counts_prebuilt(
             cva.select("__g", "__v", "__c"), "__g", "__v"

@@ -133,7 +133,9 @@ def _train_spherical_kmeans(
     a documented, bounded collect); Lloyd rounds on unit vectors use
     the cosine/argmax assignment.  ``n_centroids=None`` auto-sizes to
     ceil(sqrt(n)) clamped [16, 65536] — the standard IVF sizing.
-    Deterministic for a fixed seed."""
+    Without ``n_total`` the corpus is counted eagerly: the exact n
+    sets the sample fraction and the centroid count, so a row bound
+    (``core.fits``) cannot stand in.  Deterministic for a fixed seed."""
     import math as _math
 
     if n_total is None:
@@ -232,38 +234,6 @@ def _bucketize_udf(bits: int, tables: int, seed: int, dim: int):
         return pd.Series(list(buckets))
 
     return bucketize
-
-
-def _hyperplane_bucket(v: Column, bits: int, seed: int, dim: int) -> Column:
-    """Sign-pattern bucket id: bit i = (v · h_i) >= 0.
-
-    ``dim`` must match the vector length — a mismatch fails loudly at
-    runtime (assert_true) instead of null-padding the dot product and
-    silently collapsing every vector into bucket 0 (the round-1
-    latent bug: dim was hardcoded to 64)."""
-    planes = _hyperplanes(dim, bits, seed)
-    # assert_true returns NULL when the check passes, raises otherwise;
-    # NULL vectors pass the guard (callers filter them on norm anyway)
-    guard = F.assert_true(
-        v.isNull() | (F.size(v) == dim),
-        F.concat(F.lit(f"embedding dim != {dim}: got "), F.size(v).cast("string")),
-    )
-    bucket = F.coalesce(guard.cast("long"), F.lit(0).cast("long"))
-    for i, plane in enumerate(planes):
-        # Σ v[j] * plane[j] with the plane values inlined as literals
-        # (no literal-array construction, one element_at per term)
-        terms = [
-            F.element_at(v, j + 1).cast("double") * float(plane[j])
-            for j in range(dim)
-        ]
-        dot = terms[0]
-        for t in terms[1:]:
-            dot = dot + t
-        bit = F.when(dot >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket + bit
-    return bucket
 
 
 def cosine_topk(

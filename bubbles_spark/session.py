@@ -36,9 +36,10 @@ def get_spark(
         which before CPython 3.12 re-parses ``pyspark.zip``'s whole
         central directory once per zip importer, about 0.2 s of CPU
         per task; the daemon re-reads an archive only when its file
-        changed.  Only module lookup is touched, so no result changes;
-        the workers must be able to import ``bubbles_spark``, as they
-        must for the engine's UDFs.
+        changed.  Only module lookup is touched, so no result changes.
+        The workers find ``bubbles_spark`` through the package's parent
+        directory in ``spark.executorEnv.PYTHONPATH``, so a driver
+        started from any directory still runs Python tasks.
       - PySpark's DataFrame origin capture off
         (``spark.python.sql.dataFrameDebugging.enabled``).  With it on,
         every Column and ``functions`` call reads the active session,
@@ -53,6 +54,7 @@ def get_spark(
         it reads (``pyspark.errors.utils.is_debugging_enabled``) for
         the life of the process.
     """
+    package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
@@ -72,6 +74,7 @@ def get_spark(
         # parquet TIMESTAMP(NANOS) reads as long (io.load_table)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.daemon.module", "bubbles_spark._pyworker")
+        .config("spark.executorEnv.PYTHONPATH", package_parent)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

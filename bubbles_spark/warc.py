@@ -211,16 +211,6 @@ def _open_warc_stream(data: bytes):
     return gzip.GzipFile(fileobj=_io.BytesIO(data))
 
 
-def _decompress_if_gzip(data: bytes) -> bytes:
-    """Decompress (possibly multi-member) gzip; pass through raw.
-    Whole-buffer convenience for tests/tools — the read path streams
-    via ``_open_warc_stream`` instead."""
-    if data[:2] != b"\x1f\x8b":
-        return data
-    with gzip.GzipFile(fileobj=_io.BytesIO(data)) as fh:
-        return fh.read()
-
-
 def read_warc(
     spark: SparkSession,
     path: str,

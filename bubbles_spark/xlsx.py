@@ -20,12 +20,6 @@ REL_NS = {
 RID = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}id"
 
 
-def sheet_names(path: str) -> list[str]:
-    with zipfile.ZipFile(path) as z:
-        wb = ET.fromstring(z.read("xl/workbook.xml"))
-    return [s.get("name") for s in wb.findall(".//m:sheet", NS)]
-
-
 def _sheet_target(z: zipfile.ZipFile, sheet: str | int) -> str:
     wb = ET.fromstring(z.read("xl/workbook.xml"))
     sheets = wb.findall(".//m:sheet", NS)

@@ -1237,3 +1237,103 @@ def test_pushdown_fence_blocks_predicate_and_preserves_rows(spark):
 
     # zero columns: identity
     assert core.pushdown_fence(scored) is scored
+
+
+def _parquet(spark, path, n_rows: int):
+    """One parquet file of ``n_rows`` (k, v) rows, written by pyarrow
+    (so the path is a single file whose footer counts it), read back."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"k": [i % 3 for i in range(n_rows)], "v": [float(i) for i in range(n_rows)]}),
+        str(path),
+    )
+    return spark.read.parquet(str(path))
+
+
+def test_fits_bounds_rows_from_parquet_footers(spark, tmp_path):
+    """A parquet relation under row-keeping operators is bounded by its
+    footer row counts with no probe; joins, explodes, unions and
+    in-memory frames fall back to the probe."""
+    df = _parquet(spark, tmp_path / "t.parquet", 10)
+    probes: list = []
+
+    def probe():
+        probes.append(1)
+        return False
+
+    kept = (
+        df.filter(F.col("v") > 2).select("k", "v").groupBy("k").agg(F.sum("v").alias("s"))
+        .orderBy("k").distinct().persist()
+    )
+    assert core.fits(kept, max_rows=10, probe=probe) and probes == []
+    kept.unpersist()
+    # a bound above the cap proves nothing: the probe decides
+    assert not core.fits(df.filter(F.col("v") > 8), max_rows=5, probe=probe)
+    assert probes == [1]
+    for grown in (
+        df.join(df.select("k"), "k"),
+        df.select(F.explode(F.array("v", "v"))),
+        df.unionByName(df),
+        spark.createDataFrame([(1, 1.0)], "k long, v double"),
+    ):
+        probes.clear()
+        assert not core.fits(grown, max_rows=10**9, probe=probe)
+        assert probes == [1]
+    # the default probe is one LIMIT count
+    assert core.fits(df.join(df.select("k").distinct(), "k"), max_rows=10)
+    assert not core.fits(df.join(df.select("k"), "k"), max_rows=10)
+
+
+def test_fits_follows_the_file_identity(spark, tmp_path, monkeypatch):
+    """Footer counts are cached per file identity: rewriting the same
+    file with more rows than the cap flips the decision."""
+    path = tmp_path / "t.parquet"
+    probes: list = []
+
+    def probe():
+        probes.append(1)
+        return False
+
+    assert core.fits(_parquet(spark, path, 10), max_rows=15, probe=probe)
+    assert core.fits(_parquet(spark, path, 10), max_rows=15, probe=probe)
+    assert probes == []
+    assert not core.fits(_parquet(spark, path, 20), max_rows=15, probe=probe)
+    assert probes == [1]
+
+
+def test_fits_stops_reading_footers_past_the_cap(spark, tmp_path, monkeypatch):
+    """Footers are read one file at a time and no further once the
+    running sum passes the cap."""
+    import pyarrow.parquet as pq
+
+    from bubbles_spark import io
+
+    for i in range(5):
+        _parquet(spark, tmp_path / f"part-{i}.parquet", 10)
+    df = spark.read.parquet(str(tmp_path))
+    reads: list = []
+    real = pq.read_metadata
+
+    def spy(path, *args, **kwargs):
+        reads.append(path)
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_metadata", spy)
+    monkeypatch.setattr(io, "_FOOTER_ROWS", {})
+    assert not core.fits(df, max_rows=15, probe=lambda: False)
+    assert len(reads) == 2
+    reads.clear()
+    assert core.fits(df, max_rows=50, probe=lambda: False)
+    assert len(reads) == 3  # two cached, three more read
+
+
+def test_footer_rows_local_files_only(tmp_path):
+    from bubbles_spark import io
+
+    assert io.footer_rows(["hdfs://nn/t/part-0.parquet"], 10) is None
+    assert io.footer_rows([f"file://{tmp_path}/missing.parquet"], 10) is None
+    (tmp_path / "a.csv").write_text("k,v\n1,2\n")
+    assert io.footer_rows([f"file://{tmp_path}/a.csv"], 10) is None
+    assert io.footer_rows([], 10) == 0

@@ -1659,3 +1659,103 @@ def test_spearman_local_and_distributed_paths_agree(spark):
         lambda: st.spearman_corr(empty, "x", "y"), plan=False
     )
     assert e1 == e2 == [{"n": 0, "rho": None}]
+
+
+def _parquet_input(spark, tmp_path, rows, schema, name="t"):
+    """The rank tests' inputs as parquet read back from ``tmp_path``:
+    a file relation is what gives ``core.fits`` a footer row bound
+    (``createDataFrame`` inputs get none and take the probe)."""
+    path = str(tmp_path / name)
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _build_jobs(spark, build):
+    """``build()`` and the number of Spark jobs it ran (job group +
+    ``statusTracker``)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "rank-test build")
+    try:
+        df = build()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_footer_bound_folds_without_build_jobs(spark, tmp_path):
+    # parquet footers prove the cells fit: the Kruskal and Jonckheere
+    # builds run no Spark job and pin nothing; the fold runs in the
+    # sink job
+    import random
+
+    rng = random.Random(16)
+    rows = [(g, float(rng.randint(0, 30))) for g in ("a", "b", "c") for _ in range(200)]
+    df = _parquet_input(spark, tmp_path, rows, "g string, v double")
+    for op in (stattests.kruskal_wallis, stattests.jonckheere_terpstra):
+        out, jobs = _build_jobs(spark, lambda: op(df, "g", "v"))
+        assert jobs == 0, op.__name__
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan and "ExistingRDD" not in plan, op.__name__
+        assert out.collect()[0]["k"] == 3
+
+
+def test_footer_bound_path_matches_distributed(spark, tmp_path):
+    # every converted rank test: the footer-bound fold equals the
+    # forced distributed path, on the plain input and on one that
+    # filters to nothing (the fold then still emits the distributed
+    # path's one row)
+    import random
+
+    from bubbles_spark.ops import stattests as st
+
+    rng = random.Random(1616)
+    rows = [
+        (g, float(rng.randint(0, 25)), rng.gauss(0.0, 4.0))
+        for g in ("a", "b", "c")
+        for _ in range(250)
+    ]
+    df = _parquet_input(spark, tmp_path, rows, "g string, v double, y double")
+    ops = {
+        "kruskal": lambda d: st.kruskal_wallis(d, "g", "v"),
+        "jonckheere": lambda d: st.jonckheere_terpstra(d, "g", "v"),
+        "mann_whitney": lambda d: st.mann_whitney_u(d, "g", "v", "a", "b"),
+        "mood": lambda d: st.mood_median_test(d, "g", "v"),
+        "ansari": lambda d: st.ansari_bradley(d, "g", "v", "a", "b"),
+        "spearman": lambda d: st.spearman_corr(d, "v", "y"),
+        "spearman_by": lambda d: st.spearman_by(d, "g", "v", "y"),
+    }
+    empty = df.filter(F.col("v") < -1.0)
+    for name, op in ops.items():
+        fast, dist = _fast_and_forced(lambda: op(df))
+        assert fast == dist and fast, name
+        # the grouped spearman emits no row for no group, on both paths
+        fast, dist = _fast_and_forced(lambda: op(empty))
+        assert fast == dist and len(fast) == (0 if name == "spearman_by" else 1), name
+    assert _fast_and_forced(lambda: ops["kruskal"](empty))[0][0]["k"] == 0
+
+
+def test_unbounded_input_runs_one_probe(spark, tmp_path, monkeypatch):
+    # a join input has no footer bound: the pinned cells are probed
+    # exactly once, as before
+    from bubbles_spark.ops import stattests as st
+
+    rows = [(g, float(i % 7)) for g in ("a", "b") for i in range(40)]
+    df = _parquet_input(spark, tmp_path, rows, "g string, v double")
+    arms = spark.createDataFrame([("a",), ("b",)], "g string")
+    probes: list = []
+    real = st._cells_fit
+
+    def spy(*args, **kwargs):
+        probes.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(st, "_cells_fit", spy)
+    out = st.kruskal_wallis(df.join(arms, "g"), "g", "v").collect()
+    assert len(probes) == 1 and out[0]["k"] == 2
+    probes.clear()
+    st.kruskal_wallis(df, "g", "v").collect()
+    assert probes == []

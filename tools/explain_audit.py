@@ -37,6 +37,18 @@ def plan_of(df) -> str:
     )
 
 
+# The rank tests' footer-bound cell fold: the cell counts aggregate
+# (partial, exchange, final) straight off the parquet scan, through
+# filters and projections only, into the one Arrow fold task.
+CELLS_FOLD = (
+    r"MapInPandas \(\d+\)\n\s*\+- Coalesce \(\d+\)\n"
+    r"\s*\+- (?:\* )?HashAggregate \(\d+\)\n\s*\+- Exchange \(\d+\)\n"
+    r"\s*\+- (?:\* )?HashAggregate \(\d+\)\n"
+    r"(?:\s*\+- (?:\* )?(?:Project|Filter) \(\d+\)\n)*"
+    r"\s*\+- (?:\* )?Scan parquet "
+)
+NO_PIN = (r"Scan ExistingRDD", "no pinned cell table — footer row counts pick the fold")
+
 # (query, [(must_regex, why)], [(must_not_regex, why)])
 CHECKS = [
     (
@@ -144,23 +156,26 @@ CHECKS = [
         [(r"(BatchEvalPython|ArrowEvalPython)", "pure codegen, no Python")],
     ),
     (
-        # r13 cell fold: the pinned per-(group,value) counts (one
-        # corpus aggregate, materialized behind the RDD cut) feed ONE
-        # fused Arrow fold task; past the cell caps the distributed
-        # cum machinery returns (dual-path pinned in tests)
+        # cell fold: parquet footer row counts prove the per-(group,
+        # value) counts fit, so one corpus aggregate over the scan
+        # feeds ONE fused Arrow fold task in the sink job, unpinned;
+        # past the cell caps the distributed cum machinery returns
+        # (dual-path pinned in tests)
         "kruskal_wallis_events",
-        [(r"Scan ExistingRDD", "pinned cell counts — corpus aggregated once"),
+        [(CELLS_FOLD, "one cell-count aggregate over the parquet scan feeds the fold"),
          (r"MapInPandas", "one fused Arrow-batched rank fold task")],
         [(r"BatchEvalPython", "no row-at-a-time Python"),
-         (r"CartesianProduct", "no unkeyed product")],
+         (r"CartesianProduct", "no unkeyed product"),
+         NO_PIN],
     ),
     (
         # r13 cell fold (see kruskal_wallis_events)
         "mann_whitney_events",
-        [(r"Scan ExistingRDD", "pinned two-arm value counts — corpus aggregated once"),
+        [(CELLS_FOLD, "one two-arm value-count aggregate over the parquet scan feeds the fold"),
          (r"MapInPandas", "one fused Arrow-batched rank-sum fold task")],
         [(r"BatchEvalPython", "no row-at-a-time Python"),
-         (r"CartesianProduct", "no unkeyed product")],
+         (r"CartesianProduct", "no unkeyed product"),
+         NO_PIN],
     ),
     (
         "bootstrap_ci_events_value",
@@ -1292,15 +1307,16 @@ CHECKS = [
          (r"(BatchEvalPython|ArrowEvalPython|MapInPandas)", "pure codegen, no Python")],
     ),
     (
-        # r13 cell fold (see kruskal_wallis_events): both rank systems
-        # and the five moments fold in ONE task over the pinned
-        # (x, y, count) cells; past the caps the distributed cells
-        # machinery returns (dual-path pinned in tests)
+        # cell fold (see kruskal_wallis_events): both rank systems
+        # and the five moments fold in ONE task over the (x, y, count)
+        # cells; past the caps the distributed cells machinery returns
+        # (dual-path pinned in tests)
         "spearman_lineitem_qty_price",
-        [(r"Scan ExistingRDD", "pinned (x,y) cell counts — corpus aggregated once"),
+        [(CELLS_FOLD, "one (x,y) cell-count aggregate over the parquet scan feeds the fold"),
          (r"MapInPandas", "one fused Arrow-batched rank/moment fold task")],
         [(r"CartesianProduct|BroadcastNestedLoopJoin", "no products"),
-         (r"BatchEvalPython", "no row-at-a-time Python")],
+         (r"BatchEvalPython", "no row-at-a-time Python"),
+         NO_PIN],
     ),
     (
         "fdr_bh_customers",
@@ -1376,23 +1392,25 @@ CHECKS = [
          (r"(BatchEvalPython|ArrowEvalPython|MapInPandas)", "pure codegen, no Python")],
     ),
     (
-        # r13 cell fold (see kruskal_wallis_events)
+        # cell fold (see kruskal_wallis_events)
         "mood_median_events",
-        [(r"Scan ExistingRDD", "pinned cell counts — corpus aggregated once"),
+        [(CELLS_FOLD, "one cell-count aggregate over the parquet scan feeds the fold"),
          (r"MapInPandas", "one fused Arrow-batched median/classification fold task")],
         [(r"SortMergeJoin", "nothing data-sized joins"),
          (r"CartesianProduct", "no unkeyed data-sized product"),
-         (r"BatchEvalPython", "no row-at-a-time Python")],
+         (r"BatchEvalPython", "no row-at-a-time Python"),
+         NO_PIN],
     ),
     (
-        # r13 cell fold: 2J via the weighted-inversion identity over
-        # the pinned cells in ONE task (see kruskal_wallis_events);
-        # past the caps the zero-filled grid machinery returns
+        # cell fold: 2J via the weighted-inversion identity over the
+        # cells in ONE task (see kruskal_wallis_events); past the caps
+        # the zero-filled grid machinery returns
         "jonckheere_orders_priority",
-        [(r"Scan ExistingRDD", "pinned cell counts — corpus aggregated once"),
+        [(CELLS_FOLD, "one cell-count aggregate over the parquet scan feeds the fold"),
          (r"MapInPandas", "one fused Arrow-batched weighted-inversion fold task")],
         [(r"CartesianProduct", "no unkeyed data-sized product"),
-         (r"BatchEvalPython", "no row-at-a-time Python")],
+         (r"BatchEvalPython", "no row-at-a-time Python"),
+         NO_PIN],
     ),
     (
         "krippendorff_events",
@@ -1453,8 +1471,10 @@ CHECKS = [
          (r"(BatchEvalPython|ArrowEvalPython|MapInPandas)", "pure codegen, no Python")],
     ),
     (
-        # r13 cell fold (see kruskal_wallis_events): the dense k×V
-        # grid folds in ONE task under the cell/grid caps
+        # r13 cell fold: the pinned per-(group,value) counts (one
+        # corpus aggregate, materialized behind the RDD cut by the
+        # size probe — no row count bounds the dense k×V grid) fold in
+        # ONE task under the cell/grid caps
         "anderson_darling_events",
         [(r"Scan ExistingRDD", "pinned cell counts — corpus aggregated once"),
          (r"MapInPandas", "one fused Arrow-batched midrank fold task")],
@@ -1476,12 +1496,13 @@ CHECKS = [
          (r"(BatchEvalPython|ArrowEvalPython|MapInPandas)", "pure codegen, no Python")],
     ),
     (
-        # r13 cell fold (see kruskal_wallis_events)
+        # cell fold (see kruskal_wallis_events)
         "ansari_bradley_events",
-        [(r"Scan ExistingRDD", "pinned two-arm value counts — corpus aggregated once"),
+        [(CELLS_FOLD, "one two-arm value-count aggregate over the parquet scan feeds the fold"),
          (r"MapInPandas", "one fused Arrow-batched block-score fold task")],
         [(r"CartesianProduct", "closed-form block sums — no per-rank explode"),
-         (r"BatchEvalPython", "no row-at-a-time Python")],
+         (r"BatchEvalPython", "no row-at-a-time Python"),
+         NO_PIN],
     ),
     (
         "brunner_munzel_events",
